@@ -30,8 +30,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Timing outliers self-adjudicate: queries whose steady passes swing
   * hard are re-measured min-of-K in the same JVM (the BenchN protocol)
-  * and annotated in bench_full as `remeasured_min`; per-query `min`
-  * over the steady passes is recorded for every query.
+  * and annotated in bench_full as `remeasured_min` (a query whose
+  * every re-measure pass fails is left out of that map, never given a
+  * sentinel time); per-query `min` over the steady passes is recorded
+  * for every query.
   *
   * Scaling smoke: the same queries also run against
   * SPARK_GRAFT_SCALING_DIR (default sf0.01) and `scaling` reports the
@@ -71,6 +73,12 @@ object Bench {
     val sMin = smallTimes.min
     sMin > 0 && mMin > 0.3 && mMin / sMin > threshold * dataRatio
   }
+
+  /** The min over the passes that succeeded, `None` when every pass
+    * failed — a failed pass's elapsed time is not a measurement. */
+  private[graft] def minOfSuccessful(passes: Seq[(Double, Boolean)]): Option[Double] =
+    passes.collect { case (t, true) => t }.minOption
+
   private val scalingExclude =
     Set("d2_jaccard_pairs", "d12_containment_pairs", "d3_minhash_lsh", "d5_dup_clusters",
       "d5b_dup_clusters_dist", "n3_cosine_pairs",
@@ -157,15 +165,14 @@ object Bench {
     val outliers = results
       .filter(r => r.ok && r.med > 0.5 && (r.disp > 0.35 || r.max > 2.5 * r.med))
       .sortBy(-_.med).take(8)
-    val remeasured: Map[String, Double] = outliers.map { r =>
+    val remeasured: Map[String, Double] = outliers.flatMap { r =>
       val fn = SparkEntry.queries(r.name)
-      val mins = Seq.fill(AdjudicateN)(once(spark, r.name, fn, sfDir))
-        .collect { case (t, true) => t }
-      val m = if (mins.isEmpty) -1.0 else mins.min
+      val m = minOfSuccessful(Seq.fill(AdjudicateN)(once(spark, r.name, fn, sfDir)))
       System.err.println(
         f"[bench] timing outlier ${r.name}: median ${r.med}%.2f s " +
-          f"(max ${r.max}%.2f, disp ${r.disp}) -> controlled min $m%.2f s")
-      r.name -> m
+          f"(max ${r.max}%.2f, disp ${r.disp}) -> " +
+          m.fold("every pass failed, omitted")(t => f"controlled min $t%.2f s"))
+      m.map(r.name -> _)
     }.toMap
 
     // scaling smoke vs the small SF (skipped when it IS the main SF)

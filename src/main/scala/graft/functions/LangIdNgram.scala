@@ -66,7 +66,7 @@ object LangIdNgram {
     * A sliver — langs × K rows — meant for [[broadcast]], and the
     * PERSISTABLE classifier artifact: write it as a parquet table
     * and score any later corpus (or stream) with [[predictWith]],
-    * the Sb5Counts frozen-artifact discipline. */
+    * the [[TextFns.SbCounts]] frozen-artifact discipline. */
   def profiles(docs: DataFrame, langCol: String, textCol: String,
                train: Column, n: Int = N, k: Int = K): DataFrame = {
     import org.apache.spark.sql.expressions.Window

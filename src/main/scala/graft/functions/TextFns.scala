@@ -640,301 +640,66 @@ object TextFns {
     * division. Docs with <2 tokens have no bigrams and drop out
     * identically in both engines.
     *
-    * Shape for scale: ONE tokenize pass emits the cached (id, cur,
-    * next) stream (`next` null at doc end); unigram and bigram counts
-    * are two map-combined aggs over that cache; V is a 1-row
-    * broadcast; scoring joins the bigram-keyed counters back to the
-    * stream. Text reaches the cache once and never an exchange.
+    * Shape for scale: ONE materialized token base feeds the unigram
+    * and bigram censuses ([[gramCensusesKeyed]], one pass) and the
+    * scored bigram stream ([[gramStream]]); V is a 1-row broadcast;
+    * scoring joins the per-type log-probs back. Text reaches the cache
+    * once and never an exchange.
     */
-  def bigramLmScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                    textCol: String): org.apache.spark.sql.DataFrame = {
-    val w = tokens(col(textCol))
-    val n = size(w)
-    // (cur, next) per position; next = null for the last token
-    val zipped = arrays_zip(w.as("cur"),
-      concat(slice(w, lit(2), greatest(n - 1, lit(0))),
-        array(lit(null).cast("string"))).as("next"))
-    val tok = graft.Materialize.reuse(
-      docs.select(col(idCol), explode(zipped).as("__z"))
-        .select(col(idCol), col("__z.cur").as("__cur"),
-          col("__z.next").as("__next")))
-    val uni = graft.Materialize.reuse(
-      tok.groupBy("__cur").agg(count(lit(1)).as("__c1")))
-    val vocab = uni.agg(count(lit(1)).as("__v"))
-    val bi = tok.filter(col("__next").isNotNull)
-      .groupBy(col("__cur").as("__prev"), col("__next").as("__w2"))
-      .agg(count(lit(1)).as("__c2"))
-    val lp = bi
-      .join(uni.withColumnRenamed("__cur", "__prev"), Seq("__prev"))
+  def bigramLmScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val base = graft.Materialize.reuse(
+      docs.select(col(idCol), tokens(col(textCol)).as("__w")))
+    val g = gramCensusesKeyed(base.select("__w"), Seq(1, 2), Nil)
+    val vocab = g(1).agg(count(lit(1)).as("__v"))
+    val lp = g(2)
+      .join(g(1), Seq("__w1"))
       .crossJoin(broadcast(vocab))
-      .select(col("__prev"), col("__w2"),
+      .select(col("__w1"), col("__w2"),
         round(lit(1e6) * log((col("__c2") + lit(1)) / (col("__c1") + col("__v"))))
           .cast("long").as("__lp"))
-    tok.filter(col("__next").isNotNull)
-      .join(lp, col("__cur") === col("__prev") && col("__next") === col("__w2"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"), sum("__lp").as("__s"))
-      .select(col(idCol), col("n_bigrams"),
-        (col("__s").cast("double") / (lit(1e6) * col("n_bigrams")))
-          .as("lm2_score"))
+    meanScore(gramSums(gramStream(base, idCol, Nil, 2).join(lp, Seq("__w1", "__w2")),
+      idCol, Nil, 2), idCol, 2, "lm2_score")
   }
 
-  /** Interpolated Kneser-Ney bigram LM score (t25) — the smoothing
-    * the CCNet filter actually ships (Wenzek et al. 2020 §3.3 use a
-    * KenLM 5-gram with modified KN; this is the bigram form under the
-    * same absolute-discount + continuation-probability structure,
-    * where [[bigramLmScore]] is the add-one baseline):
-    *
-    *   P(w|v) = (c(vw) − D)/c(v·) + D·N₁₊(v·)/c(v·) · N₁₊(·w)/N₁₊(··)
-    *
-    * with D = 3/4, c(v·) the context count (Σ_w c(vw)), N₁₊(v·) the
-    * distinct continuations of v, N₁₊(·w) the distinct left contexts
-    * of w (the continuation count — "how many contexts has w
-    * completed", the quantity that demotes a frequent-but-rigid word
-    * like 'Francisco'), N₁₊(··) the distinct bigram types. Scoring
-    * the training corpus itself means c(vw) ≥ 1, so the discounted
-    * term is always positive.
-    *
-    * Determinism: the whole probability folds to ONE exact rational —
-    * `((4·c₂−3)·N + 3·n1f·n1b) / (4·c₁·N)` — so the only float ops
-    * are one division of exact-integer doubles and the same
-    * micro-quantized ln as t18 (round(10⁶·ln p), identical libm-class
-    * behavior both engines at 6-decimal quantization; t18's
-    * gate-proven pattern). Integer intermediates stay in 64 bits
-    * through ~10⁹ bigram types; past that ANSI fails loudly (the t23
-    * discipline). Shape: identical to [[bigramLmScore]] — one
-    * materialized (cur, next) stream, three map-combined aggregates
-    * over the BIGRAM TYPE table (a vocab²-bounded sliver), one 1-row
-    * broadcast, scoring joins the per-type log-probs back. Text never
-    * exchanges.
-    */
-  def knBigramLmScore(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                      textCol: String): org.apache.spark.sql.DataFrame =
-    knBigramSums(docs, idCol, textCol, Nil)
-      .select(col(idCol), col("n_bigrams"),
-        (col("__s").cast("double") / (lit(1e6) * col("n_bigrams")))
-          .as("kn2_score"))
+  /** An LM order arrives from the caller; below 2 there is no context. */
+  private def requireOrder(order: Int): Unit =
+    require(order >= 2, s"n-gram order must be at least 2, got $order")
 
-  /** Keyed core of the interpolated-KN bigram score — ONE
-    * implementation of the rational and its aggregates, per `keyCols`
-    * group (empty = one global LM). [[knBigramLmScore]] (t25) and
-    * [[perplexityBuckets]] (cp6) both wrap this, so the discount/
-    * continuation arithmetic cannot drift between the global and
-    * per-language forms (review r13). Returns
-    * `(idCol, keyCols..., n_bigrams, __s)` with `__s` the exact
-    * micro log-prob sum.
-    */
-  private[graft] def knBigramSums(docs: DataFrame, idCol: String,
-                                  textCol: String,
-                                  keyCols: Seq[String]): DataFrame = {
-    val w = tokens(col(textCol))
-    val n = size(w)
-    val zipped = arrays_zip(w.as("cur"),
-      concat(slice(w, lit(2), greatest(n - 1, lit(0))),
-        array(lit(null).cast("string"))).as("next"))
-    val kc = keyCols.map(col)
-    val tok = graft.Materialize.reuse(
-      docs.select(col(idCol) +: kc :+ explode(zipped).as("__z"): _*)
-        .select(col(idCol) +: kc :+ col("__z.cur").as("__cur")
-          :+ col("__z.next").as("__next"): _*))
-    val bi = graft.Materialize.reuse(
-      tok.filter(col("__next").isNotNull)
-        .groupBy(kc :+ col("__cur").as("__prev")
-          :+ col("__next").as("__w2"): _*)
-        .agg(count(lit(1)).as("__c2")))
-    val ctx = bi.groupBy(kc :+ col("__prev"): _*)
-      .agg(sum("__c2").as("__c1"), count(lit(1)).as("__n1f"))
-    val back = bi.groupBy(kc :+ col("__w2"): _*)
-      .agg(count(lit(1)).as("__n1b"))
-    val nb = if (keyCols.isEmpty) bi.agg(count(lit(1)).as("__nb"))
-      else bi.groupBy(kc: _*).agg(count(lit(1)).as("__nb"))
-    val num = ((lit(4L) * col("__c2") - lit(3L)) * col("__nb") +
-      lit(3L) * col("__n1f") * col("__n1b")).cast("double")
-    val den = (lit(4L) * col("__c1") * col("__nb")).cast("double")
-    val lpBase = bi
-      .join(ctx, keyCols :+ "__prev")
-      .join(back, keyCols :+ "__w2")
-    val lpN = if (keyCols.isEmpty) lpBase.crossJoin(broadcast(nb))
-      else lpBase.join(broadcast(nb), keyCols)
-    val lp = lpN.select(kc :+ col("__prev") :+ col("__w2")
-      :+ round(lit(1e6) * log(num / den)).cast("long").as("__lp"): _*)
-    val lpR = keyCols.foldLeft(lp)(
-      (d, k) => d.withColumnRenamed(k, s"__lk_$k"))
-    val cond = (col("__cur") === col("__prev") &&
-      col("__next") === col("__w2")) +: keyCols.map(
-      k => col(k) === col(s"__lk_$k"))
-    tok.filter(col("__next").isNotNull)
-      .join(lpR, cond.reduce(_ && _))
-      .groupBy(col(idCol) +: kc: _*)
-      .agg(count(lit(1)).as("n_bigrams"), sum("__lp").as("__s"))
+  /** The per-document gram-count column of an order-`n` LM score. */
+  private def gramsCol(n: Int): String = n match {
+    case 2 => "n_bigrams"
+    case 3 => "n_trigrams"
+    case _ => s"n_${n}grams"
   }
 
-  /** Stupid-backoff trigram LM score (t28) — the scoring scheme
-    * Google actually ran at web scale (Brants et al. 2007 §3:
-    * count-based backoff with a FIXED multiplier α = 0.4 and no
-    * discounting — "stupid" because it skips the normalization that
-    * makes distributed training of KN painful, and at large data it
-    * matches or beats it). The LM trains on the `trainFilter` subset
-    * (the reference-corpus side, t20's discipline) and scores EVERY
-    * document — unlike t18/t25's self-scoring, unseen n-grams occur
-    * and every backoff branch is live:
-    *
-    *   S(w₃|w₁w₂) = c₁₂₃/c₁₂           if c₁₂₃ > 0
-    *              = 0.4 · c₂₃/c₂       else if c₂₃ > 0
-    *              = 0.16 · c₃/N        else if c₃ > 0
-    *              = 0.16 / (N+1)       else  (OOV floor; Brants
-    *                leaves OOV to the application — this floor is the
-    *                smallest deterministic choice below every seen
-    *                unigram's backoff mass)
-    *
-    * with c₂ the UNIGRAM count of w₂ (so c₂ ≥ c₂₃ whenever c₂₃ > 0,
-    * and c₁₂ ≥ c₁₂₃ — each branch's denominator is positive by
-    * construction). Every S is an exact rational with α folded in as
-    * 2/5 and 4/25 (integer products, ONE double division per branch);
-    * the only other float is the t18 micro-quantized ln.
-    *
-    * Shape for scale: [[sbCounts]] materializes one train-side
-    * token-array base feeding three map-only explode censuses
-    * (map-combined aggregates over n-gram TYPE tables — the
-    * persistable artifact); [[sbScoreWith]] builds the scored
-    * trigram stream once and joins per-type scores (census slivers
-    * against the DISTINCT scored-trigram table) back — the
-    * corpus-sized exchange is that final (id, trigram) → log-prob
-    * join, t25's audited shape. Docs with < 3 tokens carry no
-    * trigram and are absent from the output (t18/t25's convention).
-    */
-  private def sbZip3(n: Column): Column = {
-    val nullS = lit(null).cast("string")
-    arrays_zip(
-      col("__w").as("a"),
-      concat(slice(col("__w"), lit(2), greatest(n - 1, lit(0))),
-        array(nullS)).as("b"),
-      concat(slice(col("__w"), lit(3), greatest(n - 2, lit(0))),
-        array(nullS, nullS)).as("c"))
-  }
+  /** Per-(id, keys…) gram count and exact micro log-prob sum `__s` of a
+    * scored `(…, __lp)` gram stream. */
+  private def gramSums(scored: DataFrame, idCol: String, keyCols: Seq[String],
+                       n: Int): DataFrame =
+    scored.groupBy(col(idCol) +: keyCols.map(col): _*)
+      .agg(count(lit(1)).as(gramsCol(n)), sum("__lp").as("__s"))
 
-  /** The frozen stupid-backoff LM artifact — the count tables a
-    * deployment persists (KenLM ships counts/probabilities the same
-    * way; probabilities can't be precomputed because unseen n-grams
-    * need the backoff arithmetic at scoring time): trigram, bigram,
-    * and unigram censuses of the TRAIN corpus plus the 1-row token
-    * total (its in-plan empty-train guard rides along). */
-  final case class SbCounts(tri: DataFrame, big: DataFrame,
-                            uni: DataFrame, nTot: DataFrame)
+  /** `(id, n-gram count, mean log-prob)` — the one IEEE division of the
+    * exact micro sum that every LM score ends in. */
+  private def meanScore(sums: DataFrame, idCol: String, n: Int,
+                        scoreCol: String): DataFrame =
+    sums.select(col(idCol), col(gramsCol(n)),
+      (col("__s").cast("double") / (lit(1e6) * col(gramsCol(n)))).as(scoreCol))
 
-  /** Build the [[SbCounts]] artifact from the `trainFilter` side of
-    * `docs` — three map-combined censuses off one materialized
-    * token-array base; persist the four tables and score forever
-    * after with [[sbScoreWith]]. */
-  def sbCounts(docs: DataFrame, textCol: String,
-               trainFilter: Column): SbCounts =
-    sbCountsOfTokens(graft.Materialize.reuse(
-      docs.filter(trainFilter).select(tokens(col(textCol)).as("__w"))))
-
-  /** [[sbCounts]] over a pre-built `(__w)` token-array base — lets
-    * [[stupidBackoffScore]] share ONE base between censuses and the
-    * scored stream (one text scan, review r13). */
-  private def sbCountsOfTokens(base: DataFrame): SbCounts = {
-    // ALL THREE censuses come off ONE cached grouping-sets pass (was
-    // three explode+aggregate passes over the train base — r20); the
-    // shared cache still serves a streamed scorer's per-micro-batch
-    // joins (review r13: an uncached tri would re-aggregate the whole
-    // train base per batch)
-    val g = gramCensusesKeyed(base, Seq(1, 2, 3), Nil)
-    val tri = g(3).withColumnRenamed("__c3", "__c123")
-    val big = g(2).select(col("__w1").as("__b1"), col("__w2").as("__b2"),
-      col("__c2").as("__cb"))
-    val uni = g(1).select(col("__w1").as("__u"), col("__c1").as("__cu"))
-    // an empty train side would make every branch NULL — fail loudly
-    // in-plan (the sp2 discipline) instead of emitting silent nulls
-    val nTot = uni.agg(sum("__cu").as("__n0"))
-      .select(when(col("__n0").isNull, raise_error(lit(
-        "stupidBackoffScore: trainFilter selects no documents")))
-        .otherwise(col("__n0")).as("__n"))
-    SbCounts(tri, big, uni, nTot)
-  }
-
-  /** The (id, w1, w2, w3) trigram stream of `docs` — map-only. */
-  private def sbTok3(docs: DataFrame, idCol: String,
-                     textCol: String): DataFrame =
-    sbTok3OfTokens(
-      docs.select(col(idCol), tokens(col(textCol)).as("__w")), idCol)
-
-  /** [[sbTok3]] over a pre-built `(idCol, __w)` base. */
-  private def sbTok3OfTokens(pre: DataFrame, idCol: String): DataFrame =
-    pre.select(col(idCol), explode(sbZip3(size(col("__w")))).as("__z"))
-      .select(col(idCol), col("__z.a").as("__w1"),
-        col("__z.b").as("__w2"), col("__z.c").as("__w3"))
-      .filter(col("__w3").isNotNull)
-
-  /** THE shared scoring kernel of the stupid-backoff family: per-type
-    * CASE over the census joins, micro-quantized ln, per-doc rollup.
-    * [[stupidBackoffScore]] (t28), the frozen-artifact batch path
-    * [[sbScoreWith]], and the streaming sink
-    * [[graft.streaming.Streaming.lmScoreSink]] all pass through this
-    * one implementation — online ≡ offline cannot drift through a
-    * divergent copy. */
-  private def sbScoreUnder(tok3: DataFrame, idCol: String,
-                           c: SbCounts): DataFrame = {
-    val types = tok3.select("__w1", "__w2", "__w3").distinct()
-    val p =
-      when(col("__c123").isNotNull,
-        col("__c123").cast("double") / col("__c12"))
-      .when(col("__c23").isNotNull,
-        (lit(2L) * col("__c23")).cast("double") / (lit(5L) * col("__c2")))
-      .when(col("__c3").isNotNull,
-        (lit(4L) * col("__c3")).cast("double") / (lit(25L) * col("__n")))
-      .otherwise(lit(4.0) / (lit(25L) * (col("__n") + lit(1L))))
-    val lp = types
-      .join(c.tri, Seq("__w1", "__w2", "__w3"), "left")
-      .join(c.big.select(col("__b1").as("__w1"), col("__b2").as("__w2"),
-        col("__cb").as("__c12")), Seq("__w1", "__w2"), "left")
-      .join(c.big.select(col("__b1").as("__w2"), col("__b2").as("__w3"),
-        col("__cb").as("__c23")), Seq("__w2", "__w3"), "left")
-      .join(c.uni.select(col("__u").as("__w2"), col("__cu").as("__c2")),
-        Seq("__w2"), "left")
-      .join(c.uni.select(col("__u").as("__w3"), col("__cu").as("__c3")),
-        Seq("__w3"), "left")
-      .crossJoin(broadcast(c.nTot))
-      .select(col("__w1"), col("__w2"), col("__w3"),
-        round(lit(1e6) * log(p)).cast("long").as("__lp"))
-    tok3
-      .join(lp, Seq("__w1", "__w2", "__w3"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_trigrams"), sum("__lp").as("__s"))
-      .select(col(idCol), col("n_trigrams"),
-        (col("__s").cast("double") / (lit(1e6) * col("n_trigrams")))
-          .as("sb3_score"))
-  }
-
-  /** Score documents under a FROZEN [[SbCounts]] artifact — the
-    * deployment path (and the per-micro-batch body of the streaming
-    * sink): no training pass, scores bit-identical to
-    * [[stupidBackoffScore]] on the same rows under the same counts
-    * because every step is [[sbScoreUnder]]. */
-  def sbScoreWith(docs: DataFrame, idCol: String, textCol: String,
-                  c: SbCounts): DataFrame =
-    sbScoreUnder(graft.Materialize.reuse(sbTok3(docs, idCol, textCol)),
-      idCol, c)
-
-  def stupidBackoffScore(docs: DataFrame, idCol: String, textCol: String,
-                         trainFilter: Column): DataFrame = {
-    // ONE materialized (id, train-flag, token-array) base feeds both
-    // the censuses and the scored stream — text scanned once (the
-    // combined train-and-score form; the split sbCounts/sbScoreWith
-    // entry points are the frozen-artifact deployment)
-    val base = graft.Materialize.reuse(
-      docs.select(col(idCol), trainFilter.as("__tr"),
-        tokens(col(textCol)).as("__w")))
-    val counts = sbCountsOfTokens(base.filter(col("__tr")).select("__w"))
-    val tok3 = graft.Materialize.reuse(
-      sbTok3OfTokens(base.select(col(idCol), col("__w")), idCol))
-    sbScoreUnder(tok3, idCol, counts)
+  /** The `(idCol, keyCols…, __w1..__wn)` order-`n` gram stream of an
+    * `(idCol, keyCols…, __w)` token base — one row per position where a
+    * full n-gram fits; map-only. */
+  private def gramStream(base: DataFrame, idCol: String, keyCols: Seq[String],
+                         n: Int): DataFrame = {
+    val ik = (idCol +: keyCols).map(col)
+    base.select(ik :+ explode(sbZipN(size(col("__w")), n)).as("__z"): _*)
+      .select(ik ++ (0 until n).map(j => col(s"__z.g$j").as(s"__w${j + 1}")): _*)
+      .filter(col(s"__w$n").isNotNull)
   }
 
   /** The k shifted-token arrays zipped positionally — struct fields
     * `g0..g{k-1}`; position i carries (wᵢ, wᵢ₊₁, …, wᵢ₊ₖ₋₁) with
-    * nulls past the end (the [[sbZip3]] shape generalized). */
+    * nulls past the end. */
   private[graft] def sbZipN(n: Column, k: Int): Column = {
     val nullS = lit(null).cast("string")
     arrays_zip((0 until k).map { j =>
@@ -943,24 +708,6 @@ object TextFns {
         array(Seq.fill(j)(nullS): _*)).as(s"g$j")
     }: _*)
   }
-
-  /** The frozen 5-gram stupid-backoff artifact (t28b — Brants et al.
-    * 2007 ship 5-grams; CCNet's KenLM is a 5-gram): the five n-gram
-    * censuses of the train corpus plus the 1-row token total. Two
-    * more map-combined TYPE censuses off the same token base than
-    * [[SbCounts]] — the artifact stays the persistable KenLM shape.
-    */
-  final case class Sb5Counts(five: DataFrame, four: DataFrame,
-                             tri: DataFrame, big: DataFrame,
-                             uni: DataFrame, nTot: DataFrame)
-
-  def sb5Counts(docs: DataFrame, textCol: String,
-                trainFilter: Column): Sb5Counts =
-    sb5CountsOfTokens(graft.Materialize.reuse(
-      docs.filter(trainFilter).select(tokens(col(textCol)).as("__w"))))
-
-  private def gramCensus(base: DataFrame, k: Int): DataFrame =
-    gramCensusKeyed(base, k, Nil)
 
   /** ALL requested gram-order TYPE censuses of one token base in ONE
     * corpus pass (optimization r20, guide §2.3/§6): a single explode
@@ -1017,11 +764,12 @@ object TextFns {
     }.toMap
   }
 
-  /** Order-`k` gram TYPE census over a `(keyCols..., __w)` token-array
-    * base, map-combined, grouped per key (empty keys = one global
-    * census — [[gramCensus]]). The keyed form is what per-language LMs
-    * batch on (the t20b discipline: per-key counts are independent, so
-    * one grouped aggregation replaces |keys| separate jobs). */
+  /** Order-`k` gram TYPE census `(keyCols…, __w1..__wk, __ck)` over a
+    * `(keyCols..., __w)` token-array base, map-combined, grouped per key
+    * (empty keys = one global census). The keyed form is what
+    * per-language LMs batch on (the t20b discipline: per-key counts are
+    * independent, so one grouped aggregation replaces |keys| separate
+    * jobs). */
   private def gramCensusKeyed(base: DataFrame, k: Int,
                               keyCols: Seq[String]): DataFrame = {
     val kc = keyCols.map(col)
@@ -1034,246 +782,301 @@ object TextFns {
         .agg(count(lit(1)).as(s"__c$k")))
   }
 
-  private def sb5CountsOfTokens(base: DataFrame): Sb5Counts = {
-    // all five censuses in ONE corpus pass (grouping sets; was five
-    // explode+aggregate passes over the token base — optimization r20)
-    val g = gramCensusesKeyed(base, Seq(1, 2, 3, 4, 5), Nil)
-    val five = g(5)
-    val four = g(4)
-    val tri = g(3)
-    val big = g(2)
-    val uni = g(1)
-    val nTot = uni.agg(sum("__c1").as("__n0"))
-      .select(when(col("__n0").isNull, raise_error(lit(
-        "stupidBackoff5Score: trainFilter selects no documents")))
-        .otherwise(col("__n0")).as("__n"))
-    Sb5Counts(five, four, tri, big, uni, nTot)
-  }
-
-  /** The (id, w1..w5) 5-gram stream — map-only. */
-  private def sb5TokOfTokens(pre: DataFrame, idCol: String): DataFrame =
-    pre.select(col(idCol), explode(sbZipN(size(col("__w")), 5)).as("__z"))
-      .select(col(idCol) +: (0 until 5).map(
-        j => col(s"__z.g$j").as(s"__w${j + 1}")): _*)
-      .filter(col("__w5").isNotNull)
-
-  /** THE shared 5-gram scoring kernel — batch, frozen-artifact and
-    * any future streamed path all pass through here (the
-    * [[sbScoreUnder]] discipline at order 5). Exact rationals with α
-    * = 2/5 folded per level: 2/5, 4/25, 8/125, 16/625; each branch's
-    * denominator is positive by construction (every (k−1)-gram census
-    * row dominates its k-gram extension's count). One double division
-    * per branch + the micro-quantized ln.
+  /** Stupid-backoff order-n LM score — the scoring scheme Google
+    * actually ran at web scale (Brants et al. 2007 §3: count-based
+    * backoff with a FIXED multiplier α = 0.4 and no discounting —
+    * "stupid" because it skips the normalization that makes distributed
+    * training of KN painful, and at large data it matches or beats it).
+    * The LM trains on the `trainFilter` subset (the reference-corpus
+    * side, t20's discipline) and scores EVERY document — unlike
+    * t18/t25's self-scoring, unseen n-grams occur and every backoff
+    * branch is live. With c(i..j) the train count of the scored
+    * positions i..j and N the train token total, depth d = 0..n−1:
+    *
+    *   S(wₙ|w₁..wₙ₋₁) = c(1..n)/c(1..n−1)                if c(1..n) > 0
+    *                  = αᵈ · c(d+1..n)/c(d+1..n−1)       first d with c(d+1..n) > 0
+    *                  = αⁿ⁻¹ · c(n..n)/N                 (unigram)
+    *                  = αⁿ⁻¹ / (N+1)                     else (OOV floor; Brants
+    *                    leaves OOV to the application — this floor is the
+    *                    smallest deterministic choice below every seen
+    *                    unigram's backoff mass)
+    *
+    * Each branch's denominator is positive by construction (every
+    * (k−1)-gram census row dominates its k-gram extension's count).
+    * Every S is an exact rational with α folded in as 2ᵈ/5ᵈ: ONE double
+    * division of exact integers per branch, `(2ᵈ·c).cast(double) /
+    * (5ᵈ·ctx)`; the only other float is the t18 micro-quantized ln.
+    *
+    * Shape for scale: [[sbCounts]] builds every census 1..n off one
+    * materialized train-side token base in one grouping-sets pass (the
+    * persistable artifact); [[sbScoreWith]] builds the scored gram
+    * stream once and left-joins the census slivers, longest gram
+    * first (within a length: context, then suffix), against the
+    * DISTINCT scored-gram table — the corpus-sized exchange is the
+    * final (id, n-gram) → log-prob join, t25's audited shape. Docs with
+    * < n tokens carry no n-gram and are absent from the output
+    * (t18/t25's convention).
     */
-  private def sb5ScoreUnder(tok5: DataFrame, idCol: String,
-                            c: Sb5Counts): DataFrame = {
-    val w = (1 to 5).map(j => s"__w$j")
-    val types = tok5.select(w.map(col): _*).distinct()
-    def renamed(df: DataFrame, from: Seq[String], to: Seq[String],
-                cnt: String, as: String): DataFrame =
-      df.select(from.zip(to).map { case (f, t) => col(f).as(t) }
-        :+ col(cnt).as(as): _*)
-    val p =
-      when(col("__c12345").isNotNull,
-        col("__c12345").cast("double") / col("__c1234"))
-      .when(col("__c2345").isNotNull,
-        (lit(2L) * col("__c2345")).cast("double") / (lit(5L) * col("__c234")))
-      .when(col("__c345").isNotNull,
-        (lit(4L) * col("__c345")).cast("double") / (lit(25L) * col("__c34")))
-      .when(col("__c45").isNotNull,
-        (lit(8L) * col("__c45")).cast("double") / (lit(125L) * col("__c4")))
-      .when(col("__c5").isNotNull,
-        (lit(16L) * col("__c5")).cast("double") / (lit(625L) * col("__n")))
-      .otherwise(lit(16.0) / (lit(625L) * (col("__n") + lit(1L))))
-    val lp = types
-      .join(renamed(c.five, (1 to 5).map(j => s"__w$j"), w, "__c5", "__c12345"), w, "left")
-      .join(renamed(c.four, (1 to 4).map(j => s"__w$j"), w.take(4), "__c4", "__c1234"), w.take(4), "left")
-      .join(renamed(c.four, (1 to 4).map(j => s"__w$j"), w.drop(1), "__c4", "__c2345"), w.drop(1), "left")
-      .join(renamed(c.tri, (1 to 3).map(j => s"__w$j"), w.slice(1, 4), "__c3", "__c234"), w.slice(1, 4), "left")
-      .join(renamed(c.tri, (1 to 3).map(j => s"__w$j"), w.slice(2, 5), "__c3", "__c345"), w.slice(2, 5), "left")
-      .join(renamed(c.big, (1 to 2).map(j => s"__w$j"), w.slice(2, 4), "__c2", "__c34"), w.slice(2, 4), "left")
-      .join(renamed(c.big, (1 to 2).map(j => s"__w$j"), w.slice(3, 5), "__c2", "__c45"), w.slice(3, 5), "left")
-      .join(renamed(c.uni, Seq("__w1"), Seq("__w4"), "__c1", "__c4"), Seq("__w4"), "left")
-      .join(renamed(c.uni, Seq("__w1"), Seq("__w5"), "__c1", "__c5"), Seq("__w5"), "left")
-      .crossJoin(broadcast(c.nTot))
-      .select(w.map(col) :+
-        round(lit(1e6) * log(p)).cast("long").as("__lp"): _*)
-    tok5
-      .join(lp, w)
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_5grams"), sum("__lp").as("__s"))
-      .select(col(idCol), col("n_5grams"),
-        (col("__s").cast("double") / (lit(1e6) * col("n_5grams")))
-          .as("sb5_score"))
-  }
-
-  /** Score documents under a FROZEN [[Sb5Counts]] artifact. */
-  def sb5ScoreWith(docs: DataFrame, idCol: String, textCol: String,
-                   c: Sb5Counts): DataFrame =
-    sb5ScoreUnder(graft.Materialize.reuse(sb5TokOfTokens(
-      docs.select(col(idCol), tokens(col(textCol)).as("__w")), idCol)),
-      idCol, c)
-
-  /** 5-gram stupid-backoff LM (t28b) — [[stupidBackoffScore]] at the
-    * order Brants et al. actually shipped: S(w₅|w₁..w₄) backs off
-    * 5→4→3→2→1 with α = 0.4 folded in as exact rationals (2/5, 4/25,
-    * 8/125, 16/625), trained on `trainFilter`, scoring every doc with
-    * ≥ 5 tokens. All six branches (four backoffs + unigram + OOV
-    * floor) are live on real data and spec-planted individually.
-    * Same one-text-scan combined form as t28.
-    */
-  def stupidBackoff5Score(docs: DataFrame, idCol: String, textCol: String,
-                          trainFilter: Column): DataFrame = {
+  private[graft] def sbScore(docs: DataFrame, idCol: String, textCol: String,
+                             trainFilter: Column, order: Int): DataFrame = {
+    requireOrder(order)
+    // ONE materialized (id, train-flag, token-array) base feeds both
+    // the censuses and the scored stream — text scanned once (the
+    // combined train-and-score form; the split sbCounts/sbScoreWith
+    // entry points are the frozen-artifact deployment)
     val base = graft.Materialize.reuse(
       docs.select(col(idCol), trainFilter.as("__tr"),
         tokens(col(textCol)).as("__w")))
-    val counts = sb5CountsOfTokens(base.filter(col("__tr")).select("__w"))
-    val tok5 = graft.Materialize.reuse(
-      sb5TokOfTokens(base.select(col(idCol), col("__w")), idCol))
-    sb5ScoreUnder(tok5, idCol, counts)
+    val counts = sbCountsOfTokens(base.filter(col("__tr")).select("__w"), order)
+    sbScoreStream(graft.Materialize.reuse(
+      gramStream(base.select(col(idCol), col("__w")), idCol, Nil, order)),
+      idCol, counts)
   }
+
+  /** Stupid-backoff trigram LM (t28): [[sbScore]] at order 3,
+    * `(id, n_trigrams, sb3_score)`. */
+  def stupidBackoffScore(docs: DataFrame, idCol: String, textCol: String,
+                         trainFilter: Column): DataFrame =
+    sbScore(docs, idCol, textCol, trainFilter, 3)
+
+  /** Stupid-backoff 5-gram LM (t28b — the order Brants et al. shipped;
+    * CCNet's KenLM is a 5-gram): [[sbScore]] at order 5,
+    * `(id, n_5grams, sb5_score)`. */
+  def stupidBackoff5Score(docs: DataFrame, idCol: String, textCol: String,
+                          trainFilter: Column): DataFrame =
+    sbScore(docs, idCol, textCol, trainFilter, 5)
+
+  /** The frozen order-`order` stupid-backoff LM artifact — the count
+    * tables a deployment persists (KenLM ships counts/probabilities the
+    * same way; probabilities can't be precomputed because unseen
+    * n-grams need the backoff arithmetic at scoring time): `censuses(k)`
+    * is the train corpus's order-k gram census `(__w1..__wk, __ck)` for
+    * k = 1..order, plus the 1-row token total `__n` (its in-plan
+    * empty-train guard rides along). */
+  final case class SbCounts(order: Int, censuses: Map[Int, DataFrame],
+                            nTot: DataFrame)
+
+  /** Build the [[SbCounts]] artifact of order `order` (≥ 2) from the
+    * `trainFilter` side of `docs`; persist its tables and score forever
+    * after with [[sbScoreWith]]. */
+  def sbCounts(docs: DataFrame, textCol: String, trainFilter: Column,
+               order: Int): SbCounts = {
+    requireOrder(order)
+    sbCountsOfTokens(graft.Materialize.reuse(
+      docs.filter(trainFilter).select(tokens(col(textCol)).as("__w"))), order)
+  }
+
+  /** [[sbCounts]] over a pre-built `(__w)` token-array base — lets
+    * [[sbScore]] share ONE base between censuses and the scored stream
+    * (one text scan, review r13). All `order` censuses come off ONE
+    * cached grouping-sets pass; the shared cache still serves a
+    * streamed scorer's per-micro-batch joins (review r13: an uncached
+    * census would re-aggregate the whole train base per batch). */
+  private def sbCountsOfTokens(base: DataFrame, order: Int): SbCounts = {
+    val g = gramCensusesKeyed(base, 1 to order, Nil)
+    // an empty train side would make every branch NULL — fail loudly
+    // in-plan (the sp2 discipline) instead of emitting silent nulls;
+    // the message names the public entry point of this order
+    val entry = if (order == 3) "stupidBackoffScore" else s"stupidBackoff${order}Score"
+    val nTot = g(1).agg(sum("__c1").as("__n0"))
+      .select(when(col("__n0").isNull, raise_error(lit(
+        s"$entry: trainFilter selects no documents")))
+        .otherwise(col("__n0")).as("__n"))
+    SbCounts(order, g, nTot)
+  }
+
+  /** Score documents under a FROZEN [[SbCounts]] artifact — the
+    * deployment path (and the per-micro-batch body of the streaming
+    * sink [[graft.streaming.Streaming.lmScoreSink]]): no training pass,
+    * scores bit-identical to [[sbScore]] on the same rows under the same
+    * counts because every step is [[sbScoreStream]]. Output
+    * `(id, n-gram count, sb<order>_score)`. */
+  def sbScoreWith(docs: DataFrame, idCol: String, textCol: String,
+                  c: SbCounts): DataFrame =
+    sbScoreStream(graft.Materialize.reuse(gramStream(
+      docs.select(col(idCol), tokens(col(textCol)).as("__w")), idCol, Nil,
+      c.order)), idCol, c)
+
+  /** THE stupid-backoff scoring kernel, at `c.order`: per-type CASE over
+    * the census joins, micro-quantized ln, per-doc rollup. Every batch,
+    * frozen-artifact and streamed path passes through this one
+    * implementation — online ≡ offline cannot drift through a divergent
+    * copy. */
+  private def sbScoreStream(tok: DataFrame, idCol: String,
+                            c: SbCounts): DataFrame = {
+    val n = c.order
+    val w = (1 to n).map(j => s"__w$j")
+    // the train count of scored positions a..b, e.g. `__c2345`
+    def cnt(a: Int, b: Int): String = "__c" + (a to b).mkString
+    def census(a: Int, b: Int): DataFrame = {
+      val k = b - a + 1
+      c.censuses(k).select((1 to k).map(j => col(s"__w$j").as(s"__w${a + j - 1}"))
+        :+ col(s"__c$k").as(cnt(a, b)): _*)
+    }
+    def pow5(d: Int): Long = (1 to d).foldLeft(1L)((p, _) => 5L * p)
+    // backoff depth d scores the suffix d+1..n over its context
+    // d+1..n−1 (the token total at the unigram)
+    val branches = (0 until n).map { d =>
+      val ctx = if (d == n - 1) col("__n") else col(cnt(d + 1, n - 1))
+      val p =
+        if (d == 0) col(cnt(1, n)).cast("double") / ctx
+        else (lit(1L << d) * col(cnt(d + 1, n))).cast("double") / (lit(pow5(d)) * ctx)
+      (col(cnt(d + 1, n)).isNotNull, p)
+    }
+    val p = branches.tail.foldLeft(when(branches.head._1, branches.head._2)) {
+      case (acc, (hit, q)) => acc.when(hit, q)
+    }.otherwise(lit((1L << (n - 1)).toDouble) /
+      (lit(pow5(n - 1)) * (col("__n") + lit(1L))))
+    // longest gram first; within a length the context, then the suffix
+    val ranges = (1, n) +: (n - 1 to 1 by -1).flatMap(
+      k => Seq((n - k, n - 1), (n - k + 1, n)))
+    val lp = ranges
+      .foldLeft(tok.select(w.map(col): _*).distinct()) { case (df, (a, b)) =>
+        df.join(census(a, b), w.slice(a - 1, b), "left")
+      }
+      .crossJoin(broadcast(c.nTot))
+      .select(w.map(col) :+ round(lit(1e6) * log(p)).cast("long").as("__lp"): _*)
+    meanScore(gramSums(tok.join(lp, w), idCol, Nil, n), idCol, n, s"sb${n}_score")
+  }
+
+  /** Interpolated Kneser-Ney bigram LM score (t25) — the smoothing
+    * the CCNet filter actually ships (Wenzek et al. 2020 §3.3 use a
+    * KenLM 5-gram with modified KN; this is the bigram form under the
+    * same absolute-discount + continuation-probability structure,
+    * where [[bigramLmScore]] is the add-one baseline): [[knSums]] at
+    * order 2, `(id, n_bigrams, kn2_score)`. */
+  def knBigramLmScore(docs: DataFrame, idCol: String,
+                      textCol: String): DataFrame =
+    meanScore(knSums(docs, idCol, textCol, Nil, 2), idCol, 2, "kn2_score")
 
   /** Interpolated Kneser-Ney 5-GRAM LM score (t25b) — the model the
     * CCNet filter actually ships (Wenzek et al. 2020 §3.3: a KenLM
-    * 5-gram with Kneser-Ney smoothing; t25 was its bigram form and
-    * t28b the 5-gram-but-stupid-backoff form — this closes the
-    * matrix). Standard interpolated KN (Chen & Goodman 1998 §4.1.6),
-    * absolute discount D = 3/4 at every level, continuation counts
-    * below the top order, self-scored (the LM trains on the corpus it
-    * scores, t25's convention — so every count a scored 5-gram needs
-    * is ≥ 1 by containment and no max(·,0) branch is live):
-    *
-    *   P₅(w₅|w₁..w₄) = (c₅−D)/ctx₅ + D·λ₅/ctx₅ · P₄
-    *   Pₖ(w₅|·)      = (aₖ−D)/ctxₖ + D·λₖ/ctxₖ · Pₖ₋₁   (k = 4,3,2)
-    *   P₁(w₅)        = a₁/N₂                    (continuation unigram)
-    *
-    * where at the top c₅ = raw 5-gram count, ctx₅ = Σ_w c₅ over the
-    * 4-context, λ₅ = distinct continuations of the 4-context; at
-    * lower order k the count aₖ is the CONTINUATION count — the
-    * number of distinct (k+1)-gram TYPES ending in the scored k-gram
-    * (Kneser-Ney's "how many contexts has it completed", computed
-    * from the (k+1)-gram census) — ctxₖ its middle-grouped total, λₖ
-    * the distinct-last-word count of that middle group; a₁ = distinct
-    * bigram types ending in w₅, N₂ = total bigram types (t25's n1b/N
-    * pair verbatim).
-    *
-    * Determinism contract: every count is an exact integer off one of
-    * the four gram-type censuses; with D = 3/4 each level folds to
-    * `(4a−3 + 3·λ·P₋)/(4·ctx)` — the only float ops are the
-    * int→double casts (exact below 2⁵³), one multiply-add chain and
-    * one division per level (IEEE basic ops, correctly rounded, so
-    * bit-identical in any engine given the same expression tree —
-    * the oracle mirrors the tree node for node), and the
-    * micro-quantized ln (t18's gate-proven pattern).
-    *
-    * Shape for scale: four map-combined TYPE censuses off ONE
-    * materialized token base (the t28b shape); the nine count
-    * attachments are equi-joins of census SLIVERS against the 5-gram
-    * type table (vocab-bounded, a fraction of the corpus); the single
-    * corpus-sized exchange is the final (id, 5-gram) → log-prob join
-    * + rollup, t25/t28b's audited tail. Corpus text never shuffles.
-    */
+    * 5-gram with Kneser-Ney smoothing): [[knSums]] at order 5,
+    * `(id, n_5grams, kn5_score)`. */
   def knFiveGramLmScore(docs: DataFrame, idCol: String,
                         textCol: String): DataFrame =
-    kn5Sums(docs, idCol, textCol, Nil)
-      .select(col(idCol), col("n_5grams"),
-        (col("__s").cast("double") / (lit(1e6) * col("n_5grams")))
-          .as("kn5_score"))
+    meanScore(knSums(docs, idCol, textCol, Nil, 5), idCol, 5, "kn5_score")
 
-  /** Keyed core of the interpolated-KN 5-gram score — ONE
+  /** Keyed core of the interpolated Kneser-Ney order-n score — ONE
     * implementation of the level algebra per `keyCols` group (empty =
-    * one global LM; `Seq(langCol)` = cp6b's per-language form), the
-    * [[knBigramSums]] discipline at order 5. Returns
-    * `(idCol, keyCols..., n_5grams, __s)`. */
-  private[graft] def kn5Sums(docs: DataFrame, idCol: String,
-                             textCol: String,
-                             keyCols: Seq[String]): DataFrame = {
+    * one global LM; `Seq(langCol)` = cp6/cp6b's per-language form), so
+    * the discount/continuation arithmetic cannot drift between orders
+    * or between the global and per-language forms (review r13).
+    * Returns `(idCol, keyCols..., n-gram count, __s)` with `__s` the
+    * exact micro log-prob sum.
+    *
+    * Standard interpolated KN (Chen & Goodman 1998 §4.1.6), absolute
+    * discount D = 3/4 at every level, continuation counts below the
+    * top order, self-scored (the LM trains on the corpus it scores —
+    * so every count a scored n-gram needs is ≥ 1 by containment and
+    * no max(·,0) branch is live):
+    *
+    *   Pₙ(wₙ|w₁..wₙ₋₁) = (cₙ−D)/ctxₙ + D·λₙ/ctxₙ · Pₙ₋₁
+    *   Pₖ(wₙ|·)        = (aₖ−D)/ctxₖ + D·λₖ/ctxₖ · Pₖ₋₁   (k = n−1..2)
+    *   P₁(wₙ)          = a₁/N₂                  (continuation unigram)
+    *
+    * where at the top cₙ = raw n-gram count, ctxₙ = Σ_w cₙ over the
+    * (n−1)-context, λₙ = distinct continuations of that context; at
+    * lower order k the count aₖ is the CONTINUATION count — the number
+    * of distinct (k+1)-gram TYPES ending in the scored k-gram
+    * (Kneser-Ney's "how many contexts has it completed", the quantity
+    * that demotes a frequent-but-rigid word like 'Francisco') — ctxₖ
+    * its middle-grouped total, λₖ the distinct-last-word count of that
+    * middle group; a₁ = distinct bigram types ending in wₙ, N₂ = total
+    * bigram types.
+    *
+    * Determinism contract: every count is an exact integer off one of
+    * the gram-type censuses 2..n; with D = 3/4 each level folds to
+    * `(4a−3 + 3·λ·P₋)/(4·ctx)` — the only float ops are the int→double
+    * casts (exact below 2⁵³), one multiply-add chain and one division
+    * per level (IEEE basic ops, correctly rounded, so bit-identical in
+    * any engine given the same expression tree — the t25b oracle
+    * mirrors the tree node for node), and the micro-quantized ln
+    * (t18's gate-proven pattern). At order 2 the whole probability
+    * instead folds to ONE exact rational, `((4·c₂−3)·N₂ + 3·λ₂·a₁) /
+    * (4·ctx₂·N₂)` — one division of exact-integer doubles, t25's
+    * oracle form; integer intermediates stay in 64 bits through ~10⁹
+    * bigram types, past that ANSI fails loudly (the t23 discipline).
+    *
+    * Shape for scale: n−1 map-combined TYPE censuses off ONE
+    * materialized token base — DELIBERATELY per-order censuses, not the
+    * r20 grouping-sets fusion: at order 5 a census is near-corpus-sized
+    * (most 5-gram types are unique), and this ladder reads each census
+    * 2-3 times — the fused combined cache + per-order slivers
+    * double-materialize that volume, measured cp6b 10.1 → 14.6 s
+    * (BenchN min-of-5, both heaps) against a 3-explode saving the
+    * cached token base makes cheap anyway. The fusion stays where it
+    * measured a real win: the stupid-backoff counts (one read per
+    * census — t28b −26%). The middle-grouped (ctxₖ, λₖ) pairs ROLL UP
+    * from the cached suffix census — ctxₖ = Σ aₖ, λₖ = row count —
+    * identical exact integers to a direct `count + countDistinct` over
+    * the census minus its two-phase expand (optimization r19). The
+    * count attachments are equi-joins of census SLIVERS against the
+    * n-gram type table (the top census IS the scored-type table); the
+    * single corpus-sized exchange is the final (id, n-gram) → log-prob
+    * join + rollup, t25/t28b's audited tail. Corpus text never
+    * shuffles.
+    */
+  private[graft] def knSums(docs: DataFrame, idCol: String, textCol: String,
+                            keyCols: Seq[String], order: Int): DataFrame = {
+    requireOrder(order)
+    val n = order
     val kc = keyCols.map(col)
     val base = graft.Materialize.reuse(
       docs.select((col(idCol) +: kc) :+ tokens(col(textCol)).as("__w"): _*))
     val noId = base.select(kc :+ col("__w"): _*)
-    // the four raw gram-type censuses (2..5); the 5-gram census IS the
-    // scored-type table (self-scoring: types scored = types seen)
-    // DELIBERATELY per-order censuses, not the r20 grouping-sets
-    // fusion: at order 5 a census is near-corpus-sized (most 5-gram
-    // types are unique), and this ladder reads each census 2-3 times —
-    // the fused combined cache + per-order slivers double-materialize
-    // that volume, measured cp6b 10.1 → 14.6 s (BenchN min-of-5, both
-    // heaps) against a 3-explode saving the cached token base makes
-    // cheap anyway. The fusion stays where it measured a real win:
-    // the stupid-backoff counts (one read per census — t28b −26%).
-    val g5 = gramCensusKeyed(noId, 5, keyCols)
-    val g4 = gramCensusKeyed(noId, 4, keyCols)
-    val g3 = gramCensusKeyed(noId, 3, keyCols)
-    val g2 = gramCensusKeyed(noId, 2, keyCols)
-    val w = (1 to 5).map(j => s"__w$j")
-    // top level: context totals + distinct continuations off g5
-    val pre5 = g5.groupBy(kc ++ w.take(4).map(col): _*)
-      .agg(sum("__c5").as("__ctx5"), count(lit(1)).as("__lam5"))
-    // level-4 continuation counts: g5 types grouped by suffix; the
-    // middle-grouped (ctx, λ) pair ROLLS UP from the suffix census —
-    // ctx4 = Σ a4 (total (k+1)-gram types over the middle) and lam4 =
-    // row count (distinct continuations) — the knBigramSums ctx/back
-    // discipline at order 5. Identical exact integers to the direct
-    // `count + countDistinct` over the census, minus the
-    // distinct-aggregate's two-phase expand over the full census
-    // (optimization r19: 3 countDistinct passes over census-sized
-    // tables → 3 one-exchange rollups of already-aggregated slivers).
-    val suf4 = graft.Materialize.reuse(
-      g5.groupBy(kc ++ w.drop(1).map(col): _*)
-        .agg(count(lit(1)).as("__a4")))
-    val mid4 = suf4.groupBy(kc ++ w.slice(1, 4).map(col): _*)
-      .agg(sum("__a4").as("__ctx4"), count(lit(1)).as("__lam4"))
-    // level-3 off g4 (positions shift right: g4's (2,3,4) ≡ scored (3,4,5))
-    val suf3 = graft.Materialize.reuse(
-      g4.groupBy(kc :+ col("__w2").as("__w3")
-          :+ col("__w3").as("__w4") :+ col("__w4").as("__w5"): _*)
-        .agg(count(lit(1)).as("__a3")))
-    val mid3 = suf3.groupBy(kc :+ col("__w3") :+ col("__w4"): _*)
-      .agg(sum("__a3").as("__ctx3"), count(lit(1)).as("__lam3"))
-    // level-2 off g3
-    val suf2 = graft.Materialize.reuse(
-      g3.groupBy(kc :+ col("__w2").as("__w4")
-          :+ col("__w3").as("__w5"): _*)
-        .agg(count(lit(1)).as("__a2")))
-    val mid2 = suf2.groupBy(kc :+ col("__w4"): _*)
-      .agg(sum("__a2").as("__ctx2"), count(lit(1)).as("__lam2"))
-    // continuation unigram off g2 (t25's n1b / N pair)
-    val suf1 = g2.groupBy(kc :+ col("__w2").as("__w5"): _*)
-      .agg(count(lit(1)).as("__a1"))
-    val nb = if (keyCols.isEmpty) g2.agg(count(lit(1)).as("__nb"))
-      else g2.groupBy(kc: _*).agg(count(lit(1)).as("__nb"))
-    // the level fold: P = (4a−3 + 3λP₋) / (4·ctx), all-integer inputs
-    def level(a: Column, lam: Column, ctx: Column, prev: Column): Column =
-      ((lit(4L) * a - lit(3L)).cast("double") +
-        lit(3.0) * lam.cast("double") * prev) /
-        (lit(4L) * ctx).cast("double")
-    val p1 = col("__a1").cast("double") / col("__nb").cast("double")
-    val p5 = level(col("__c5"), col("__lam5"), col("__ctx5"),
-      level(col("__a4"), col("__lam4"), col("__ctx4"),
-        level(col("__a3"), col("__lam3"), col("__ctx3"),
-          level(col("__a2"), col("__lam2"), col("__ctx2"), p1))))
-    val lpBase = g5
-      .join(pre5, keyCols ++ w.take(4))
-      .join(suf4, keyCols ++ w.drop(1))
-      .join(mid4, keyCols ++ w.slice(1, 4))
-      .join(suf3, keyCols ++ w.slice(2, 5))
-      .join(mid3, keyCols ++ w.slice(2, 4))
-      .join(suf2, keyCols ++ w.slice(3, 5))
-      .join(mid2, keyCols :+ "__w4")
-      .join(suf1, keyCols :+ "__w5")
+    val g = (n to 2 by -1).map(k => k -> gramCensusKeyed(noId, k, keyCols)).toMap
+    val w = (1 to n).map(j => s"__w$j")
+    // the last k positions of a (k+1)-gram census, moved to the scored
+    // n-gram's last k positions (aliased only where the position moves)
+    def suffix(k: Int): Seq[Column] = (2 to k + 1).map { j =>
+      val to = j + n - k - 1
+      if (to == j) col(s"__w$j") else col(s"__w$j").as(s"__w$to")
+    }
+    // top level: context totals + distinct continuations off the n-gram census
+    val pre = g(n).groupBy(kc ++ w.take(n - 1).map(col): _*)
+      .agg(sum(s"__c$n").as(s"__ctx$n"), count(lit(1)).as(s"__lam$n"))
+    // level k = n−1..2: continuation counts off the (k+1)-gram census
+    // by suffix, and the middle-grouped (ctx, λ) rolled up from them
+    val levels = (n - 1 to 2 by -1).map { k =>
+      val suf = graft.Materialize.reuse(
+        g(k + 1).groupBy(kc ++ suffix(k): _*).agg(count(lit(1)).as(s"__a$k")))
+      val mid = suf.groupBy(kc ++ w.slice(n - k, n - 1).map(col): _*)
+        .agg(sum(s"__a$k").as(s"__ctx$k"), count(lit(1)).as(s"__lam$k"))
+      (k, suf, mid)
+    }
+    // continuation unigram off the bigram census (t25's n1b / N pair)
+    val suf1 = g(2).groupBy(kc ++ suffix(1): _*).agg(count(lit(1)).as("__a1"))
+    val nb = if (keyCols.isEmpty) g(2).agg(count(lit(1)).as("__nb"))
+      else g(2).groupBy(kc: _*).agg(count(lit(1)).as("__nb"))
+    val p =
+      // order 2 folds to t25's single exact rational (its oracle's form)
+      if (n == 2)
+        ((lit(4L) * col("__c2") - lit(3L)) * col("__nb") +
+          lit(3L) * col("__lam2") * col("__a1")).cast("double") /
+          (lit(4L) * col("__ctx2") * col("__nb")).cast("double")
+      else {
+        // the level fold: P = (4a−3 + 3λP₋) / (4·ctx), all-integer inputs
+        def level(a: String, k: Int, prev: Column): Column =
+          ((lit(4L) * col(a) - lit(3L)).cast("double") +
+            lit(3.0) * col(s"__lam$k").cast("double") * prev) /
+            (lit(4L) * col(s"__ctx$k")).cast("double")
+        val p1 = col("__a1").cast("double") / col("__nb").cast("double")
+        level(s"__c$n", n, (2 until n).foldLeft(p1)((q, k) => level(s"__a$k", k, q)))
+      }
+    val lpBase = levels
+      .foldLeft(g(n).join(pre, keyCols ++ w.take(n - 1))) {
+        case (df, (k, suf, mid)) =>
+          df.join(suf, keyCols ++ w.drop(n - k))
+            .join(mid, keyCols ++ w.slice(n - k, n - 1))
+      }
+      .join(suf1, keyCols :+ w.last)
     val lpN = if (keyCols.isEmpty) lpBase.crossJoin(broadcast(nb))
       else lpBase.join(broadcast(nb), keyCols)
     val lp = lpN.select(kc ++ w.map(col)
-      :+ round(lit(1e6) * log(p5)).cast("long").as("__lp"): _*)
-    val tok5 = base.select((col(idCol) +: kc)
-        :+ explode(sbZipN(size(col("__w")), 5)).as("__z"): _*)
-      .select((col(idCol) +: kc) ++ (0 until 5).map(
-        j => col(s"__z.g$j").as(s"__w${j + 1}")): _*)
-      .filter(col("__w5").isNotNull)
-    tok5.join(lp, keyCols ++ w)
-      .groupBy(col(idCol) +: kc: _*)
-      .agg(count(lit(1)).as("n_5grams"), sum("__lp").as("__s"))
+      :+ round(lit(1e6) * log(p)).cast("long").as("__lp"): _*)
+    gramSums(gramStream(base, idCol, keyCols, n).join(lp, keyCols ++ w),
+      idCol, keyCols, n)
   }
 
   /** CCNet perplexity buckets (cp6) — the head/middle/tail corpus
@@ -1281,10 +1084,29 @@ object TextFns {
     * every document with a per-language LM, cut each language into
     * perplexity terciles; "head" is the cleanest third a training run
     * mixes first): a per-LANGUAGE interpolated-KN bigram LM
-    * ([[knBigramLmScore]] with the language key riding every
-    * aggregate — the t20b batching discipline; language counts are
-    * independent, so the grouped form is pure batching), then
-    * per-language tercile cutoffs over the DISTINCT mean-score table.
+    * ([[knSums]] with the language key riding every aggregate — the
+    * t20b batching discipline; language counts are independent, so the
+    * grouped form is pure batching), then per-language tercile cutoffs
+    * over the DISTINCT mean-score table ([[tercileBuckets]]).
+    * Docs with no bigram (single-token) take `tail` with NULL score.
+    */
+  def perplexityBuckets(docs: DataFrame, idCol: String, textCol: String,
+                        langCol: String): DataFrame =
+    tercileBuckets(docs, idCol, textCol, langCol, 2)
+
+  /** CCNet perplexity buckets at ORDER 5 (cp6b) — [[perplexityBuckets]]
+    * with the per-language LM at order 5, so the head/middle/tail
+    * release structure matches Wenzek et al. 2020's actual artifact (a
+    * 5-gram KN KenLM per language) rather than a bigram approximation
+    * of it. Docs with < 5 tokens have no 5-gram → NULL score → `tail`.
+    */
+  def perplexityBuckets5(docs: DataFrame, idCol: String, textCol: String,
+                         langCol: String): DataFrame =
+    tercileBuckets(docs, idCol, textCol, langCol, 5)
+
+  /** THE tercile-cut machinery of the cp6 family over the per-language
+    * order-`order` KN LM ([[knSums]] keyed by `langCol`), so the cuts
+    * cannot drift between orders.
     *
     * Determinism: the per-doc key is `kmicro = floor(s / n)` — one
     * IEEE division of exact integers (s, a sum of micro log-probs
@@ -1297,49 +1119,23 @@ object TextFns {
     * `c2 = max(kmicro | cum ≥ ⌈2n/3⌉)` with ceilings as integer
     * `(n+2) div 3` arithmetic; ties share a bucket (deterministic,
     * slightly uneven thirds — the CCNet cut is by value, not by
-    * row-split). Docs with no bigram (single-token) take `tail` with
-    * NULL score — the conservative call for an unjudgeable doc.
+    * row-split). Docs with no scored n-gram take `tail` with NULL
+    * score — the conservative call for an unjudgeable doc.
     *
-    * Shape for scale: the LM is t25's audited shape with a lang key;
-    * the ONLY window runs over the distinct (lang, kmicro) table —
-    * bounded by the micro value range (~3·10⁷ rows worst-case)
-    * regardless of corpus size, the t23 discipline — and cutoffs
-    * broadcast back as a |langs|-row sliver. Corpus text never
+    * Shape for scale: the ONLY window runs over the distinct (lang,
+    * kmicro) table — bounded by the micro value range (~3·10⁷ rows
+    * worst-case) regardless of corpus size, the t23 discipline — and
+    * cutoffs broadcast back as a |langs|-row sliver. Corpus text never
     * exchanges; no global sort of documents exists.
     */
-  def perplexityBuckets(docs: DataFrame, idCol: String, textCol: String,
-                        langCol: String): DataFrame =
-    tercileBuckets(docs, idCol, langCol,
-      knBigramSums(docs, idCol, textCol, Seq(langCol)), "n_bigrams")
-
-  /** CCNet perplexity buckets at ORDER 5 (cp6b) — [[perplexityBuckets]]
-    * with the per-language LM swapped from the bigram KN to the
-    * interpolated-KN 5-GRAM ([[kn5Sums]] keyed by language), so the
-    * head/middle/tail release structure matches Wenzek et al. 2020's
-    * actual artifact (a 5-gram KN KenLM per language) rather than a
-    * bigram approximation of it. Identical tercile machinery — one
-    * shared implementation, the cuts cannot drift between orders.
-    * Docs with < 5 tokens have no 5-gram → NULL score → `tail` (the
-    * conservative call for an unjudgeable doc, cp6's convention).
-    */
-  def perplexityBuckets5(docs: DataFrame, idCol: String, textCol: String,
-                         langCol: String): DataFrame =
-    tercileBuckets(docs, idCol, langCol,
-      kn5Sums(docs, idCol, textCol, Seq(langCol)), "n_5grams")
-
-  /** THE shared tercile-cut machinery of the cp6 family: floored
-    * per-doc micro keys, per-language running counts over the bounded
-    * DISTINCT (lang, kmicro) table, integer-ceiling cutoffs, value-cut
-    * ties, NULL-score → tail. `sums` must carry
-    * `(idCol, langCol, nCol, __s)` — [[knBigramSums]] / [[kn5Sums]]
-    * shape. */
-  private def tercileBuckets(docs: DataFrame, idCol: String,
-                             langCol: String, sums: DataFrame,
-                             nCol: String): DataFrame = {
+  private def tercileBuckets(docs: DataFrame, idCol: String, textCol: String,
+                             langCol: String, order: Int): DataFrame = {
+    val nCol = gramsCol(order)
     val scored = graft.Materialize.reuse(
-      sums.select(col(idCol), col(langCol), col(nCol),
-        floor(col("__s").cast("double") / col(nCol))
-          .cast("long").as("kmicro")))
+      knSums(docs, idCol, textCol, Seq(langCol), order)
+        .select(col(idCol), col(langCol), col(nCol),
+          floor(col("__s").cast("double") / col(nCol))
+            .cast("long").as("kmicro")))
     val dist = scored.groupBy(langCol, "kmicro").agg(count(lit(1)).as("__cnt"))
     val win = org.apache.spark.sql.expressions.Window
       .partitionBy(langCol).orderBy(col("kmicro").desc)

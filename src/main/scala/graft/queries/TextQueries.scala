@@ -144,7 +144,7 @@ object TextQueries {
 
   /** T3c: the FROZEN-ARTIFACT language-ID path (judge r18 #2 — t3b
     * trains its profile sliver in-plan; the deployment shape is a
-    * persisted artifact + scoring, the Sb5Counts discipline): train
+    * persisted artifact + scoring, the SbCounts discipline): train
     * the `(lang, gram, rank)` profiles, WRITE them as a parquet
     * table, read the bytes back, and classify the whole corpus
     * through [[graft.functions.LangIdNgram.predictWith]] — the same
@@ -3222,7 +3222,7 @@ object TextQueries {
   /** The interpolated-KN 5-gram oracle CTE chain, optionally
     * language-keyed (cp6b) — four raw gram-type censuses, the nine
     * derived count slivers, and the per-type nested level fold
-    * `(4a−3 + 3λP₋)/(4ctx)` mirroring [[TextFns.kn5Sums]]'s expression
+    * `(4a−3 + 3λP₋)/(4ctx)` mirroring order-5 [[TextFns.knSums]]'s expression
     * tree NODE FOR NODE (IEEE basic ops on exact-integer doubles are
     * engine-identical given the same tree; the ln is micro-quantized,
     * t18's pattern). Ends at `lp`; callers roll up per doc.
@@ -3326,7 +3326,7 @@ object TextQueries {
 
   /** CP6b: perplexity buckets on the 5-gram KN LM (judge r14 #1's
     * second half — "flip cp6 onto it"): the per-language LM is
-    * [[TextFns.kn5Sums]] keyed by lang, the tercile machinery is
+    * [[TextFns.knSums]] at order 5 keyed by lang, the tercile machinery is
     * cp6's verbatim (one shared implementation in
     * [[TextFns.perplexityBuckets5]]), so the head/middle/tail release
     * structure now matches CCNet's actual artifact. Docs with < 5

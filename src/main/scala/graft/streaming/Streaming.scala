@@ -317,12 +317,13 @@ object Streaming {
       .start()
 
   /** Streamed LM scoring (round 13) — the KenLM deployment shape for
-    * the stupid-backoff family: the [[graft.functions.TextFns.SbCounts]]
-    * count tables are the FROZEN offline artifact (counts, not
-    * probabilities — unseen n-grams need the backoff arithmetic at
-    * scoring time), and each micro-batch scores through the SAME
-    * integer-exact kernel as the batch path
-    * (`TextFns.sbScoreWith` → `sbScoreUnder` — bit-identical by
+    * the stupid-backoff family at any order: the
+    * [[graft.functions.TextFns.SbCounts]] count tables (which carry
+    * their order — 3 for t28, 5 for t28b) are the FROZEN offline
+    * artifact (counts, not probabilities — unseen n-grams need the
+    * backoff arithmetic at scoring time), and each micro-batch scores
+    * through the SAME integer-exact kernel as the batch path
+    * ([[graft.functions.TextFns.sbScoreWith]] — bit-identical by
     * construction, the classifierScoreSink discipline). Exactly-once
     * is structural: per-batch `batch=<id>` overwrite partitions, so
     * replays rewrite rather than duplicate. Stateless beyond the
@@ -336,7 +337,7 @@ object Streaming {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // sbScoreWith caches the batch's trigram stream; scope each
+        // sbScoreWith caches the batch's gram stream; scope each
         // micro-batch so the cache is DRAINED when the batch ends — a
         // long-lived stream must not accumulate one persist per batch
         // (review r13). The frozen `counts` caches live OUTSIDE this
@@ -344,29 +345,6 @@ object Streaming {
         if (!batch.isEmpty) graft.Materialize.inScope {
           graft.functions.TextFns
             .sbScoreWith(batch.toDF(), idCol, textCol, counts)
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        }
-      }
-      .start()
-
-  /** [[lmScoreSink]] at order 5 — the t28b artifact
-    * ([[graft.functions.TextFns.Sb5Counts]]) through the same
-    * per-batch scoped-cache + exactly-once overwrite-partition
-    * discipline; every score rides
-    * [[graft.functions.TextFns.sb5ScoreWith]], the ONE 5-gram kernel
-    * shared with batch t28b, so online ≡ offline structurally.
-    */
-  def lm5ScoreSink(docs: DataFrame, idCol: String, textCol: String,
-                   counts: graft.functions.TextFns.Sb5Counts,
-                   outPath: String, checkpointDir: String)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) graft.Materialize.inScope {
-          graft.functions.TextFns
-            .sb5ScoreWith(batch.toDF(), idCol, textCol, counts)
             .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
         }
       }

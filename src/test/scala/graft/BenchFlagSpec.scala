@@ -47,4 +47,12 @@ class BenchFlagSpec extends AnyFunSuite {
     assert(!Bench.adjudicateFlag(
       mainTimes = Seq(1.0), smallTimes = Seq(0.0), dataRatio = 1.0))
   }
+
+  test("remeasured min: failed passes never count; all-fail yields no time") {
+    // a failed pass's short elapsed time must not become the min
+    assert(Bench.minOfSuccessful(Seq((9.0, true), (0.1, false), (7.5, true)))
+      .contains(7.5))
+    // every pass failed: no entry, not a -1.0 sentinel read as a time
+    assert(Bench.minOfSuccessful(Seq((0.2, false), (0.3, false))).isEmpty)
+  }
 }

@@ -315,15 +315,16 @@ class StreamingFileSpec extends SparkSpec {
       "streamed scores must be bit-identical to the batch kernel")
   }
 
-  test("LM-score stream ≡ batch sbScoreWith under frozen counts, across restart") {
+  // count tables built ONCE offline (the KenLM artifact shape); the stream
+  // only scores, and a restart from checkpoint picks up only the delta
+  private def lmStreamMatchesBatch(order: Int, nCol: String,
+                                   scoreCol: String): Unit = {
     import graft.functions.TextFns
     val in = tmp(); val out = tmp(); val ckpt = tmp()
     val docs = spark.read.parquet(sf() + "/documents.parquet")
       .select("doc_id", "text", "source")
-    // count tables built ONCE offline (the KenLM artifact shape);
-    // the stream only scores
     val counts = TextFns.sbCounts(docs, "text",
-      col("source").isin("src0", "src1", "src2"))
+      col("source").isin("src0", "src1", "src2"), order)
     val expected = TextFns.sbScoreWith(docs, "doc_id", "text", counts)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
       .toMap
@@ -343,47 +344,23 @@ class StreamingFileSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(in) // arrives while DOWN
     runOnce() // restart from checkpoint picks up only the delta
     val streamed = spark.read.parquet(out + "/batch=*")
-      .select("doc_id", "n_trigrams", "sb3_score")
+      .select("doc_id", nCol, scoreCol)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
       .toMap
-    assert(streamed.size == expected.size, "every doc scored exactly once")
+    assert(streamed.size == expected.size,
+      s"order $order: every doc scored exactly once")
     assert(streamed == expected,
-      "streamed LM scores must be bit-identical to the batch kernel")
+      s"order $order: streamed LM scores must be bit-identical to the batch kernel")
   }
 
+  test("LM-score stream ≡ batch sbScoreWith under frozen counts, across restart") {
+    lmStreamMatchesBatch(3, "n_trigrams", "sb3_score")
+  }
+
+  // order-5 counts through the same sbScoreWith / lmScoreSink pair
   test("5-gram LM-score stream ≡ batch sb5ScoreWith under frozen counts, " +
        "across restart") {
-    import graft.functions.TextFns
-    val in = tmp(); val out = tmp(); val ckpt = tmp()
-    val docs = spark.read.parquet(sf() + "/documents.parquet")
-      .select("doc_id", "text", "source")
-    val counts = TextFns.sb5Counts(docs, "text",
-      col("source").isin("src0", "src1", "src2"))
-    val expected = TextFns.sb5ScoreWith(docs, "doc_id", "text", counts)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
-      .toMap
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, text STRING")
-    def runOnce(): Unit = {
-      val q = Streaming.lm5ScoreSink(
-        spark.readStream.schema(schema).parquet(in),
-        "doc_id", "text", counts, out, ckpt)
-      q.processAllAvailable()
-      q.stop()
-    }
-    docs.filter(col("doc_id") < 250).select("doc_id", "text")
-      .coalesce(1).write.mode("append").parquet(in)
-    runOnce()
-    docs.filter(col("doc_id") >= 250).select("doc_id", "text")
-      .coalesce(1).write.mode("append").parquet(in) // arrives while DOWN
-    runOnce() // restart from checkpoint picks up only the delta
-    val streamed = spark.read.parquet(out + "/batch=*")
-      .select("doc_id", "n_5grams", "sb5_score")
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
-      .toMap
-    assert(streamed.size == expected.size, "every doc scored exactly once")
-    assert(streamed == expected,
-      "streamed 5-gram scores must be bit-identical to the batch kernel")
+    lmStreamMatchesBatch(5, "n_5grams", "sb5_score")
   }
 
   test("langID stream ≡ batch predictWith under a frozen profile artifact, across restart") {

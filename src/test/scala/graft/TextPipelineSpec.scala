@@ -667,8 +667,8 @@ class TextPipelineSpec extends SparkSpec {
     assert(got(0L)._1 == 6L)
     // frozen-artifact path is bit-identical (the sbScoreWith contract
     // at order 5 — same shared kernel)
-    val frozen = TextFns.sb5ScoreWith(docs, "doc_id", "text",
-        TextFns.sb5Counts(docs, "text", col("src") === "train"))
+    val frozen = TextFns.sbScoreWith(docs, "doc_id", "text",
+        TextFns.sbCounts(docs, "text", col("src") === "train", 5))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
       .toMap
     assert(frozen == got)
@@ -869,6 +869,91 @@ class TextPipelineSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(kn5(1L) > kn5(2L),
       s"natural ${kn5(1L)} must beat salad ${kn5(2L)} at order 5")
+  }
+
+  test("stupid backoff at order 4 (no query uses it): all FIVE branches " +
+       "exact on planted counts; frozen artifact scores identically") {
+    import spark.implicits._
+    import graft.functions.TextFns
+    // train "a b c d a b c d": 4-grams abcd=2 (rest 1); tri bcd=2,
+    // big bc=cd=2; uni c=d=2, N=8
+    val docs = Seq(
+      (0L, "a b c d a b c d", "train"),
+      (1L, "a b c d", "eval"), // 4-gram hit: 2/2 = 1
+      (2L, "x b c d", "eval"), // trigram backoff: 2*2/(5*2) = 0.4
+      (3L, "x y c d", "eval"), // bigram backoff: 4*2/(25*2) = 0.16
+      (4L, "x y z d", "eval"), // unigram backoff: 8*2/(125*8)
+      (5L, "x y z w", "eval")  // OOV floor: 8/(125*9)
+    ).toDF("doc_id", "text", "src")
+    val train = col("src") === "train"
+    val scored = TextFns.sbScore(docs, "doc_id", "text", train, 4)
+    assert(scored.columns.toSeq == Seq("doc_id", "n_4grams", "sb4_score"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+    val got = rows(scored)
+    def sc(p: Double) = math.round(1e6 * math.log(p)) / 1e6
+    assert(got(1L) == ((1L, 0.0)))
+    assert(got(2L) == ((1L, sc(2.0 * 2 / (5 * 2)))))
+    assert(got(3L) == ((1L, sc(4.0 * 2 / (25 * 2)))))
+    assert(got(4L) == ((1L, sc(8.0 * 2 / (125 * 8)))))
+    assert(got(5L) == ((1L, sc(8.0 / (125 * 9)))))
+    // deeper backoff always scores strictly worse
+    (1L to 4L).foreach(i => assert(got(i)._2 > got(i + 1)._2))
+    // the train doc scores itself: 5 4-grams, all seen
+    assert(got(0L)._1 == 5L)
+    assert(rows(TextFns.sbScoreWith(docs, "doc_id", "text",
+      TextFns.sbCounts(docs, "text", train, 4))) == got)
+    intercept[IllegalArgumentException](TextFns.sbCounts(docs, "text", train, 1))
+    graft.Materialize.releaseAll()
+  }
+
+  test("Kneser-Ney at orders 3 and 4 (no query uses them): keyed knSums " +
+       "equals a plain-Scala level fold on an asymmetric fixture") {
+    import spark.implicits._
+    import graft.functions.TextFns
+    val docs = Seq(
+      (1L, "en", "a b c d a b c e"), (2L, "en", "b c d a b"),
+      (3L, "en", "c d a b c d"), (4L, "en", "a b c e b c d e"),
+      (5L, "en", "a b"), // too short at either order: absent
+      (6L, "de", "x y z x y w x y z"), (7L, "de", "y z x y w"))
+      .toDF("doc_id", "lang", "text")
+    val corpus = docs.collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2).split(" ").toSeq))
+    // Spark's round(1e6 · ln p) on a double: HALF_UP over BigDecimal(x)
+    def micro(p: Double): Long = BigDecimal(1e6 * StrictMath.log(p))
+      .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+    def level(a: Long, lam: Long, ctx: Long, prev: Double): Double =
+      ((4 * a - 3).toDouble + 3.0 * lam.toDouble * prev) / (4 * ctx).toDouble
+    for (n <- Seq(3, 4)) {
+      val want = corpus.groupBy(_._2).values.flatMap { lang =>
+        // per-language gram TYPE censuses, gram -> count
+        val g = (2 to n).map(k => k -> lang.flatMap(_._3.sliding(k).filter(_.size == k))
+          .groupBy(identity).view.mapValues(_.size.toLong).toMap).toMap
+        // continuation count: distinct (k+1)-gram types ending in s
+        def a(s: Seq[String]): Long = g(s.size + 1).keys.count(_.tail == s)
+        def p(w: Seq[String]): Double = {
+          val lower = (2 until n).foldLeft(a(w.takeRight(1)).toDouble / g(2).size) {
+            (prev, k) =>
+              val s = w.takeRight(k)
+              // the distinct k-grams completing s's middle
+              val mid = g(k + 1).keys.map(_.tail).filter(_.init == s.init)
+              level(a(s), mid.size, mid.toSeq.map(a).sum, prev)
+          }
+          val ctx = g(n).filter(_._1.init == w.init)
+          level(g(n)(w), ctx.size, ctx.values.sum, lower)
+        }
+        lang.filter(_._3.size >= n).map { case (id, _, ws) =>
+          val grams = ws.sliding(n).toSeq
+          id -> ((grams.size.toLong, grams.map(x => micro(p(x))).sum))
+        }
+      }.toMap
+      val got = TextFns.knSums(docs, "doc_id", "text", Seq("lang"), n)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(2), r.getLong(3)))).toMap
+      assert(got == want, s"order $n: got $got want $want")
+    }
+    intercept[IllegalArgumentException](
+      TextFns.knSums(docs, "doc_id", "text", Nil, 1))
+    graft.Materialize.releaseAll()
   }
 
   test("bm25: zero for term-free docs, exact formula on planted counts") {
