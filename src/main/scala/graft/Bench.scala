@@ -79,6 +79,24 @@ object Bench {
   private[graft] def minOfSuccessful(passes: Seq[(Double, Boolean)]): Option[Double] =
     passes.collect { case (t, true) => t }.minOption
 
+  private def jsonNames(names: Seq[String]): String =
+    names.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** The chunked-mode summary line `{head, lists, tail}`. Like the
+    * one-line form it must fit the 1900-char tail budget, but the name
+    * lists (`failed`, `scaling_flags`, ...) are unbounded: past the
+    * budget each is replaced by its count `n_<name>`, as the one-line
+    * form replaces the per-query map by its part count. The full lists
+    * stay in bench_full. */
+  private[graft] def totalLine(head: String, lists: Seq[(String, Seq[String])],
+                               tail: String): String = {
+    def line(field: ((String, Seq[String])) => String) =
+      (head +: lists.map(field) :+ tail).mkString("{", ",", "}")
+    val full = line { case (k, names) => "\"" + k + "\":" + jsonNames(names) }
+    if (full.length <= 1900) full
+    else line { case (k, names) => "\"n_" + k + "\":" + names.size }
+  }
+
   private val scalingExclude =
     Set("d2_jaccard_pairs", "d12_containment_pairs", "d3_minhash_lsh", "d5_dup_clusters",
       "d5b_dup_clusters_dist", "n3_cosine_pairs",
@@ -241,13 +259,13 @@ object Bench {
     val remeasuredJson = remeasured.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    val failed = results.collect { case r if !r.ok => "\"" + r.name + "\"" }
-      .mkString("[", ",", "]")
+    val nameLists = Seq(
+      "failed" -> results.collect { case r if !r.ok => r.name },
+      "scaling_flags" -> flags.toSeq,
+      "scaling_failed" -> scalingFailed.distinct.toSeq)
+    val Seq(failed, flagsJson, scalingFailedJson) = nameLists.map(l => jsonNames(l._2))
     val scalingJson = scaling.map { case (k, r) => "\"" + k + "\":" + r }
       .mkString("{", ",", "}")
-    val flagsJson = flags.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val scalingFailedJson =
-      scalingFailed.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = r3(results.collect { case r if r.ok => r.med }.sum)
     val cold = r3(results.collect { case r if r.ok => r.cold }.sum)
     val nQueries = results.size
@@ -276,8 +294,7 @@ object Bench {
     // "queries_part" chunk lines: a whole-stdout consumer reassembles
     // the full map from the parts; a tail-only consumer still gets the
     // intact total line, exactly as before.
-    val header = s""""unit":"sec","n":$SteadyN,"failed":$failed,"scaling_flags":$flagsJson,"scaling_failed":$scalingFailedJson,"data_ratio":$dr,"sf":"$sfDir","full":"$fullPath""""
-    val oneLine = s"""{"metric":"total","value":$total,$header,"queries":$qs}"""
+    val oneLine = s"""{"metric":"total","value":$total,"unit":"sec","n":$SteadyN,"failed":$failed,"scaling_flags":$flagsJson,"scaling_failed":$scalingFailedJson,"data_ratio":$dr,"sf":"$sfDir","full":"$fullPath","queries":$qs}"""
     if (oneLine.length <= 1900) println(oneLine)
     else {
       val chunks = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
@@ -294,7 +311,9 @@ object Bench {
       chunks.zipWithIndex.foreach { case (c, i) =>
         println(s"""{"metric":"queries_part","part":${i + 1},"of":${chunks.size},"queries":${c.mkString("{", ",", "}")}}""")
       }
-      println(s"""{"metric":"total","value":$total,$header,"n_queries":$nQueries,"queries_parts":${chunks.size}}""")
+      println(totalLine(s""""metric":"total","value":$total,"unit":"sec","n":$SteadyN""",
+        nameLists,
+        s""""data_ratio":$dr,"sf":"$sfDir","full":"$fullPath","n_queries":$nQueries,"queries_parts":${chunks.size}"""))
     }
     spark.stop()
   }

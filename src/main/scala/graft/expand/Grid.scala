@@ -82,10 +82,13 @@ object Grid {
   /** Missing-point discovery (E6/M9): grid points with no row in
     * `store` — a broadcast left-anti equi-join on all axis columns.
     * This is xyzpy's `missing_only` work-skipping
-    * (farming.py:758-766 → case_runner.py:304-344).
+    * (farming.py:758-766 → case_runner.py:304-344). Duplicate keys on
+    * the store side do not change a left-anti join's result, so the
+    * store's keys are not de-duplicated first (that would add an
+    * aggregate and a shuffle over the whole key set).
     */
   def missing(grid: DataFrame, store: DataFrame, keys: Seq[String]): DataFrame =
-    grid.join(store.select(keys.map(col): _*).distinct(), keys, "left_anti")
+    grid.join(store.select(keys.map(col): _*), keys, "left_anti")
 
   /** Seeded-random evaluation order (E4, combo_runner.py:220-224):
     * relationally order is irrelevant — exposed for load-balancing a

@@ -10,10 +10,13 @@ import org.apache.spark.sql.functions._
   * results in, skip already-harvested points (farming.py:413-766).
   *
   * The store is a parquet directory keyed by the axis columns.
-  * `harvestCombos(missingOnly = true)` is the work-skipping path: a
-  * broadcast left-anti join of the requested grid against the store
-  * keys prunes evaluation to unvisited points — xyzpy's core
-  * incremental-compute feature (farming.py:758-766).
+  * `harvestCombos(missingOnly = true)` is the work-skipping path
+  * (xyzpy's core incremental-compute feature, farming.py:758-766): one
+  * insert-only commit ([[ParquetStore.insertMissing]]) anti-joins the
+  * requested grid against the store keys under the write lease,
+  * evaluates only the unvisited points and appends them; no stored
+  * file is rewritten. Every other harvest is an upsert through
+  * [[ParquetStore.mergeIn]], which rewrites the partitions it touches.
   */
 final class Harvester(val runner: Runner, val store: ParquetStore) {
 
@@ -29,20 +32,19 @@ final class Harvester(val runner: Runner, val store: ParquetStore) {
         store.coords(name).toDF(name)
     }
 
-  /** Harvest a combo sweep: expand → (optionally drop already-stored
-    * points) → evaluate → merge into the store → return the full store.
+  /** Harvest a combo sweep and return the full store. With
+    * `missingOnly`, only the points the store lacks are evaluated and
+    * appended ([[ParquetStore.insertMissing]]); `mode` has no effect
+    * there, since those keys are new. Otherwise every point is
+    * evaluated and merged in under `mode`.
     */
   def harvestCombos(combos: Seq[(String, Option[Seq[Any]])],
                     missingOnly: Boolean = false,
                     mode: Merge.Mode = Merge.NoConflicts): DataFrame = {
-    val grid0 = Grid.expandDFs(resolveAxes(combos))
-    val grid = if (missingOnly) store.missing(grid0) else grid0
-    if (grid.isEmpty) store.load()
-    else {
-      val out = runner.fn(grid)
-      store.mergeIn(out, mode)
-      store.load()
-    }
+    val grid = Grid.expandDFs(resolveAxes(combos))
+    if (missingOnly) store.insertMissing(grid, runner.fn)
+    else if (!grid.isEmpty) store.mergeIn(runner.fn(grid), mode)
+    store.load()
   }
 
   /** Harvest explicit cases (farming.py:768-790). */

@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Merge conflict found by the strict (no-overwrite) merge mode. */
 final class MergeConflictException(msg: String) extends RuntimeException(msg)
@@ -9,6 +10,15 @@ final class MergeConflictException(msg: String) extends RuntimeException(msg)
 /** A second writer tried to mutate a store while another held the
   * write lease. */
 final class ConcurrentWriteException(msg: String) extends RuntimeException(msg)
+
+/** A write whose column type differs from the stored one: appended as
+  * is, it would leave files that make every later read of the store
+  * fail. Thrown before anything is written. */
+final class StoreSchemaException(val path: String, val column: String,
+                                 val storeType: DataType, val deltaType: DataType)
+  extends RuntimeException(
+    s"column '$column' is ${deltaType.simpleString} in the rows to write but " +
+      s"${storeType.simpleString} in the store at '$path'; nothing was written")
 
 /** Single-writer lease for store mutations (round-7 directive).
   *
@@ -231,8 +241,10 @@ object Merge {
   * a temp dir + atomic rename (xyzpy's backup-and-rename,
   * farming.py:549-580 — Spark's output committer makes the write
   * itself atomic; the rename swap makes the *replacement* atomic).
-  * At scale: `partitionBy` the leading axis columns so `missing_only`
-  * anti-joins and merges prune partitions.
+  * At scale: `partitionBy` the leading axis columns so merges prune
+  * partitions. A `missing_only` harvest ([[insertMissing]]) rewrites no
+  * stored file at all: its keys are new by construction, so it commits
+  * as one append.
   */
 final class ParquetStore(val spark: SparkSession, val path: String,
                          val keys: Seq[String],
@@ -322,15 +334,22 @@ final class ParquetStore(val spark: SparkSession, val path: String,
     * store row that can match (or conflict with) a delta key shares
     * the delta's partition values by definition. The full
     * read-merge-swap path remains for unpartitioned stores and for
-    * deltas that introduce new value columns (a partition-scoped write
-    * of a widened schema would leave untouched partitions narrow). */
-  def mergeIn(neu: DataFrame, mode: Merge.Mode = Merge.NoConflicts): Unit = locked("mergeIn") {
+    * deltas that introduce new or re-typed value columns (a
+    * partition-scoped write of a changed schema would leave untouched
+    * partitions on the old one).
+    *
+    * This is the upsert path: it rewrites every touched partition (or
+    * the whole store). Deltas whose keys are new by construction take
+    * [[insertMissing]], which rewrites nothing. */
+  def mergeIn(neu: DataFrame, mode: Merge.Mode = Merge.NoConflicts): Unit =
+    locked("mergeIn")(mergeInUnlocked(neu, mode))
+
+  private def mergeInUnlocked(neu: DataFrame, mode: Merge.Mode): Unit = {
     if (!exists) writer(neu).parquet(path)
     else {
       val old = load()
       val prunable = partitionCols.nonEmpty &&
-        partitionCols.forall(keys.contains) &&
-        neu.columns.forall(old.columns.contains)
+        partitionCols.forall(keys.contains) && fitsStored(old.schema, neu.schema)
       if (!prunable) {
         // replaceWith writes to <path>.__tmp BEFORE touching <path> —
         // the write is the materialization point, and a NoConflicts
@@ -368,11 +387,75 @@ final class ParquetStore(val spark: SparkSession, val path: String,
     }
   }
 
-  /** M11 `Sampler.add_df`: append rows (long table, no alignment). */
+  /** M11 `Sampler.add_df`: append rows (long table, no alignment).
+    * Rows whose column types differ from the store's are refused with
+    * a [[StoreSchemaException]] before anything is written. */
   def append(rows: DataFrame): Unit = locked("append") {
     if (!exists) writer(rows).parquet(path)
-    else rows.write.mode(SaveMode.Append).partitionBy(partitionCols: _*).parquet(path)
+    else {
+      retyped(load().schema, rows.schema).headOption.foreach {
+        case (c, stored, given) => throw new StoreSchemaException(path, c, stored, given)
+      }
+      appendUnlocked(rows)
+    }
   }
+
+  private def appendUnlocked(rows: DataFrame): Unit =
+    rows.write.mode(SaveMode.Append).partitionBy(partitionCols: _*).parquet(path)
+
+  /** Columns `neu` shares with the stored schema `old` under another
+    * type, as (name, stored type, new type); nullability aside.
+    * Partition columns are exempt: their values live in directory
+    * names, and a read infers their type from those. */
+  private def retyped(old: StructType, neu: StructType): Seq[(String, DataType, DataType)] =
+    neu.fields.toSeq.flatMap { f =>
+      old.fields.find(_.name == f.name)
+        .filter(o => !partitionCols.contains(f.name) &&
+          !DataType.equalsIgnoreNullability(o.dataType, f.dataType))
+        .map(o => (f.name, o.dataType, f.dataType))
+    }
+
+  /** `neu` adds no column to the stored schema `old` and re-types none. */
+  private def fitsStored(old: StructType, neu: StructType): Boolean =
+    neu.fieldNames.forall(old.fieldNames.contains) && retyped(old, neu).isEmpty
+
+  /** M9 `missing_only` as one insert-only commit: evaluate `eval` on the
+    * points of `grid` the store does not hold yet, and append them.
+    *
+    * Under the write lease, the grid is anti-joined against the store's
+    * keys once; the missing keys are cached for the commit, and an
+    * emptiness test on the cache (it builds the cache whole, then reads
+    * one row) decides "nothing to do" without running `eval` or writing
+    * anything (an empty append would leave an empty part file in an
+    * unpartitioned store). `eval` then runs once on those keys, and the
+    * result is appended under the store's `partitionBy`. The new keys
+    * are disjoint from the stored ones, so no stored file is read back
+    * or rewritten, there is nothing to conflict with, and the cost is
+    * one store-key scan plus an O(delta) write, partitioned or not.
+    *
+    * A delta whose schema adds a column or re-types one falls back to
+    * [[mergeIn]]'s full rewrite, so the widened schema reaches every
+    * file; a stored column the delta lacks is appended as NULLs, as a
+    * merge would fill it. On a store that does not exist yet the whole
+    * grid is evaluated and written. */
+  def insertMissing(grid: DataFrame, eval: DataFrame => DataFrame): Unit =
+    locked("insertMissing") {
+      if (!exists) writer(eval(grid)).parquet(path)
+      else {
+        val old = load()
+        graft.Materialize.withReuse(graft.expand.Grid.missing(grid, old, keys)) { todo =>
+          if (!todo.isEmpty) {
+            val neu = eval(todo)
+            if (fitsStored(old.schema, neu.schema))
+              appendUnlocked(neu.select(old.schema.fields.toIndexedSeq.map { f =>
+                if (neu.columns.contains(f.name)) col(f.name)
+                else lit(null).cast(f.dataType).as(f.name)
+              }: _*))
+            else mergeInUnlocked(neu, Merge.NoConflicts)
+          }
+        }
+      }
+    }
 
   /** M7 `expand_dims`: add a constant coordinate to the whole store.
     * (No checkpoint: replaceWith's tmp write reads the intact store.) */
@@ -389,7 +472,10 @@ final class ParquetStore(val spark: SparkSession, val path: String,
   def coords(axis: String): DataFrame =
     load().select(axis).distinct().orderBy(axis)
 
-  /** M9 `missing_only`: grid points not yet in the store. */
+  /** M9 `missing_only`: grid points not yet in the store, as a lazy
+    * anti-join against the store read now. A harvest that evaluates
+    * and commits them in one step uses [[insertMissing]], which runs
+    * this anti-join under the write lease. */
   def missing(grid: DataFrame): DataFrame =
     if (!exists) grid
     else graft.expand.Grid.missing(grid, load(), keys)

@@ -48,6 +48,19 @@ class BenchFlagSpec extends AnyFunSuite {
       mainTimes = Seq(1.0), smallTimes = Seq(0.0), dataRatio = 1.0))
   }
 
+  test("total line: name lists that would pass 1900 chars become counts") {
+    val head = "\"metric\":\"total\",\"value\":1.0"
+    val tail = "\"n_queries\":185,\"queries_parts\":3"
+    val short = Bench.totalLine(head, Seq("failed" -> Seq("q1"), "scaling_flags" -> Nil), tail)
+    assert(short == "{" + head + ",\"failed\":[\"q1\"],\"scaling_flags\":[]," + tail + "}")
+    val many = (1 to 185).map(i => f"q$i%03d_some_long_query_name")
+    val long = Bench.totalLine(head,
+      Seq("failed" -> many, "scaling_flags" -> many.take(2), "scaling_failed" -> Nil), tail)
+    assert(long.length <= 1900, long.length)
+    assert(long == "{" + head +
+      ",\"n_failed\":185,\"n_scaling_flags\":2,\"n_scaling_failed\":0," + tail + "}")
+  }
+
   test("remeasured min: failed passes never count; all-fail yields no time") {
     // a failed pass's short elapsed time must not become the min
     assert(Bench.minOfSuccessful(Seq((9.0, true), (0.1, false), (7.5, true)))

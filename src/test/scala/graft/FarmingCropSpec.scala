@@ -2,9 +2,9 @@ package graft
 
 import graft.batch.Crop
 import graft.expand.Grid
-import graft.run.{Farming, Runner}
+import graft.run.{Farming, Harvester, Runner}
 import graft.spec._
-import graft.store.ParquetStore
+import graft.store.{ConcurrentWriteException, ParquetStore}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -47,6 +47,44 @@ class FarmingSpec extends SparkSpec {
     h.harvestCombos(Seq("a" -> Some(Seq(1L, 2L))))
     val again = h.harvestCombos(Seq("a" -> Some(Seq(1L, 2L))), missingOnly = true)
     assert(again.count() == 2)
+  }
+
+  /** A harvester over `a × b` whose evaluation counts, in a UDF, every
+    * point it evaluates; `built` records that `fn` was called at all. */
+  private final class CountingHarvester(path: String) {
+    val evaluated = spark.sparkContext.longAccumulator("evaluated")
+    @volatile var built = false
+    private val y = { val acc = evaluated; udf { (a: Long, b: Long) => acc.add(1); a * b } }
+    val h = new Harvester(new Runner({ df => built = true; df.withColumn("y", y(col("a"), col("b"))) }),
+      new ParquetStore(spark, path, Seq("a", "b")))
+    def harvest(as: Seq[Long], bs: Seq[Long]) =
+      h.harvestCombos(Seq("a" -> Some(as), "b" -> Some(bs)), missingOnly = true)
+  }
+
+  test("Harvester: missing_only evaluates only the missing points, once each") {
+    val c = new CountingHarvester(tmp() + "/ev")
+    assert(c.harvest(Seq(1L, 2L), Seq(10L, 20L)).count() == 4)
+    assert(c.evaluated.value == 4)
+    c.evaluated.reset()
+    val ds = c.harvest(Seq(1L, 2L, 3L), Seq(10L, 20L, 30L))
+    assert(c.evaluated.value == 5) // 9 requested, 4 stored
+    assert(ds.count() == 9)
+    assert(ds.filter(col("y") =!= col("a") * col("b")).count() == 0)
+    c.evaluated.reset()
+    c.harvest(Seq(1L, 3L), Seq(30L))  // fully stored: nothing to evaluate
+    assert(c.evaluated.value == 0)
+  }
+
+  test("Harvester: missing_only under a foreign lease fails before evaluating") {
+    val path = tmp() + "/lease"
+    val c = new CountingHarvester(path)
+    c.harvest(Seq(1L), Seq(10L))
+    c.built = false; c.evaluated.reset()
+    val lock = new java.io.FileWriter(s"$path.__lock")
+    lock.write("pid=9999 op=mergeIn at=2026-08-13T00:00:00Z host=other"); lock.close()
+    assertThrows[ConcurrentWriteException](c.harvest(Seq(1L, 2L), Seq(10L)))
+    assert(!c.built && c.evaluated.value == 0, "eval ran without the lease")
+    assert(c.h.store.load().count() == 1)
   }
 
   test("Sampler: n rows appended per sample call, all from the grid") {

@@ -98,6 +98,25 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("property: missing(grid, store) ignores duplicate store keys") {
+    // the store side is not de-duplicated before the left-anti join;
+    // duplicated keys (with differing values) must give the same missing
+    // set as the de-duplicated key set, and as a plain-Scala model
+    val storeGen = Gen.listOf(for {
+      a <- Gen.choose(1L, 12L); b <- Gen.choose(1L, 12L); copies <- Gen.choose(1, 3)
+    } yield (a, b, copies))
+    forAll(axisGen, axisGen, storeGen) { (as, bs, keys) =>
+      val grid = Grid.expand(spark, ComboSpec.of("a" -> as, "b" -> bs))
+      val dup = keys.flatMap { case (a, b, n) => (1 to n).map(i => (a, b, i.toDouble)) }
+        .toDF("a", "b", "v")
+      val miss = collectSorted(Grid.missing(grid, dup, Seq("a", "b")))
+      assert(miss == collectSorted(Grid.missing(grid, dup.select("a", "b").distinct(), Seq("a", "b"))))
+      val stored = keys.map { case (a, b, _) => Seq[Any](a, b) }.toSet
+      val model = for (a <- as; b <- bs; k = Seq[Any](a, b) if !stored(k)) yield k
+      assert(miss == model.sortBy(_.mkString("|")))
+    }
+  }
+
   test("property: merge is idempotent and NewWins/OldWins agree on disjoint stores") {
     forAll(axisGen, axisGen) { (as, bs) =>
       val a = as.map(x => (x, x * 2.0)).toDF("k", "v")

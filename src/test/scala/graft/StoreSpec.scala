@@ -114,6 +114,21 @@ class ParquetStoreSpec extends SparkSpec {
     new ParquetStore(spark, s"$dir/store", Seq("a", "b"))
   }
 
+  /** Fingerprint of every parquet data file under `root`: path ->
+    * (length, mtime, content digest). */
+  private def files(root: String): Map[String, (Long, Long, String)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      else Seq(f)
+    walk(new java.io.File(root))
+      .filter(f => f.getName.endsWith(".parquet"))
+      .map { f =>
+        val digest = java.security.MessageDigest.getInstance("SHA-256")
+          .digest(Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
+        f.getPath -> ((f.length(), f.lastModified(), digest))
+      }.toMap
+  }
+
   test("M4 harvest cycle: create, merge-in, missing-only work skipping") {
     val st = tmpStore()
     assert(!st.exists)
@@ -163,21 +178,13 @@ class ParquetStoreSpec extends SparkSpec {
       .toDF("a", "b", "v"))
 
     // fingerprint every data file in the untouched partitions
-    def files(): Map[String, (Long, Long)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(s"$dir/store"))
-        .filter(f => f.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
-    }
-    val before = files()
+    val before = files(s"$dir/store")
     Thread.sleep(1100) // ensure an overwrite would move lastModified
 
     // delta touches only partition a=3 (new b row + an agreeing cell)
     st.mergeIn(Seq((3L, 4L, 34.0), (3L, 1L, 31.0)).toDF("a", "b", "v"))
 
-    val after = files()
+    val after = files(s"$dir/store")
     val untouchedBefore = before.filterNot(_._1.contains("a=3"))
     val untouchedAfter = after.filterNot(_._1.contains("a=3"))
     assert(untouchedAfter == untouchedBefore,
@@ -225,6 +232,81 @@ class ParquetStoreSpec extends SparkSpec {
     val all = partsRead(st.load())
     assert(pruned == 1 && all == 5,
       s"pruned scan enumerated $pruned of $all partitions")
+  }
+
+  /** One partitioned and one unpartitioned store over keys (a, b),
+    * each holding v = a * 10 + b for a in 1..3, b in 1..2. */
+  private def seededStores(): Seq[ParquetStore] = {
+    val dir = Files.createTempDirectory("graft-insert").toString
+    Seq(new ParquetStore(spark, s"$dir/part", Seq("a", "b"), partitionCols = Seq("a")),
+      new ParquetStore(spark, s"$dir/flat", Seq("a", "b"))).map { st =>
+      st.mergeIn((1L to 3L).flatMap(a => (1L to 2L).map(b => (a, b, a * 10.0 + b)))
+        .toDF("a", "b", "v"))
+      st
+    }
+  }
+
+  private def grid(as: Seq[Long], bs: Seq[Long]) =
+    graft.expand.Grid.expandDFs(Seq(as.toDF("a"), bs.toDF("b")))
+
+  private val tenAPlusB = (df: org.apache.spark.sql.DataFrame) =>
+    df.withColumn("v", col("a") * 10.0 + col("b"))
+
+  test("insertMissing appends: every stored file stays byte-identical, " +
+       "and a fully stored grid writes no file") {
+    seededStores().foreach { st =>
+      val before = files(st.path)
+      Thread.sleep(1100) // a rewrite would move lastModified
+      st.insertMissing(grid(Seq(2L, 4L), Seq(1L, 2L, 3L)), tenAPlusB)
+      val after = files(st.path)
+      assert(before.forall { case (f, fp) => after.get(f).contains(fp) },
+        s"${st.path}: a stored file was rewritten")
+      assert(after.size > before.size)
+      val got = st.load().select("a", "b", "v").as[(Long, Long, Double)].collect()
+      assert(got.length == 6 + 4 && got.forall { case (a, b, v) => v == a * 10.0 + b },
+        got.mkString(","))
+      st.insertMissing(grid(Seq(1L, 4L), Seq(1L, 2L)), tenAPlusB) // all stored
+      assert(files(st.path) == after, s"${st.path}: a no-op harvest wrote files")
+    }
+  }
+
+  test("insertMissing falls back to the full rewrite for a new or re-typed column; " +
+       "a column the delta lacks is appended as NULL") {
+    seededStores().foreach { st =>
+      val before = files(st.path)
+      st.insertMissing(grid(Seq(4L), Seq(1L)), df => tenAPlusB(df).withColumn("w", lit(1.0)))
+      assert(files(st.path).keySet.intersect(before.keySet).isEmpty,
+        s"${st.path}: new column did not rewrite the store")
+      assert(st.load().columns.toSet == Set("a", "b", "v", "w"))
+      assert(st.load().filter($"w".isNotNull).count() == 1)
+      // a float v: widened back to the stored double in every file
+      st.insertMissing(grid(Seq(5L), Seq(1L)),
+        df => tenAPlusB(df).withColumn("v", col("v").cast("float")))
+      assert(st.load().schema("v").dataType == org.apache.spark.sql.types.DoubleType)
+      assert(st.load().count() == 8)
+      // no w in the delta: still an append, w NULL on the new row
+      val widened = files(st.path)
+      st.insertMissing(grid(Seq(6L), Seq(1L)), tenAPlusB)
+      val appended = files(st.path)
+      assert(widened.forall { case (f, fp) => appended.get(f).contains(fp) })
+      assert(st.load().filter($"a" === 6L && $"w".isNull && $"v" === 61.0).count() == 1)
+    }
+  }
+
+  test("append refuses a re-typed column by name, type and path; store untouched") {
+    seededStores().foreach { st =>
+      val before = files(st.path)
+      val e = intercept[graft.store.StoreSchemaException](
+        st.append(Seq((9L, 9L, 1.5f)).toDF("a", "b", "v")))
+      assert(e.column == "v" && e.getMessage.contains("float") &&
+        e.getMessage.contains("double") && e.getMessage.contains(st.path), e.getMessage)
+      assertThrows[graft.store.StoreSchemaException](
+        st.append(Seq((9L, "9", 1.5)).toDF("a", "b", "v")))
+      assert(files(st.path) == before)
+      assert(st.load().count() == 6)
+      st.append(Seq((9L, 9L, 99.0)).toDF("a", "b", "v")) // matching types pass
+      assert(st.load().count() == 7)
+    }
   }
 
   test("M11: append grows the long table") {
