@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.functions.TextFns
+import graft.store.{StoreWrite, WriteLease}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,8 +14,10 @@ import org.apache.spark.sql.functions._
   * the dedup side-indexes a 100 TB refresh needs).
   *
   * Four catalog tables, all written ONCE at corpus build and reused by
-  * every delta (the BucketedStore discipline, `store/Store.scala` —
-  * bucketed+sorted tables join/aggregate store-side with NO exchange):
+  * every delta, through the bucket-aligned catalog-table writer
+  * [[graft.store.StoreWrite.writeBucketed]] that [[graft.store.BucketedStore]]
+  * uses too (bucketed+sorted tables join/aggregate store-side with NO
+  * exchange), under one [[graft.store.WriteLease]] for all of them:
   *
   *  - `<prefix>_corpus`  (doc_id, <keep cols>, fp): the surviving
   *    corpus rows, bucketed by fp.
@@ -57,39 +60,15 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
   private val shinglesT = s"${prefix}_shingles"
   private val tombsT = s"${prefix}_tombs"
 
-  private def lockPath = graft.store.WriteLease.lockPathFor(
-    spark.conf.get("spark.sql.warehouse.dir") + s"/graft-snap-$prefix")
-
-  /** Single-writer lease over all four tables (the store contract): a
-    * concurrent build/commit fails loudly, never silently interleaves. */
-  private def locked[T](op: String)(body: => T): T = {
-    val fs = lockPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.store.WriteLease.withLease(fs, lockPath, op)(body)
-  }
+  /** What the single-writer lease over all five tables is keyed on
+    * (the store contract): a concurrent build/commit fails loudly,
+    * never silently interleaves. */
+  private[graft] val leaseDest =
+    spark.conf.get("spark.sql.warehouse.dir") + s"/graft-snap-$prefix"
 
   private def writeBucketed(df: DataFrame, tbl: String,
-                            keys: Seq[String], mode: SaveMode): Unit = {
-    // align the write with the bucket spec (optimization r20, guide
-    // §6): repartition(nBuckets, keys) uses the same murmur3 pmod as
-    // the bucketing, so each task holds exactly one bucket and writes
-    // ONE file — without it every upstream task wrote a file per
-    // bucket it touched (32 tasks × 8 buckets ≈ 250 tiny files per
-    // table), paying per-file open cost on every later probe of the
-    // store. Measured (sf0.1 store build): sigs 3.1 → 0.9 s,
-    // shingles 2.0 → 0.9 s per write; table CONTENT is identical —
-    // only file layout changes.
-    df.repartition(nBuckets, keys.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(mode)
-      .bucketBy(nBuckets, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
-      .format("parquet").saveAsTable(tbl)
-    // the write may run on a DIFFERENT SparkSession than `spark` (a
-    // foreachBatch micro-batch executes on a session CLONE, and `df`
-    // carries it) — that session's saveAsTable does not invalidate
-    // THIS session's cached table relation, so later reads through
-    // `spark.table` would list the pre-append files forever. Refresh
-    // unconditionally: metadata-only, and a no-op when sessions match.
-    spark.catalog.refreshTable(tbl)
-  }
+                            keys: Seq[String], mode: SaveMode): Unit =
+    StoreWrite.writeBucketed(spark, df, tbl, nBuckets, keys, mode)
 
   def corpus(): DataFrame = spark.table(corpusT)
 
@@ -129,17 +108,16 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
     * leave the candidate space.
     */
   def takedown(ids: DataFrame, idCol: String): Unit =
-    locked("snapshot-takedown") {
+    WriteLease.withLease(spark, leaseDest, "snapshot-takedown") {
       // id stored AS WRITTEN — a long cast would NULL out string ids
       // and the anti-join would silently erase nothing (review r13)
       val out = ids.select(col(idCol).as("id")).distinct()
-      if (!spark.catalog.tableExists(tombsT)) {
-        val p = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir") + s"/$tombsT")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
+      if (spark.catalog.tableExists(tombsT))
+        writeBucketed(out, tombsT, Seq("id"), SaveMode.Append)
+      else {
+        StoreWrite.dropTable(spark, tombsT) // a prior session's location
         writeBucketed(out, tombsT, Seq("id"), SaveMode.ErrorIfExists)
-      } else writeBucketed(out, tombsT, Seq("id"), SaveMode.Append)
+      }
     }
 
   /** Anti-join the tombstone sliver (no-op when none exists). */
@@ -155,37 +133,29 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
     * persisted shingle table.
     */
   def writeCorpus(docs: DataFrame, idCol: String, textCol: String,
-                  keepCols: Seq[String] = Nil): Unit = locked("snapshot-build") {
-    // tombstones clear too: rebuild IS the compaction point
-    Seq(corpusT, seenT, sigsT, shinglesT, tombsT).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      // a FRESH session's catalog doesn't know a previous session's
-      // managed table, so DROP alone leaves the location behind and
-      // the create fails with LOCATION_ALREADY_EXISTS (the h2 pattern)
-      val p = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir") + s"/$t")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+                  keepCols: Seq[String] = Nil): Unit =
+    WriteLease.withLease(spark, leaseDest, "snapshot-build") {
+      // tombstones clear too: rebuild IS the compaction point
+      Seq(corpusT, seenT, sigsT, shinglesT, tombsT).foreach(StoreWrite.dropTable(spark, _))
+      val fp = TextFns.fingerprint(col(textCol))
+      val w = Window.partitionBy(fp).orderBy(col(idCol))
+      val exact = graft.Materialize.reuse(
+        docs.withColumn("fp", fp)
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn"))
+      val sh = Dedup.hashedShingles(exact, idCol, textCol, n, Nil)
+      val banded = graft.Materialize.reuse(Dedup.minHashBanded(sh, bands, rows))
+      val drops = Dedup.nearDupDrops(
+        Dedup.verifyJaccard(Dedup.bandedPairs(banded, bucketCap), sh, threshold))
+      val surv = exact.join(
+        drops.select(col("drop_id").as(idCol)), Seq(idCol), "left_anti")
+      writeBucketed(surv.select((idCol +: keepCols :+ "fp").map(col): _*),
+        corpusT, Seq("fp"), SaveMode.ErrorIfExists)
+      writeBucketed(exact.select(col(idCol).as("id"), col("fp")),
+        seenT, Seq("fp"), SaveMode.ErrorIfExists)
+      writeBucketed(banded, sigsT, Seq("band", "bucket"), SaveMode.ErrorIfExists)
+      writeBucketed(sh, shinglesT, Seq("id"), SaveMode.ErrorIfExists)
     }
-    val fp = TextFns.fingerprint(col(textCol))
-    val w = Window.partitionBy(fp).orderBy(col(idCol))
-    val exact = graft.Materialize.reuse(
-      docs.withColumn("fp", fp)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn"))
-    val sh = Dedup.hashedShingles(exact, idCol, textCol, n, Nil)
-    val banded = graft.Materialize.reuse(Dedup.minHashBanded(sh, bands, rows))
-    val drops = Dedup.nearDupDrops(
-      Dedup.verifyJaccard(Dedup.bandedPairs(banded, bucketCap), sh, threshold))
-    val surv = exact.join(
-      drops.select(col("drop_id").as(idCol)), Seq(idCol), "left_anti")
-    writeBucketed(surv.select((idCol +: keepCols :+ "fp").map(col): _*),
-      corpusT, Seq("fp"), SaveMode.ErrorIfExists)
-    writeBucketed(exact.select(col(idCol).as("id"), col("fp")),
-      seenT, Seq("fp"), SaveMode.ErrorIfExists)
-    writeBucketed(banded, sigsT, Seq("band", "bucket"), SaveMode.ErrorIfExists)
-    writeBucketed(sh, shinglesT, Seq("id"), SaveMode.ErrorIfExists)
-  }
 
   /** Banded candidate pairs DELTA-vs-(STORE ∪ DELTA): the left side is
     * always a delta row, so no store-internal pair is ever generated
@@ -284,7 +254,7 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
       .select(col("id").as(idCol))
     val surv = dNew.join(drops, Seq(idCol), "left_anti")
     if (!commit) surv.select((idCol +: keepCols).map(col): _*)
-    else locked("snapshot-commit") {
+    else WriteLease.withLease(spark, leaseDest, "snapshot-commit") {
       // truncated for the same recache reason as dNew: surv's lineage
       // reads sigs/shingles, which the appends below update
       val kept = graft.Materialize.truncate(
@@ -311,10 +281,11 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
 }
 
 /** Persisted artifacts of the CONTAINMENT-SKETCH family (d13/d14) —
-  * the [[DedupSnapshot]] discipline applied to the bottom-k sketches:
-  * two catalog tables written once at corpus build and probed by
-  * every refresh, so the store is never re-sketched (the d14
-  * contract, now with a durable home instead of caller-held frames):
+  * the [[DedupSnapshot]] discipline (one lease, the shared
+  * [[graft.store.StoreWrite.writeBucketed]] writer) applied to the
+  * bottom-k sketches: two catalog tables written once at corpus build
+  * and probed by every refresh, so the store is never re-sketched (the
+  * d14 contract, now with a durable home instead of caller-held frames):
   *
   *  - `<prefix>_sk`    (id, sz, sk array<bigint>), bucketed by id —
   *    the [[Dedup.bottomKSketches]] table (verify side).
@@ -345,41 +316,21 @@ final class SketchStore(val spark: SparkSession, val prefix: String,
   private val skT = s"${prefix}_sk"
   private val idxT = s"${prefix}_skidx"
 
-  private def lockPath = graft.store.WriteLease.lockPathFor(
-    spark.conf.get("spark.sql.warehouse.dir") + s"/graft-sketch-$prefix")
-
-  private def locked[T](op: String)(body: => T): T = {
-    val fs = lockPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.store.WriteLease.withLease(fs, lockPath, op)(body)
-  }
+  /** What the single-writer lease over both tables is keyed on. */
+  private[graft] val leaseDest =
+    spark.conf.get("spark.sql.warehouse.dir") + s"/graft-sketch-$prefix"
 
   private def writeBucketed(df: DataFrame, tbl: String,
-                            keys: Seq[String], mode: SaveMode): Unit = {
-    // bucket-spec-aligned write — see DedupSnapshot.writeBucketed (one
-    // file per bucket instead of one per (task, bucket); content
-    // identical, measured 2-6x faster store writes at sf0.1)
-    df.repartition(nBuckets, keys.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(mode)
-      .bucketBy(nBuckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .format("parquet").saveAsTable(tbl)
-    // foreachBatch clones the session (see DedupSnapshot.writeBucketed)
-    spark.catalog.refreshTable(tbl)
-  }
+                            keys: Seq[String], mode: SaveMode): Unit =
+    StoreWrite.writeBucketed(spark, df, tbl, nBuckets, keys, mode)
 
   def sketches(): DataFrame = spark.table(skT)
   def index(): DataFrame = spark.table(idxT)
 
   /** Full (re)build: sketch `docs` once, persist table + index. */
   def build(docs: DataFrame, idCol: String, textCol: String): Unit =
-    locked("sketch-build") {
-      Seq(skT, idxT).foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        val p = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir") + s"/$t")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
+    WriteLease.withLease(spark, leaseDest, "sketch-build") {
+      Seq(skT, idxT).foreach(StoreWrite.dropTable(spark, _))
       val sk = graft.Materialize.reuse(
         Dedup.bottomKSketches(docs, idCol, textCol, n, k))
       writeBucketed(sk, skT, Seq("id"), SaveMode.ErrorIfExists)
@@ -415,7 +366,7 @@ final class SketchStore(val spark: SparkSession, val prefix: String,
       minusDelta(sketches()), minusDelta(index()), dsk,
       k, threshold, bucketCap, salt)
     if (!commit) pairs
-    else locked("sketch-commit") {
+    else WriteLease.withLease(spark, leaseDest, "sketch-commit") {
       val out = graft.Materialize.truncate(pairs)
       def appendFresh(df: DataFrame, tbl: String, keys: Seq[String]): Unit = {
         val fresh =

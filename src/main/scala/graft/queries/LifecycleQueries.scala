@@ -306,11 +306,7 @@ object LifecycleQueries {
         .filter(col("l_returnflag").isin(flags: _*))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(sum("l_quantity").as("qty"))
-      s.sql("DROP TABLE IF EXISTS graft_h2_store")
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val p = new org.apache.hadoop.fs.Path(s"$wh/graft_h2_store")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+      graft.store.StoreWrite.dropTable(s, "graft_h2_store")
       val bs = new graft.store.BucketedStore(s, "graft_h2_store",
         Seq("l_returnflag", "l_linestatus"), nBuckets = 4)
       bs.mergeIn(sweep(Seq("A", "N")))

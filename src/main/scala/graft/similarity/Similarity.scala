@@ -745,10 +745,7 @@ object Similarity {
       * the physical store (the compaction point).
       */
     def delete(ids: DataFrame, idCol: String, path: String): Unit = {
-      val spark = ids.sparkSession
-      val lock = graft.store.WriteLease.lockPathFor(path)
-      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.store.WriteLease.withLease(fs, lock, "index-delete") {
+      graft.store.WriteLease.withLease(ids.sparkSession, path, "index-delete") {
         ids.select(col(idCol).cast("long").as("id")).distinct()
           .write.mode("append").parquet(tombstonePath(path).toString)
       }
@@ -811,9 +808,7 @@ object Similarity {
                path: String, refitAt: Double = 0.5,
                skipTombstoned: Boolean = false): AppendResult = {
       val spark = delta.sparkSession
-      val lock = graft.store.WriteLease.lockPathFor(path)
-      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.store.WriteLease.withLease(fs, lock, "index-append") {
+      graft.store.WriteLease.withLease(spark, path, "index-append") {
         val h = load(spark, path)
         val dedup = delta.dropDuplicates(idCol)
         // tombstone probe: read the (sliver) table ONCE, and skip the
@@ -872,10 +867,8 @@ object Similarity {
       */
     def refit(spark: SparkSession, path: String, idCol: String,
               vecCol: String, kLists: Int, m: Int, kCodes: Int): Handle = {
-      val dest = new org.apache.hadoop.fs.Path(path)
-      val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
       var rebuilt: Handle = null
-      graft.store.WriteLease.stageAndSwap(fs, dest, "index-refit",
+      graft.store.WriteLease.stageAndSwap(spark, path, "index-refit",
         "ANN index") { tmp =>
         val raw = liveCorpus(spark, path, idCol).select(col(idCol), col(vecCol))
         rebuilt = build(raw, idCol, vecCol, tmp.toString, kLists, m, kCodes)

@@ -68,9 +68,7 @@ object NetCDF3Sink {
     // via WriteLease.stageAndSwap): concurrent writers throw
     // ConcurrentWriteException; a killed write leaves the old file
     // (or none) at `file`, never a truncated one.
-    val dest = new Path(file)
-    val fs = dest.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    graft.store.WriteLease.stageAndSwap(fs, dest, "netcdf-write",
+    graft.store.WriteLease.stageAndSwap(df.sparkSession, file, "netcdf-write",
       "netCDF file") { tmp =>
       GridPrep.withGrid(df, dims) { g =>
         writePrepared(g, df.sparkSession, tmp.toString, dims, version)

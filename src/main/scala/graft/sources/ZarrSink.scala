@@ -103,9 +103,7 @@ object ZarrSink {
     // destination throws ConcurrentWriteException instead of silently
     // interleaving chunk files, and a killed write leaves the OLD
     // store (or nothing) at `path`, never a mix.
-    val dest = new Path(path)
-    val fs = dest.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    graft.store.WriteLease.stageAndSwap(fs, dest, "zarr-write",
+    graft.store.WriteLease.stageAndSwap(df.sparkSession, path, "zarr-write",
       "zarr store") { tmp =>
       writeStore(df, tmp.toString, dims, chunkTargetBytes, compress,
         zarrFormat, shardInnerRows, stringEncoding == "vlen")

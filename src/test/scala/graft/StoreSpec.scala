@@ -1,6 +1,6 @@
 package graft
 
-import graft.store.{Merge, MergeConflictException, ParquetStore}
+import graft.store.{BucketedStore, Merge, MergeConflictException, ParquetStore, StoreWrite}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -252,6 +252,30 @@ class ParquetStoreSpec extends SparkSpec {
   private val tenAPlusB = (df: org.apache.spark.sql.DataFrame) =>
     df.withColumn("v", col("a") * 10.0 + col("b"))
 
+  /** A store as the schema tests drive it: `where` is the name a
+    * [[graft.store.StoreSchemaException]] reports, `root` the directory
+    * holding its files. */
+  private case class Target(where: String, root: String,
+                            load: () => org.apache.spark.sql.DataFrame,
+                            append: org.apache.spark.sql.DataFrame => Unit,
+                            insertMissing: (org.apache.spark.sql.DataFrame,
+                              org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) => Unit)
+
+  /** [[seededStores]] plus a bucketed store partitioned by `a` holding
+    * the same rows, in catalog table `table`. A bucketed store has no
+    * insertMissing: its missing-only harvest is `missing` + `mergeIn`. */
+  private def seededTargets(table: String): Seq[Target] = {
+    StoreWrite.dropTable(spark, table)
+    val bs = new BucketedStore(spark, table, Seq("a", "b"), 2, partitionCols = Seq("a"))
+    bs.mergeIn((1L to 3L).flatMap(a => (1L to 2L).map(b => (a, b, a * 10.0 + b)))
+      .toDF("a", "b", "v"))
+    val loc = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), table).toUri.getPath
+    seededStores().map(st => Target(st.path, st.path, () => st.load(), st.append,
+      st.insertMissing)) :+
+      Target(table, loc, () => bs.load(), bs.append, (g, eval) => bs.mergeIn(eval(bs.missing(g))))
+  }
+
   test("insertMissing appends: every stored file stays byte-identical, " +
        "and a fully stored grid writes no file") {
     seededStores().foreach { st =>
@@ -272,11 +296,11 @@ class ParquetStoreSpec extends SparkSpec {
 
   test("insertMissing falls back to the full rewrite for a new or re-typed column; " +
        "a column the delta lacks is appended as NULL") {
-    seededStores().foreach { st =>
-      val before = files(st.path)
+    seededTargets("ps_insert_widen").foreach { st =>
+      val before = files(st.root)
       st.insertMissing(grid(Seq(4L), Seq(1L)), df => tenAPlusB(df).withColumn("w", lit(1.0)))
-      assert(files(st.path).keySet.intersect(before.keySet).isEmpty,
-        s"${st.path}: new column did not rewrite the store")
+      assert(files(st.root).keySet.intersect(before.keySet).isEmpty,
+        s"${st.where}: new column did not rewrite the store")
       assert(st.load().columns.toSet == Set("a", "b", "v", "w"))
       assert(st.load().filter($"w".isNotNull).count() == 1)
       // a float v: widened back to the stored double in every file
@@ -285,24 +309,24 @@ class ParquetStoreSpec extends SparkSpec {
       assert(st.load().schema("v").dataType == org.apache.spark.sql.types.DoubleType)
       assert(st.load().count() == 8)
       // no w in the delta: still an append, w NULL on the new row
-      val widened = files(st.path)
+      val widened = files(st.root)
       st.insertMissing(grid(Seq(6L), Seq(1L)), tenAPlusB)
-      val appended = files(st.path)
+      val appended = files(st.root)
       assert(widened.forall { case (f, fp) => appended.get(f).contains(fp) })
       assert(st.load().filter($"a" === 6L && $"w".isNull && $"v" === 61.0).count() == 1)
     }
   }
 
   test("append refuses a re-typed column by name, type and path; store untouched") {
-    seededStores().foreach { st =>
-      val before = files(st.path)
+    seededTargets("ps_append_retype").foreach { st =>
+      val before = files(st.root)
       val e = intercept[graft.store.StoreSchemaException](
         st.append(Seq((9L, 9L, 1.5f)).toDF("a", "b", "v")))
       assert(e.column == "v" && e.getMessage.contains("float") &&
-        e.getMessage.contains("double") && e.getMessage.contains(st.path), e.getMessage)
+        e.getMessage.contains("double") && e.getMessage.contains(st.where), e.getMessage)
       assertThrows[graft.store.StoreSchemaException](
         st.append(Seq((9L, "9", 1.5)).toDF("a", "b", "v")))
-      assert(files(st.path) == before)
+      assert(files(st.root) == before)
       assert(st.load().count() == 6)
       st.append(Seq((9L, 9L, 99.0)).toDF("a", "b", "v")) // matching types pass
       assert(st.load().count() == 7)
@@ -380,14 +404,9 @@ class ParquetStoreSpec extends SparkSpec {
 
 class BucketedStoreSpec extends SparkSpec {
   import spark.implicits._
-  import graft.store.BucketedStore
 
   private def fresh(name: String): BucketedStore = {
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val p = new org.apache.hadoop.fs.Path(s"$wh/$name")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true) // stale dir from a prior JVM
+    StoreWrite.dropTable(spark, name) // stale dir from a prior JVM too
     new BucketedStore(spark, name, Seq("k"), 4)
   }
 
@@ -418,11 +437,9 @@ class BucketedStoreSpec extends SparkSpec {
   }
 
   test("partitioned+bucketed mergeIn rewrites only touched partitions") {
-    spark.sql("DROP TABLE IF EXISTS bs_part")
+    StoreWrite.dropTable(spark, "bs_part")
     val wh = spark.conf.get("spark.sql.warehouse.dir")
     val whPath = new org.apache.hadoop.fs.Path(s"$wh/bs_part")
-    val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(whPath)) fs.delete(whPath, true)
     val bs = new BucketedStore(spark, "bs_part", Seq("p", "k"), 4,
       partitionCols = Seq("p"))
     bs.mergeIn((1L to 4L).flatMap(p => (1L to 3L).map(k => (p, k, p * 10.0 + k)))
@@ -538,5 +555,108 @@ class BucketedStoreSpec extends SparkSpec {
         .queryExecution.executedPlan.toString
       assert("Exchange hashpartitioning".r.findAllIn(planFlat).length == 2)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
+  }
+
+  test("a re-typed value column is never cast to the stored type: " +
+       "append refuses it, mergeIn takes the full rewrite") {
+    StoreWrite.dropTable(spark, "bs_retype")
+    val bs = new BucketedStore(spark, "bs_retype", Seq("p", "k"), 2,
+      partitionCols = Seq("p"))
+    bs.mergeIn(Seq((1L, 1L, 1), (1L, 2L, 2)).toDF("p", "k", "v")) // v int
+    val e = intercept[graft.store.StoreSchemaException](
+      bs.append(Seq((1L, 3L, 5.9)).toDF("p", "k", "v")))
+    assert(e.column == "v" && e.getMessage.contains("bs_retype"), e.getMessage)
+    assert(bs.load().count() == 2)
+    bs.mergeIn(Seq((1L, 3L, 2.7)).toDF("p", "k", "v"))
+    assert(bs.load().schema("v").dataType == org.apache.spark.sql.types.DoubleType)
+    assert(bs.load().select("k", "v").as[(Long, Double)].collect().toMap ==
+      Map(1L -> 1.0, 2L -> 2.0, 3L -> 2.7))
+  }
+
+  test("a failed staged rewrite keeps the stage, holding the merged rows, and names it") {
+    val bs = fresh("bs_stage")
+    bs.mergeIn(Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v"))
+    val merged = Merge.merge(bs.load(), Seq((2L, 20.0), (3L, 30.0)).toDF("k", "v"), Seq("k"))
+    val stage = new org.apache.hadoop.fs.Path(
+      Files.createTempDirectory("graft-stage").toString, "stage")
+    val e = intercept[java.io.IOException](StoreWrite.stagedCommit(spark, merged, stage) {
+      _ => throw new IllegalStateException("injected rewrite failure")
+    })
+    assert(e.getMessage.contains(stage.toString), e.getMessage)
+    assert(e.getCause.getMessage == "injected rewrite failure")
+    assert(spark.read.parquet(stage.toString).as[(Long, Double)].collect().toMap ==
+      Map(1L -> 10.0, 2L -> 20.0, 3L -> 30.0))
+    // a commit that succeeds removes the stage
+    StoreWrite.stagedCommit(spark, merged, stage)(_ => ())
+    assert(!new java.io.File(stage.toUri.getPath).exists())
+  }
+}
+
+/** Lease contention for the catalog-table stores: every mutator takes
+  * its artifact's write lease (at [[graft.store.WriteLease.lockPathFor]])
+  * before it writes anything. */
+class StoreLeaseSpec extends SparkSpec {
+  import spark.implicits._
+  import graft.dedup.{DedupSnapshot, SketchStore}
+
+  test("a foreign lease makes every BucketedStore, DedupSnapshot and SketchStore " +
+       "mutator fail loudly, naming breakLease; no table changes") {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again today"),
+      (2L, "completely unrelated store content about streams and sinks"),
+      (3L, "another unrelated store doc mentioning windows and joins"))
+      .toDF("doc_id", "text")
+    val delta = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog again today"),
+      (11L, "fresh delta content that matches nothing in the store"))
+      .toDF("doc_id", "text")
+    StoreWrite.dropTable(spark, "lease_bs")
+    val bs = new BucketedStore(spark, "lease_bs", Seq("k"), 2)
+    bs.mergeIn(Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v"))
+    val snap = new DedupSnapshot(spark, "lease_snap", nBuckets = 2)
+    snap.writeCorpus(docs, "doc_id", "text")
+    val skst = new SketchStore(spark, "lease_sk", nBuckets = 2)
+    skst.build(docs, "doc_id", "text")
+
+    val tables = Seq("lease_bs", "lease_snap_corpus", "lease_snap_seen",
+      "lease_snap_sigs", "lease_snap_shingles", "lease_snap_tombs",
+      "lease_sk_sk", "lease_sk_skidx")
+    def contents(): Map[String, Seq[String]] = tables.map { t =>
+      t -> (if (spark.catalog.tableExists(t))
+        spark.table(t).collect().map(_.toString).sorted.toSeq else Seq("<absent>"))
+    }.toMap
+    val before = contents()
+
+    val mutators: Seq[(String, String, () => Any)] = Seq(
+      ("BucketedStore.mergeIn", bs.leaseDest,
+        () => bs.mergeIn(Seq((3L, 30.0)).toDF("k", "v"))),
+      ("BucketedStore.append", bs.leaseDest,
+        () => bs.append(Seq((3L, 30.0)).toDF("k", "v"))),
+      ("BucketedStore.replaceWith", bs.leaseDest,
+        () => bs.replaceWith(Seq((3L, 30.0)).toDF("k", "v"))),
+      ("BucketedStore.expandDims", bs.leaseDest, () => bs.expandDims("run", "r0")),
+      ("BucketedStore.dropSel", bs.leaseDest, () => bs.dropSel("k", Seq(1L))),
+      ("DedupSnapshot.writeCorpus", snap.leaseDest,
+        () => snap.writeCorpus(delta, "doc_id", "text")),
+      ("DedupSnapshot.takedown", snap.leaseDest,
+        () => snap.takedown(Seq(1L).toDF("doc_id"), "doc_id")),
+      ("DedupSnapshot.ingestDelta(commit = true)", snap.leaseDest,
+        () => snap.ingestDelta(delta, "doc_id", "text", commit = true)),
+      ("SketchStore.build", skst.leaseDest, () => skst.build(delta, "doc_id", "text")),
+      ("SketchStore.ingestDelta(commit = true)", skst.leaseDest,
+        () => skst.ingestDelta(delta, "doc_id", "text", commit = true)))
+
+    mutators.foreach { case (name, dest, mutate) =>
+      val lock = graft.store.WriteLease.lockPathFor(dest)
+      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val out = fs.create(lock, false)
+      out.write("pid=9999 op=foreign host=other".getBytes("UTF-8")); out.close()
+      try {
+        val e = intercept[graft.store.ConcurrentWriteException](mutate())
+        assert(e.getMessage.contains("breakLease") && e.getMessage.contains("pid=9999"),
+          s"$name: ${e.getMessage}")
+      } finally fs.delete(lock, true)
+      assert(contents() == before, s"$name changed a table")
+    }
   }
 }
