@@ -1,8 +1,10 @@
 package graft
+import graft.stats.Benchmarking
 import org.apache.spark.sql.SparkSession
 
-/** Per-round benchmark: every registered query against
-  * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
+/** Per-round benchmark: every registered query (or the comma-separated
+  * list in `args(0)`) against SPARK_GRAFT_SF_DIR, one JSON line on
+  * stdout.
   *
   * Queries are forced through the `noop` sink — a bare `count()` lets
   * Catalyst prune the projections (a map-only query would measure an
@@ -28,9 +30,16 @@ import org.apache.spark.sql.SparkSession
   * when the per-query map no longer fits that line — by size-safe
   * `queries_part` chunk lines carrying the per-query medians.
   *
+  * Per-span report: each timed pass runs in a
+  * [[Benchmarking.span]] named after the query, and the engine's own
+  * spans (every leased store write, the snapshot/sketch ingests, the
+  * classifier fit) nest inside it. The last steady pass runs under a
+  * [[Benchmarking.ProgressListener]], and its per-span table goes into
+  * bench_full as `spans` (see [[spanJson]]).
+  *
   * Timing outliers self-adjudicate: queries whose steady passes swing
-  * hard are re-measured min-of-K in the same JVM (the BenchN protocol)
-  * and annotated in bench_full as `remeasured_min` (a query whose
+  * hard (see [[isTimingOutlier]]) are re-measured min-of-K in the same
+  * JVM and annotated in bench_full as `remeasured_min` (a query whose
   * every re-measure pass fails is left out of that map, never given a
   * sentinel time); per-query `min` over the steady passes is recorded
   * for every query.
@@ -53,9 +62,9 @@ object Bench {
   private val AdjudicateN = 3
 
   /** Controlled-protocol verdict on a scaling-flag candidate: min-of-K
-    * at both SFs (the BenchN statistic — the MIN of K warm passes in
-    * ONE process is robust to noisy-neighbor contention that medians
-    * across separately-scheduled passes are not), flag only if the
+    * at both SFs (the MIN of K warm passes in ONE process is robust to
+    * noisy-neighbor contention that medians across
+    * separately-scheduled passes are not), flag only if the
     * controlled ratio still exceeds `threshold ×` the data-size ratio
     * on a non-trivial runtime. Round 10's q1_agg false positive
     * (driver median 4.55 s under box load vs controlled 0.57 s — a
@@ -78,6 +87,33 @@ object Bench {
     * failed — a failed pass's elapsed time is not a measurement. */
   private[graft] def minOfSuccessful(passes: Seq[(Double, Boolean)]): Option[Double] =
     passes.collect { case (t, true) => t }.minOption
+
+  /** A query whose steady passes cannot be trusted as they stand: a
+    * wide swing (MAD/median > 0.35), one pass past 2.5× the median
+    * (a contention spike), or a min at most half the median — the
+    * bimodal case where the median itself is the outlier (d11 at 32
+    * cores: median 17.0 s, min 2.4 s, dispersion 0.03). */
+  private[graft] def isTimingOutlier(med: Double, disp: Double,
+                                     max: Double, min: Double): Boolean =
+    disp > 0.35 || max > 2.5 * med || min <= 0.5 * med
+
+  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
+
+  /** One query's per-span table for bench_full, by span name: self
+    * wall (s), task time (s), util = task / (wall × cores), jobs,
+    * stages, tasks, shuffle read/write, spill and GC. */
+  private[graft] def spanJson(spans: Map[String, Benchmarking.SpanStats],
+                              cores: Int): String =
+    spans.toSeq.sortBy(_._1).map { case (name, s) =>
+      val (wall, task) = (s.wallNs / 1e9, s.runMs / 1e3)
+      val util = if (wall > 0) task / (wall * cores) else 0.0
+      "\"" + name + "\":" + Seq("wall_s" -> r3(wall), "task_s" -> r3(task),
+        "util" -> r3(util), "jobs" -> s.jobs, "stages" -> s.stages, "tasks" -> s.tasks,
+        "shuffle_read_mb" -> r3(s.shuffleRead / 1e6),
+        "shuffle_write_mb" -> r3(s.shuffleWrite / 1e6), "spill_mb" -> r3(s.spill / 1e6),
+        "gc_s" -> r3(s.gcMs / 1e3), "peak_mem_mb" -> r3(s.peakMem / 1e6))
+        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
 
   private def jsonNames(names: Seq[String]): String =
     names.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -110,8 +146,11 @@ object Bench {
                    dir: String): (Double, Boolean) = {
     val t0 = System.nanoTime()
     val ok =
-      try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
-      catch { case e: Throwable =>
+      try {
+        Benchmarking.span(spark, name)(
+          fn(spark, dir).write.format("noop").mode("overwrite").save())
+        true
+      } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         false
       }
@@ -126,11 +165,13 @@ object Bench {
   }
 
   /** One query's steady-state record: median/cold/dispersion/max/min
-    * over the SteadyN passes (min is the BenchN statistic — stable
-    * under contention, recorded so cross-round records carry it). */
+    * over the SteadyN passes (min is stable under contention: a
+    * subset run `Bench <list>` is the min-of-SteadyN re-measure) and
+    * the last pass's per-span sums. */
   private final case class BenchRow(name: String, med: Double, cold: Double,
                                     disp: Double, max: Double, min: Double,
-                                    ok: Boolean)
+                                    ok: Boolean,
+                                    spans: Map[String, Benchmarking.SpanStats] = Map.empty)
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -149,39 +190,45 @@ object Bench {
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALING_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.local(cpus)
+    val only = args.headOption.map(_.split(",").toSet)
+    only.foreach(o => require(o.subsetOf(SparkEntry.queries.keySet),
+      s"unknown queries: ${(o -- SparkEntry.queries.keySet).mkString(",")}"))
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_(name)) }
     // warm-up: JIT/codegen + parquet footer caches, so the first timed
     // query isn't charged session startup
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => }
 
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = queries.map { case (name, fn) =>
       val (cold, okCold) = once(spark, name, fn, sfDir)
       if (!okCold) BenchRow(name, -1.0, cold, -1.0, -1.0, -1.0, ok = false)
       else {
-        val runs = Seq.fill(SteadyN)(once(spark, name, fn, sfDir))
+        val warm = Seq.fill(SteadyN - 1)(once(spark, name, fn, sfDir))
+        val (last, l) = Benchmarking.withProgress(spark)(once(spark, name, fn, sfDir))
+        val runs = warm :+ last
         val ok = runs.forall(_._2)
         val ts = runs.map(_._1)
         val med = median(ts)
         // MAD/median: robust to one GC spike; the spike shows in `max`
         val disp = if (med > 0) median(ts.map(t => math.abs(t - med))) / med else 0.0
-        BenchRow(name, med, cold, math.rint(disp * 1000) / 1000,
-          ts.max, ts.min, ok)
+        BenchRow(name, med, cold, r3(disp), ts.max, ts.min, ok, l.spans)
       }
     }
 
     // Timing-outlier self-adjudication (the scaling-flag protocol
     // extended to wall-clock spikes, optimization r20): a query whose
-    // steady passes swing hard (MAD/median > 0.35) or whose max blew
-    // past 2.5x its median was probably hit by box contention — the
-    // exact class (d11/t22b/cp9 in r19) that used to need a manual
-    // BenchN re-run before a cross-round delta could be trusted. The
-    // bench now re-measures the worst offenders itself (min-of-K warm
-    // passes — the BenchN statistic; contention inflates samples but
-    // never deflates them) and records the verdict in bench_full as
-    // `remeasured_min`, so the record self-annotates noise. Bounded:
-    // top 8 by median, non-trivial runtimes only.
+    // steady passes swing hard or split in two (isTimingOutlier) was
+    // probably hit by box contention — the exact class (d11/t22b/cp9
+    // in r19) that used to need a manual min-of-K re-run before a
+    // cross-round delta could be trusted. The bench re-measures the
+    // worst offenders itself (min-of-K warm passes; contention
+    // inflates samples but never deflates them) and records the
+    // verdict in bench_full as `remeasured_min`, so the record
+    // self-annotates noise. Bounded: top 8 by median, non-trivial
+    // runtimes only.
     val outliers = results
-      .filter(r => r.ok && r.med > 0.5 && (r.disp > 0.35 || r.max > 2.5 * r.med))
+      .filter(r => r.ok && r.med > 0.5 && isTimingOutlier(r.med, r.disp, r.max, r.min))
       .sortBy(-_.med).take(8)
     val remeasured: Map[String, Double] = outliers.flatMap { r =>
       val fn = SparkEntry.queries(r.name)
@@ -204,7 +251,7 @@ object Bench {
     val scalingFailed = scala.collection.mutable.ArrayBuffer.empty[String]
     val scaling: Seq[(String, Double)] =
       if (!doScaling) Seq.empty
-      else SparkEntry.queries.toSeq.sortBy(_._1)
+      else queries
         .filterNot(q => scalingExclude(q._1))
         .flatMap { case (name, fn) =>
           val (_, okWarm) = once(spark, name, fn, scaleDir) // codegen for small plans
@@ -244,7 +291,6 @@ object Bench {
       stands
     }
 
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
     // a failed query must not masquerade as a fast success: its slot
     // carries -1 and the name is listed in "failed"
     val qPairs = results.map(r =>
@@ -256,6 +302,9 @@ object Bench {
       .mkString("{", ",", "}")
     val minJson = results.collect { case r if r.ok => "\"" + r.name + "\":" + r3(r.min) }
       .mkString("{", ",", "}")
+    val cores = spark.sparkContext.defaultParallelism
+    val spansJson = results.collect { case r if r.ok =>
+      "\"" + r.name + "\":" + spanJson(r.spans, cores) }.mkString("{", ",", "}")
     val remeasuredJson = remeasured.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
@@ -270,7 +319,7 @@ object Bench {
     val cold = r3(results.collect { case r if r.ok => r.cold }.sum)
     val nQueries = results.size
     val dr = math.rint(dataRatio * 100) / 100
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","n":$SteadyN,"n_queries":$nQueries,"queries":$qs,"dispersion":$disp,"max":$maxJson,"min":$minJson,"remeasured_min":$remeasuredJson,"failed":$failed,"cold_value":$cold,"scaling":$scalingJson,"scaling_flags":$flagsJson,"scaling_failed":$scalingFailedJson,"data_ratio":$dr,"cpus":"$cpus","sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","n":$SteadyN,"n_queries":$nQueries,"queries":$qs,"dispersion":$disp,"max":$maxJson,"min":$minJson,"remeasured_min":$remeasuredJson,"failed":$failed,"cold_value":$cold,"scaling":$scalingJson,"scaling_flags":$flagsJson,"scaling_failed":$scalingFailedJson,"data_ratio":$dr,"cpus":"$cpus","sf":"$sfDir","spans":$spansJson}"""
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath), full + "\n")
     // ... and a DURABLE per-configuration copy: each run used to

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.functions.TextFns
+import graft.stats.Benchmarking
 import graft.store.{StoreWrite, WriteLease}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -65,6 +66,9 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
     * never silently interleaves. */
   private[graft] val leaseDest =
     spark.conf.get("spark.sql.warehouse.dir") + s"/graft-snap-$prefix"
+
+  /** Remove a verified-stale lease left by a crashed writer. */
+  def breakLease(): Unit = WriteLease.breakLease(spark, leaseDest)
 
   private def writeBucketed(df: DataFrame, tbl: String,
                             keys: Seq[String], mode: SaveMode): Unit =
@@ -157,27 +161,6 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
       writeBucketed(sh, shinglesT, Seq("id"), SaveMode.ErrorIfExists)
     }
 
-  /** Banded candidate pairs DELTA-vs-(STORE ∪ DELTA): the left side is
-    * always a delta row, so no store-internal pair is ever generated
-    * (a plain self-join over the union would spend its time re-pairing
-    * the store against itself). Under the [[Dedup.bandedPairs]]
-    * `bucketCap` discipline: the (band, bucket) census runs over the
-    * union — exchange-free on the store side, the sigs table is
-    * bucketed on exactly these keys — and rows of flooded buckets salt
-    * into deterministic xxhash(id, band) sub-buckets on BOTH sides, so
-    * no join task sees more than ~cap² candidates whatever the delta
-    * floods with. Same recall trade as bandedPairs, same re-find math
-    * (the other bands, CC transitivity).
-    */
-  private def deltaPairs(deltaBanded: DataFrame,
-                         storeBanded: DataFrame): DataFrame =
-    Dedup.asymmetricBandedPairs(
-      deltaBanded, storeBanded.unionByName(deltaBanded), bucketCap,
-      // store side handed separately: the cap census then reads the
-      // bucketed sigs table exchange-free instead of re-shuffling the
-      // union every refresh (r20; delta ids are new, sides disjoint)
-      storeBanded = Some(storeBanded))
-
   /** Dedup `delta` against the snapshot (and against itself) and
     * return the surviving delta rows. Reads ONLY the seen/sigs/
     * shingles side tables — never the stored corpus. With
@@ -204,7 +187,8 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
   def ingestDelta(delta: DataFrame, idCol: String, textCol: String,
                   keepCols: Seq[String] = Nil,
                   commit: Boolean = false,
-                  idempotentCommit: Boolean = false): DataFrame = {
+                  idempotentCommit: Boolean = false): DataFrame =
+    Benchmarking.span(spark, "snapshot-ingest") {
     // TOMBSTONED IDS ARE FROZEN UNTIL REBUILD (the n10 batch
     // contract): re-ingesting a taken-down id would land new rows the
     // idempotent anti-joins skip while the tombstone keeps every read
@@ -241,7 +225,10 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
           Seq("fp"), "left_anti"))
     val dsh = Dedup.hashedShingles(dNew, idCol, textCol, n, Nil)
     val dBanded = graft.Materialize.reuse(Dedup.minHashBanded(dsh, bands, rows))
-    val pairs = deltaPairs(dBanded, minusTombs(spark.table(sigsT), "id"))
+    // delta-vs-(store ∪ delta) banded candidates: the cap census reads
+    // the sigs table (bucketed on (band, bucket)) exchange-free
+    val pairs = Dedup.asymmetricBandedPairs(
+      minusTombs(spark.table(sigsT), "id"), dBanded, bucketCap)
     // verification shingles: store side from the persisted table
     // (the corpus is NOT re-shingled), delta side from this pass
     val allSh = minusTombs(spark.table(shinglesT), "id").unionByName(dsh)
@@ -320,6 +307,9 @@ final class SketchStore(val spark: SparkSession, val prefix: String,
   private[graft] val leaseDest =
     spark.conf.get("spark.sql.warehouse.dir") + s"/graft-sketch-$prefix"
 
+  /** Remove a verified-stale lease left by a crashed writer. */
+  def breakLease(): Unit = WriteLease.breakLease(spark, leaseDest)
+
   private def writeBucketed(df: DataFrame, tbl: String,
                             keys: Seq[String], mode: SaveMode): Unit =
     StoreWrite.writeBucketed(spark, df, tbl, nBuckets, keys, mode)
@@ -345,7 +335,8 @@ final class SketchStore(val spark: SparkSession, val prefix: String,
     * replayed-batch path). */
   def ingestDelta(delta: DataFrame, idCol: String, textCol: String,
                   commit: Boolean = false,
-                  idempotentCommit: Boolean = false): DataFrame = {
+                  idempotentCommit: Boolean = false): DataFrame =
+    Benchmarking.span(spark, "sketch-ingest") {
     // commit path truncates (the DedupSnapshot recache discipline: the
     // appends below update the very tables the pair plan reads)
     val matz: DataFrame => DataFrame =

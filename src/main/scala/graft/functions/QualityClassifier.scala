@@ -140,9 +140,8 @@ object QualityClassifier {
     */
   def fitScore(docs: DataFrame, idCol: String, textCol: String,
                label: Column, dim: Int = 64, iters: Int = 4,
-               salt: String = "t20"): (Array[Long], DataFrame) = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+               salt: String = "t20"): (Array[Long], DataFrame) =
+    graft.stats.Benchmarking.span(docs.sparkSession, "classifier-fit") {
     require(dim >= 2 && iters >= 1)
     val f = graft.Materialize.reuse(
       pinToId(features(docs, idCol, textCol, label, dim, salt), idCol))

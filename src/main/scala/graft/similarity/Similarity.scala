@@ -751,6 +751,11 @@ object Similarity {
       }
     }
 
+    /** Remove a verified-stale lease on the index at `path` left by a
+      * crashed writer. */
+    def breakLease(spark: SparkSession, path: String): Unit =
+      graft.store.WriteLease.breakLease(spark, path)
+
     /** The corpus minus tombstoned rows — the scan side every query
       * should use. The tombstone set is a sliver (AQE broadcasts it),
       * so the anti-join adds no exchange of the store. */

@@ -1,10 +1,8 @@
 package graft.stats
 
-import graft.run.Runner
-import graft.spec.ComboSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 /** Benchmarking + progress/memory observation utilities
@@ -48,14 +46,74 @@ object Benchmarking {
     rows.toDF("kernel", "n", "best_sec", "repeats")
   }
 
+  /** The Spark local property naming the active [[span]]. Jobs carry
+    * their launching thread's local properties (Spark hands them to
+    * the threads it spawns, broadcasts included), so every job, stage
+    * and task is attributed to the innermost span open at launch. */
+  val SpanKey = "graft.span"
+
+  /** What one span ran: its self wall (time not spent in nested spans)
+    * and the sums of the jobs, stages and tasks launched under it.
+    * Times in ns/ms as Spark reports them, sizes in bytes; `peakMem` is
+    * the largest per-task peak execution memory. */
+  final case class SpanStats(var wallNs: Long = 0L, var jobs: Long = 0L,
+                             var stages: Long = 0L, var tasks: Long = 0L,
+                             var runMs: Long = 0L, var gcMs: Long = 0L,
+                             var shuffleRead: Long = 0L, var shuffleWrite: Long = 0L,
+                             var spill: Long = 0L, var peakMem: Long = 0L)
+
+  /** Posted on the listener bus when a span closes. */
+  private final case class SpanEnd(name: String, selfNs: Long) extends SparkListenerEvent {
+    override def logEvent: Boolean = false
+  }
+
+  private val nestedNs = ThreadLocal.withInitial[Array[Long]](() => Array(0L))
+
+  /** Run `body` as span `name`: the jobs it launches carry the name in
+    * [[SpanKey]], and on exit its self wall reaches every attached
+    * [[ProgressListener]]. The enclosing span is restored on exit, so
+    * spans nest. */
+  def span[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty(SpanKey)
+    val nested = nestedNs.get
+    val outerNested = nested(0)
+    nested(0) = 0L
+    sc.setLocalProperty(SpanKey, name)
+    val t0 = System.nanoTime()
+    try body
+    finally {
+      val ns = System.nanoTime() - t0
+      GraftListenerBus.post(sc, SpanEnd(name, ns - nested(0)))
+      nested(0) = outerNested + ns
+      sc.setLocalProperty(SpanKey, outer)
+    }
+  }
+
   /** S6 progress: a SparkListener counting finished tasks — the
-    * engine-side analogue of the reference's tqdm hook. Attach, run,
-    * read `tasksCompleted`/`recordsRead`, detach.
+    * engine-side analogue of the reference's tqdm hook — and summing
+    * per [[span]] what ran under it. Attach, run, read
+    * `tasksCompleted`/`recordsRead`/`spans`, detach.
     */
   final class ProgressListener extends SparkListener {
     private val tasks = new LongAdder
     private val records = new LongAdder
     private val peakMem = new AtomicLong(0L)
+    private val bySpan = scala.collection.mutable.Map.empty[String, SpanStats]
+    private val stageSpan = scala.collection.mutable.Map.empty[Int, SpanStats]
+    private def sums(name: String): SpanStats = bySpan.getOrElseUpdate(name, SpanStats())
+    private def spanOf(props: java.util.Properties): Option[SpanStats] =
+      Option(props).flatMap(p => Option(p.getProperty(SpanKey))).map(sums)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      synchronized(spanOf(e.properties).foreach(_.jobs += 1))
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
+      spanOf(e.properties).foreach { s => s.stages += 1; stageSpan(e.stageInfo.stageId) = s }
+    }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case SpanEnd(name, ns) => synchronized(sums(name).wallNs += ns)
+      case _ =>
+    }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
       tasks.increment()
       val m = e.taskMetrics
@@ -63,6 +121,16 @@ object Benchmarking {
         records.add(m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead)
         peakMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
       }
+      synchronized(stageSpan.get(e.stageId).foreach { s =>
+        s.tasks += 1
+        if (m != null) {
+          s.runMs += m.executorRunTime; s.gcMs += m.jvmGCTime
+          s.shuffleRead += m.shuffleReadMetrics.totalBytesRead
+          s.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+          s.spill += m.memoryBytesSpilled + m.diskBytesSpilled
+          s.peakMem = math.max(s.peakMem, m.peakExecutionMemory)
+        }
+      })
     }
     def tasksCompleted: Long = tasks.sum()
     def recordsRead: Long = records.sum()
@@ -70,23 +138,18 @@ object Benchmarking {
       * MemoryMonitor (utils.py:761-826 observes RSS; Spark exposes the
       * managed-memory peak per task). */
     def peakTaskMemory: Long = peakMem.get()
+    /** Per-span sums, keyed by span name (copies). */
+    def spans: Map[String, SpanStats] = synchronized(bySpan.map { case (k, v) => k -> v.copy() }.toMap)
   }
 
-  /** Attach a listener for the duration of `body`. */
+  /** Attach a listener for the duration of `body`; every event of the
+    * jobs `body` ran has been delivered when it returns. */
   def withProgress[T](spark: SparkSession)(body: => T): (T, ProgressListener) = {
     val l = new ProgressListener
     spark.sparkContext.addSparkListener(l)
     try {
       val r = body
-      // listener events post asynchronously (no public drain API):
-      // poll until the task counter stabilizes
-      var last = -1L
-      var spins = 0
-      while (l.tasksCompleted != last && spins < 40) {
-        last = l.tasksCompleted
-        Thread.sleep(50)
-        spins += 1
-      }
+      GraftListenerBus.drain(spark.sparkContext)
       (r, l)
     } finally spark.sparkContext.removeSparkListener(l)
   }

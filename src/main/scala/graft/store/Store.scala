@@ -63,7 +63,8 @@ private[graft] object WriteLease {
   /** Run `body` holding the write lease of `dest` (the file at
     * [[lockPathFor]]); a concurrent holder makes it throw
     * [[ConcurrentWriteException]] before `body` starts. `op` names the
-    * mutation in the lease file. */
+    * mutation in the lease file and is the [[graft.stats.Benchmarking.span]]
+    * `body` runs in. */
   def withLease[T](spark: SparkSession, dest: String, op: String)(body: => T): T = {
     val lock = lockPathFor(dest)
     val fs = fsOf(spark, lock)
@@ -108,7 +109,7 @@ private[graft] object WriteLease {
     try {
       out.write(payload.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       out.close()
-      body
+      graft.stats.Benchmarking.span(spark, op)(body)
     } finally fs.delete(lock, true)
   }
 

@@ -48,6 +48,17 @@ class BenchFlagSpec extends AnyFunSuite {
       mainTimes = Seq(1.0), smallTimes = Seq(0.0), dataRatio = 1.0))
   }
 
+  test("timing outlier: a bimodal row whose median is the outlier is flagged") {
+    // d11 at 32 cores (bench_full_c32_sf0.1.json): no spike past 2.5x
+    // the median and a tight MAD, but min/median 0.14
+    assert(Bench.isTimingOutlier(med = 17.004, disp = 0.033, max = 17.566, min = 2.418))
+    // a tight row is left alone
+    assert(!Bench.isTimingOutlier(med = 2.0, disp = 0.02, max = 2.2, min = 1.9))
+    // the spike and swing rules still fire
+    assert(Bench.isTimingOutlier(med = 2.0, disp = 0.02, max = 5.1, min = 1.9))
+    assert(Bench.isTimingOutlier(med = 2.0, disp = 0.4, max = 2.9, min = 1.2))
+  }
+
   test("total line: name lists that would pass 1900 chars become counts") {
     val head = "\"metric\":\"total\",\"value\":1.0"
     val tail = "\"n_queries\":185,\"queries_parts\":3"

@@ -89,7 +89,8 @@ class PersistedIndexSpec extends SparkSpec {
     assert(e.getMessage.contains("breakLease"))
     // nothing was appended under contention
     assert(PersistedIndex.corpus(spark, root).count() == 40)
-    fs.delete(lock, true)
+    PersistedIndex.breakLease(spark, root)
+    assert(!fs.exists(lock))
     val r = PersistedIndex.append(all.filter(col("vec_id") >= 40),
       "vec_id", "embedding", root)
     assert(PersistedIndex.corpus(spark, root).count() == 60)

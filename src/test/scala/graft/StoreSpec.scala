@@ -601,6 +601,7 @@ class StoreLeaseSpec extends SparkSpec {
 
   test("a foreign lease makes every BucketedStore, DedupSnapshot and SketchStore " +
        "mutator fail loudly, naming breakLease; no table changes") {
+    import graft.similarity.Similarity.PersistedIndex
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again today"),
       (2L, "completely unrelated store content about streams and sinks"),
@@ -617,6 +618,12 @@ class StoreLeaseSpec extends SparkSpec {
     snap.writeCorpus(docs, "doc_id", "text")
     val skst = new SketchStore(spark, "lease_sk", nBuckets = 2)
     skst.build(docs, "doc_id", "text")
+    val vecs = (0 until 24).map(i => (i.toLong,
+      Seq.tabulate(4)(j => (if (j == i % 2) 5.0 else 0.0) + (i * 7 + j) % 5 / 10.0)))
+      .toDF("vec_id", "embedding")
+    val idx = java.nio.file.Files.createTempDirectory("graft-lease-idx").toString
+    PersistedIndex.build(vecs.filter($"vec_id" < 20), "vec_id", "embedding", idx,
+      kLists = 2, m = 2, kCodes = 4)
 
     val tables = Seq("lease_bs", "lease_snap_corpus", "lease_snap_seen",
       "lease_snap_sigs", "lease_snap_shingles", "lease_snap_tombs",
@@ -624,29 +631,41 @@ class StoreLeaseSpec extends SparkSpec {
     def contents(): Map[String, Seq[String]] = tables.map { t =>
       t -> (if (spark.catalog.tableExists(t))
         spark.table(t).collect().map(_.toString).sorted.toSeq else Seq("<absent>"))
-    }.toMap
-    val before = contents()
+    }.toMap ++ Map(
+      "index corpus" -> PersistedIndex.corpus(spark, idx).select("vec_id")
+        .collect().map(_.toString).sorted.toSeq,
+      "index tombstones" -> PersistedIndex.tombstones(spark, idx)
+        .collect().map(_.toString).sorted.toSeq)
 
-    val mutators: Seq[(String, String, () => Any)] = Seq(
-      ("BucketedStore.mergeIn", bs.leaseDest,
+    // (name, lease key, the owner's breakLease, mutation)
+    val mutators: Seq[(String, String, () => Unit, () => Any)] = Seq(
+      ("BucketedStore.mergeIn", bs.leaseDest, () => bs.breakLease(),
         () => bs.mergeIn(Seq((3L, 30.0)).toDF("k", "v"))),
-      ("BucketedStore.append", bs.leaseDest,
-        () => bs.append(Seq((3L, 30.0)).toDF("k", "v"))),
-      ("BucketedStore.replaceWith", bs.leaseDest,
+      ("BucketedStore.append", bs.leaseDest, () => bs.breakLease(),
+        () => bs.append(Seq((4L, 40.0)).toDF("k", "v"))),
+      ("BucketedStore.replaceWith", bs.leaseDest, () => bs.breakLease(),
         () => bs.replaceWith(Seq((3L, 30.0)).toDF("k", "v"))),
-      ("BucketedStore.expandDims", bs.leaseDest, () => bs.expandDims("run", "r0")),
-      ("BucketedStore.dropSel", bs.leaseDest, () => bs.dropSel("k", Seq(1L))),
-      ("DedupSnapshot.writeCorpus", snap.leaseDest,
+      ("BucketedStore.expandDims", bs.leaseDest, () => bs.breakLease(),
+        () => bs.expandDims("run", "r0")),
+      ("BucketedStore.dropSel", bs.leaseDest, () => bs.breakLease(),
+        () => bs.dropSel("k", Seq(1L))),
+      ("DedupSnapshot.writeCorpus", snap.leaseDest, () => snap.breakLease(),
         () => snap.writeCorpus(delta, "doc_id", "text")),
-      ("DedupSnapshot.takedown", snap.leaseDest,
+      ("DedupSnapshot.takedown", snap.leaseDest, () => snap.breakLease(),
         () => snap.takedown(Seq(1L).toDF("doc_id"), "doc_id")),
-      ("DedupSnapshot.ingestDelta(commit = true)", snap.leaseDest,
+      ("DedupSnapshot.ingestDelta(commit = true)", snap.leaseDest, () => snap.breakLease(),
         () => snap.ingestDelta(delta, "doc_id", "text", commit = true)),
-      ("SketchStore.build", skst.leaseDest, () => skst.build(delta, "doc_id", "text")),
-      ("SketchStore.ingestDelta(commit = true)", skst.leaseDest,
-        () => skst.ingestDelta(delta, "doc_id", "text", commit = true)))
+      ("SketchStore.build", skst.leaseDest, () => skst.breakLease(),
+        () => skst.build(delta, "doc_id", "text")),
+      ("SketchStore.ingestDelta(commit = true)", skst.leaseDest, () => skst.breakLease(),
+        () => skst.ingestDelta(delta, "doc_id", "text", commit = true)),
+      ("PersistedIndex.delete", idx, () => PersistedIndex.breakLease(spark, idx),
+        () => PersistedIndex.delete(Seq(3L).toDF("vec_id"), "vec_id", idx)),
+      ("PersistedIndex.append", idx, () => PersistedIndex.breakLease(spark, idx),
+        () => PersistedIndex.append(vecs.filter($"vec_id" >= 20), "vec_id", "embedding", idx)))
 
-    mutators.foreach { case (name, dest, mutate) =>
+    mutators.foreach { case (name, dest, breakLease, mutate) =>
+      val before = contents()
       val lock = graft.store.WriteLease.lockPathFor(dest)
       val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val out = fs.create(lock, false)
@@ -655,8 +674,13 @@ class StoreLeaseSpec extends SparkSpec {
         val e = intercept[graft.store.ConcurrentWriteException](mutate())
         assert(e.getMessage.contains("breakLease") && e.getMessage.contains("pid=9999"),
           s"$name: ${e.getMessage}")
+        assert(contents() == before, s"$name changed a table")
+        // the owner's breakLease clears the stale lease: the mutation now runs
+        breakLease()
+        assert(!fs.exists(lock), s"$name: breakLease left the lease")
+        mutate()
+        assert(!fs.exists(lock), s"$name: the lease outlived the mutation")
       } finally fs.delete(lock, true)
-      assert(contents() == before, s"$name changed a table")
     }
   }
 }
