@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Dev-only DEPTH record for byte-BPE training (round 18, judge r17
-  * #5): `trainBatched` + `checkpointEvery` exist precisely to make
+  * #5): `batchMax` + `checkpointEvery` exist precisely to make
   * real vocab sizes cluster-time, and the gate queries only ever run
   * 30-260 rounds — this main runs the PRODUCTION shape (thousands of
   * merges) once and prints rounds/min so BENCH_NOTES carries honest
@@ -46,7 +46,7 @@ object BpeDepth {
         .as("pt")).select("pt").distinct().count()
     val t0 = System.nanoTime()
     val (learned, sizes) =
-      graft.functions.ByteBpe.trainBatchedWithSizes(
+      graft.functions.Bpe.trainWithSizes(graft.functions.ByteBpe.Bytes,
         docs, "text", rounds, batchMax, ckpt,
         progress = (merges, censuses) =>
           if (censuses % 25 == 0)

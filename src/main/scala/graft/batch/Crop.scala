@@ -3,6 +3,8 @@ package graft.batch
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** Resumable disk-batched execution — Crop/Sower/grow/Reaper parity
   * (SURVEY §2.10; reference cropping.py).
   *
@@ -204,14 +206,18 @@ final class Crop(val spark: SparkSession, val dir: String,
   }
 
   /** B8 `check_bad`: batch ids whose result partitions exist but fail
-    * to read/count — candidates for regrowth (partition overwrite). */
-  def checkBad(): Seq[Long] =
-    batchIds().filter { id =>
-      try {
-        spark.read.parquet(s"$resultsPath/batch_id=$id").count()
-        false
-      } catch { case _: Throwable => true }
+    * to read/count — candidates for regrowth (partition overwrite). A
+    * batch that was never grown has no partition and is not bad, only
+    * missing ([[missingBatches]]). */
+  def checkBad(): Seq[Long] = {
+    val pendingIds = batchIds().toSet
+    def unreadable(p: org.apache.hadoop.fs.Path): Boolean =
+      try { spark.read.parquet(p.toString).count(); false }
+      catch { case NonFatal(_) => true }
+    listIds(resultsPath).collect {
+      case (id, p) if pendingIds(id) && unreadable(p) => id
     }
+  }
 
   /** Delete the crop (disk cleanup, cropping.py `delete_all`). */
   def delete(): Unit = fs.delete(new org.apache.hadoop.fs.Path(dir), true)

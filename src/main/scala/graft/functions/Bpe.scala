@@ -62,6 +62,19 @@ object Bpe {
     * that elected it. */
   final case class LearnedMerge(rank: Int, a: String, b: String, count: Long)
 
+  /** What the two BPE conventions differ in, and the only thing the
+    * learn and encode plans below take from them: `preTokens` splits a
+    * text column into the tokens merges never cross, `symbols` maps a
+    * token to the string whose chars are its base symbols, and
+    * `countCol` names the per-document token count the encode plans
+    * report. [[Words]] here; [[ByteBpe.Bytes]] for the GPT-2 one. */
+  private[graft] final case class Alphabet(preTokens: Column => Column,
+                                           symbols: Column => Column,
+                                           countCol: String)
+
+  /** Whitespace words of codepoint symbols (subword-nmt). */
+  private[graft] val Words = Alphabet(TextFns.tokens, identity, "n_ws_tokens")
+
   /** LEARN a merges table from the corpus — Sennrich et al. 2016
     * Algorithm 1 (t24): `rounds` times, count every adjacent symbol
     * pair over the current segmentation of the corpus VOCABULARY
@@ -89,138 +102,101 @@ object Bpe {
     * The census runs over the DISTINCT vocabulary (the tf/df sliver,
     * not the corpus): one map-combined (a, b) aggregate per round —
     * exactly ONE exchange of ~(pair, count) rows — and the driver
-    * receives ONE row per round (TakeOrdered(1); the k-means k·dim
-    * contract). Each round's segmentation is the base vocab under r
-    * nested codegen'd `replace` calls: no per-round materialization,
-    * no re-read of the corpus text after the initial tokenize.
+    * receives `batchMax` rows per census (TakeOrdered; the k-means
+    * k·dim contract). Each round's segmentation is the base vocab
+    * under one [[ReplaceChain]] of the merges since the last
+    * checkpoint: no per-round materialization, no re-read of the
+    * corpus text after the initial tokenize.
+    *
+    * `batchMax` (t24d) applies up to that many merges per census —
+    * the longest prefix of the census's top pairs that is provably
+    * equal to as many sequential rounds (the conditions are on
+    * [[trainWithSizes]]), so the learned table does not depend on it.
+    * `batchMax = 1` is Algorithm 1's one merge per census.
+    *
+    * `checkpointEvery` (t24c, judge r13 #3): without it, round r's
+    * segmentation is the base vocab under a chain of r replaces --
+    * O(rounds^2) total replace work. Honest at the 30-round gate; a
+    * production tokenizer learns ~32k merges. Every `checkpointEvery`
+    * merges the framed segmentation is MATERIALIZED
+    * ([[graft.Materialize.truncate]]: reliable `checkpoint()` when the
+    * session has a checkpoint dir -- the cluster deployment --
+    * localCheckpoint in local mode) and the replace chain restarts
+    * from the stored column, so per-round recompute is bounded by
+    * `checkpointEvery`, making a 32k-merge run a cluster-time
+    * question. The algebra is UNCHANGED -- replace calls compose --
+    * so the learned table is bit-identical to the pure-expression
+    * form (BpeSpec pins 260 rounds both ways; the t24c gate query
+    * pins the checkpointed path against the DuckDB oracle).
+    * `checkpointEvery <= 0` disables (the pure-expression form). Each
+    * checkpoint costs one extra pass over the vocab sliver -- the
+    * trade that bounds the quadratic. Fully-merged words
+    * (single-symbol) are dropped at each checkpoint: they can never
+    * pair again, so every later census scans a smaller sliver with no
+    * count changed.
     *
     * Stops early (returning fewer rules) only if every word has fully
     * merged — impossible on natural-language corpora at sane budgets.
     */
+  def train(docs: DataFrame, textCol: String, rounds: Int,
+            batchMax: Int = 1,
+            checkpointEvery: Int = 64): Seq[LearnedMerge] =
+    trainWithSizes(Words, docs, textCol, rounds, batchMax,
+      checkpointEvery)._1
+
+  /** [[train]] packaged as the t24 query form: one row per learned
+    * rule `(rk, a, b, c)`. */
+  def trainDF(docs: DataFrame, textCol: String, rounds: Int,
+              batchMax: Int = 1,
+              checkpointEvery: Int = 64): DataFrame =
+    rulesDF(docs, train(docs, textCol, rounds, batchMax, checkpointEvery))
+
+  private[functions] def rulesDF(docs: DataFrame,
+                                 learned: Seq[LearnedMerge]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    learned.map(m => (m.rank.toLong, m.a, m.b, m.count))
+      .toDF("rk", "a", "b", "c")
+  }
+
+  /** The symbols of a chr(1)-framed string `␁a␁␁b␁…`. */
+  private def framedSymbols(s: Column): Column =
+    split(s.substr(lit(2), length(s) - 2), "\u0001\u0001")
+
   /** The per-round pair census `(a, b, c)`: every adjacent symbol
     * pair of the framed segmentation `sCol` over `vocab`, weighted by
     * word frequency — ONE map-combined exchange of (pair, count) rows
     * (spec-pinned), the only shuffle a training round pays. */
   private[graft] def pairCensus(vocab: DataFrame,
-                                sCol: Column): DataFrame = {
-    val syms = split(sCol.substr(lit(2), length(sCol) - 2), "\u0001\u0001")
-    vocab.select(col("cnt"), syms.as("ss"))
+                                sCol: Column): DataFrame =
+    vocab.select(col("cnt"), framedSymbols(sCol).as("ss"))
       .filter(size(col("ss")) >= 2)
       .select(col("cnt"), explode(expr(
         "transform(sequence(0, size(ss) - 2)," +
           " i -> struct(ss[i] AS a, ss[i + 1] AS b))")).as("p"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(sum("cnt").as("c"))
-  }
 
-  /** `checkpointEvery` (t24c, judge r13 #3): without it, round r's
-    * segmentation is the base vocab under r nested `replace` calls --
-    * O(rounds^2) total replace work plus codegen expression depth
-    * growing linearly until Spark falls back to interpreted evaluation
-    * past the JIT method limit. Honest at the 30-round gate; a
-    * production tokenizer learns ~32k merges. Every `checkpointEvery`
-    * rounds the framed segmentation is MATERIALIZED
-    * ([[graft.Materialize.truncate]]: reliable `checkpoint()` when the
-    * session has a checkpoint dir -- the cluster deployment --
-    * localCheckpoint in local mode) and the replace chain restarts
-    * from the stored column, so expression depth and per-round
-    * recompute are both bounded by `checkpointEvery`, making a
-    * 32k-merge run a cluster-time question instead of an
-    * expression-depth impossibility. The algebra is UNCHANGED --
-    * replace calls compose -- so the learned table is bit-identical to
-    * the pure-expression form (BpeSpec pins 260 rounds both ways; the
-    * t24c gate query pins the checkpointed path against the DuckDB
-    * oracle). `checkpointEvery <= 0` disables (the pure-expression
-    * form). Each checkpoint costs one extra pass over the vocab
-    * sliver -- the trade that bounds the quadratic. Fully-merged words
-    * (single-symbol) are dropped at each checkpoint: they can never
-    * pair again, so every later census scans a smaller sliver with no
-    * count changed.
-    */
-  def train(docs: DataFrame, textCol: String, rounds: Int,
-            checkpointEvery: Int = 64): Seq[LearnedMerge] = {
-    val vocab = graft.Materialize.reuse(
-      docs.select(explode(TextFns.tokens(col(textCol))).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("cnt"))
-        // \u0001c\u0001 per codepoint ("." matches a full codepoint in
-        // Java regex; DuckDB's substr(w, i, 1) walk is the same
-        // per-char framing)
-        .withColumn("s", regexp_replace(col("w"), "(.)", "\u0001$1\u0001"))
-        .select("cnt", "s"))
-    trainFromVocab(vocab, rounds, checkpointEvery)
-  }
-
-  /** [[train]]'s census → argmax → replace loop over an ALREADY
-    * framed `(cnt, s)` vocabulary — the alphabet-agnostic core, so
-    * [[ByteBpe.train]] runs the IDENTICAL loop over byte-unicode
-    * framed pre-tokens (the loop only sees framed strings; a "symbol"
-    * is whatever the framing says it is). */
-  private[functions] def trainFromVocab(
-      vocab: DataFrame, rounds: Int,
-      checkpointEvery: Int): Seq[LearnedMerge] = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val learned = scala.collection.mutable.ArrayBuffer.empty[LearnedMerge]
-    var cur: DataFrame = vocab
-    // merges applied since the last checkpoint, folded into ONE
-    // constant-shape [[ReplaceChain]] (bit-identical algebra to the
-    // nested `replace` chain it replaces; every round now reuses one
-    // compiled census plan instead of compiling a fresh one -- see
-    // the expression's scaladoc for the code-cache arithmetic)
-    val chain = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    def sCol: org.apache.spark.sql.Column =
-      if (chain.isEmpty) col("s")
-      else org.apache.spark.sql.GraftSqlShims.column(ReplaceChain(
-        org.apache.spark.sql.GraftSqlShims.expression(col("s")),
-        chain.map(_._1).toSeq, chain.map(_._2).toSeq))
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      val top = pairCensus(cur, sCol)
-        .orderBy(col("c").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val (a, b, c) = (top(0).getString(0), top(0).getString(1),
-          top(0).getLong(2))
-        learned += LearnedMerge(r, a, b, c)
-        chain += (("\u0001" + a + "\u0001\u0001" + b + "\u0001",
-          "\u0001" + a + b + "\u0001"))
-        r += 1
-        if (checkpointEvery > 0 && chain.size >= checkpointEvery && r < rounds) {
-          // a word with one symbol left frames as \u0001sym\u0001 and
-          // yields no pair; size-2 framing minimum for a pair is
-          // \u0001a\u0001\u0001b\u0001 -- filter on the framed form
-          cur = graft.Materialize.truncate(
-            cur.select(col("cnt"), sCol.as("s"))
-              .filter(size(split(col("s").substr(lit(2),
-                length(col("s")) - 2), "\u0001\u0001")) >= 2))
-          chain.clear()
-        }
-      }
-    }
-    learned.toSeq
-  }
-
-  /** [[train]] packaged as the t24 query form: one row per learned
-    * rule `(rk, a, b, c)`. */
-  def trainDF(docs: DataFrame, textCol: String, rounds: Int,
-              checkpointEvery: Int = 64): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    train(docs, textCol, rounds, checkpointEvery)
-      .map(m => (m.rank.toLong, m.a, m.b, m.count))
-      .toDF("rk", "a", "b", "c")
-  }
-
-  /** BATCHED multi-merge training (t24d, judge r14 #7) — cut the one
-    * driver round-trip per merge that [[train]] inherits from
-    * Sennrich's sequential argmax: per census, apply the LONGEST SAFE
-    * PREFIX of the top-`batchMax` pairs in one go, where "safe" is a
-    * census-sliver-checkable condition under which the batch is
-    * PROVABLY equal to that many sequential rounds. At 32k merges the
-    * sequential form is ~32k small jobs dominated by scheduling; this
-    * cuts the job count by the mean accepted-prefix length while
-    * emitting the bit-identical merges table (spec-pinned on planted
+  /** THE learning loop behind both alphabets' `train`: the framed
+    * distinct-token vocabulary `(cnt, s)` — `\u0001c\u0001` per symbol
+    * char ("." matches a full codepoint in Java regex; DuckDB's
+    * substr(w, i, 1) walk is the same per-char framing, and a
+    * byte-unicode char IS one byte symbol) — then census → top
+    * `batchMax` → accept a prefix → replace, until `rounds` merges.
+    * Returns the merges and each census's accepted-prefix length
+    * (spec instrumentation: planted interacting fixtures must show
+    * size-1 rounds, non-interacting ones sizes > 1); `progress` sees
+    * (merges, censuses) after every census.
+    *
+    * Batching (t24d, judge r14 #7) cuts the one driver round-trip
+    * per merge of Sennrich's sequential argmax: per census, apply the
+    * LONGEST SAFE PREFIX of the top-`batchMax` pairs in one go, where
+    * "safe" is a census-sliver-checkable condition under which the
+    * batch is PROVABLY equal to that many sequential rounds. At 32k
+    * merges the sequential form is ~32k small jobs dominated by
+    * scheduling; this cuts the job count by the mean accepted-prefix
+    * length while emitting the bit-identical merges table
+    * (spec-pinned against a plain-Scala Algorithm 1 on planted
     * interacting fixtures; the t24d gate row pins it against t24's
     * sequential DuckDB replay).
     *
@@ -283,42 +259,24 @@ object Bpe {
     * always accepted, so progress is guaranteed; the prefix stops at
     * the first rejection (a later non-adjacent pair may NOT be taken
     * — a skipped pair would itself be the argmax at the next step).
-    * `batchMax = 1` degenerates to [[train]] exactly.
+    * With `batchMax = 1` the census yields one pair, the prefix
+    * cannot extend and no touching-maxima job runs: one census job
+    * per merge, Algorithm 1 exactly.
     */
-  def trainBatched(docs: DataFrame, textCol: String, rounds: Int,
-                   batchMax: Int = 16,
-                   checkpointEvery: Int = 64): Seq[LearnedMerge] =
-    trainBatchedWithSizes(docs, textCol, rounds, batchMax,
-      checkpointEvery)._1
-
-  /** [[trainBatched]] also reporting each round's accepted-prefix
-    * length (spec instrumentation: planted interacting fixtures must
-    * show size-1 rounds, non-interacting ones sizes > 1). */
-  private[graft] def trainBatchedWithSizes(
-      docs: DataFrame, textCol: String, rounds: Int, batchMax: Int,
-      checkpointEvery: Int): (Seq[LearnedMerge], Seq[Int]) = {
-    val vocab = graft.Materialize.reuse(
-      docs.select(explode(TextFns.tokens(col(textCol))).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("cnt"))
-        .withColumn("s", regexp_replace(col("w"), "(.)", "\u0001$1\u0001"))
-        .select("cnt", "s"))
-    trainBatchedFromVocabWithSizes(vocab, rounds, batchMax, checkpointEvery)
-  }
-
-  /** The batched learning loop over an ALREADY-framed `(cnt, s)`
-    * vocabulary — shared by the word-level path above and
-    * [[ByteBpe.trainBatched]] (round 18: byte-level depth runs need
-    * batching too; the loop is alphabet-agnostic, only the vocab
-    * construction differs). */
-  private[functions] def trainBatchedFromVocabWithSizes(
-      vocab: DataFrame, rounds: Int, batchMax: Int,
-      checkpointEvery: Int,
+  private[graft] def trainWithSizes(
+      alphabet: Alphabet, docs: DataFrame, textCol: String, rounds: Int,
+      batchMax: Int, checkpointEvery: Int,
       progress: (Int, Int) => Unit = (_, _) => ()): (Seq[LearnedMerge], Seq[Int]) = {
     require(rounds >= 1 && batchMax >= 1,
       s"need rounds >= 1 and batchMax >= 1, got $rounds/$batchMax")
     val learned = scala.collection.mutable.ArrayBuffer.empty[LearnedMerge]
     val sizes = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var cur: DataFrame = vocab
+    var cur: DataFrame = graft.Materialize.reuse(
+      docs.select(explode(alphabet.preTokens(col(textCol))).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("cnt"))
+        .withColumn("s", regexp_replace(alphabet.symbols(col("w")),
+          "(.)", "\u0001$1\u0001"))
+        .select("cnt", "s"))
     // the framed-replace stack since the last checkpoint as ONE
     // constant-shape [[ReplaceChain]] (same algebra; one compiled
     // census plan for the whole run instead of one per batch)
@@ -338,11 +296,11 @@ object Bpe {
       // the accepted set is a PREFIX, so it extends past p₁ only if
       // (p₁, p₂) pass conditions 1/2/4 — decidable driver-side from
       // the collected sliver. A round that can't extend (common early,
-      // when the hottest pairs chain into each other) therefore pays
-      // exactly [[train]]'s one census job; the touching-maxima job
-      // below runs only when a real batch is possible (and then its
-      // extra census evaluation is amortized by the ≥ 1 sequential
-      // rounds the batch replaces).
+      // when the hottest pairs chain into each other, and always at
+      // batchMax = 1) therefore pays exactly one census job; the
+      // touching-maxima job below runs only when a real batch is
+      // possible (and then its extra census evaluation is amortized by
+      // the ≥ 1 sequential rounds the batch replaces).
       val canExtend = top.length >= 2 && {
         val (a1, b1, _) = top(0); val (a2, b2, c2) = top(1)
         val structural = a1 != b1 &&
@@ -394,7 +352,7 @@ object Bpe {
         }
       if (top.isEmpty) done = true
       else {
-        // greedy prefix acceptance under conditions 1-4 (skipped
+        // greedy prefix acceptance under conditions 1-5 (skipped
         // entirely when the driver-side (p₁, p₂) check already fixed
         // m = 1 — an empty touchMax must never reach cond3, which
         // would read absent symbols as unbounded-safe)
@@ -456,10 +414,11 @@ object Bpe {
         progress(learned.size, sizes.size)
         if (checkpointEvery > 0 && chain.size >= checkpointEvery &&
             learned.size < rounds) {
+          // a word with one symbol left frames as \u0001sym\u0001 and
+          // yields no pair: only words of >= 2 symbols stay
           cur = graft.Materialize.truncate(
             cur.select(col("cnt"), sCol.as("s"))
-              .filter(size(split(col("s").substr(lit(2),
-                length(col("s")) - 2), "\u0001\u0001")) >= 2))
+              .filter(size(framedSymbols(col("s"))) >= 2))
           chain.clear()
         }
       }
@@ -467,62 +426,78 @@ object Bpe {
     (learned.toSeq, sizes.toSeq)
   }
 
-  /** [[trainBatched]] packaged as the t24 query form. */
-  def trainBatchedDF(docs: DataFrame, textCol: String, rounds: Int,
-                     batchMax: Int = 16,
-                     checkpointEvery: Int = 64): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    trainBatched(docs, textCol, rounds, batchMax, checkpointEvery)
-      .map(m => (m.rank.toLong, m.a, m.b, m.count))
-      .toDF("rk", "a", "b", "c")
-  }
-
   /** Per-document BPE token counts over a corpus: tokenize the
     * DISTINCT vocabulary once, join counts back through the tf table.
     * Returns `(idCol, n_ws_tokens, n_bpe_tokens)`.
     */
   def tokenCount(docs: DataFrame, idCol: String, textCol: String,
-                 rules: Seq[(String, String)] = merges): DataFrame = {
+                 rules: Seq[(String, String)] = merges): DataFrame =
+    countTokens(Words, docs, idCol, textCol, rules)
+
+  /** [[tokenCount]] under either alphabet: returns
+    * `(idCol, <alphabet.countCol>, n_bpe_tokens)`. */
+  private[functions] def countTokens(alphabet: Alphabet, docs: DataFrame,
+                                     idCol: String, textCol: String,
+                                     rules: Seq[(String, String)]): DataFrame = {
     val tf = graft.Materialize.reuse(
-      docs.select(col(idCol), explode(TextFns.tokens(col(textCol))).as("__t"))
+      docs.select(col(idCol), explode(alphabet.preTokens(col(textCol))).as("__t"))
         .groupBy(col(idCol), col("__t")).agg(count(lit(1)).as("__c")))
     val vocab = tf.select("__t").distinct()
-      .withColumn("__ns", size(tokenize(col("__t"), rules)).cast("long"))
+      .withColumn("__ns",
+        size(tokenize(alphabet.symbols(col("__t")), rules)).cast("long"))
     tf.join(vocab, Seq("__t"))
       .groupBy(col(idCol))
-      .agg(sum("__c").as("n_ws_tokens"),
+      .agg(sum("__c").as(alphabet.countCol),
         sum(col("__c") * col("__ns")).as("n_bpe_tokens"))
   }
+
+  /** md5 of the space-joined pieces — the stream fingerprint every
+    * hash-gated encode reports. */
+  private[functions] val md5Stream: Column => Column =
+    pieces => md5(array_join(pieces, " "))
 
   /** Per-document BPE ENCODING (t21c) — the step a training run
     * actually executes: every document's full subword sequence, in
     * word order, summarized as counts + an md5 fingerprint of the
     * space-joined piece stream (the whole sequence gate-checked
-    * without shipping it). Same one-kernel-call-per-DISTINCT-word
-    * shape as [[tokenCount]] — the segmentation joins back to the
-    * positional token stream, and the per-doc ordered reassembly is a
-    * sort of (position, pieces) pairs inside one aggregate. Returns
+    * without shipping it). Returns
     * `(idCol, n_ws_tokens, n_bpe_tokens, stream_fp)`.
     */
   def encodeFingerprint(docs: DataFrame, idCol: String, textCol: String,
-                        rules: Seq[(String, String)] = merges): DataFrame = {
+                        rules: Seq[(String, String)] = merges): DataFrame =
+    segmentOnce(Words, docs, idCol, textCol, rules,
+      array_join(_, " "), md5Stream, "stream_fp")
+
+  /** THE encode plan of both alphabets: one kernel call per DISTINCT
+    * token (the shape of [[tokenCount]]) — positional token explode,
+    * cached vocab segmentation with `piece` rendering each token's
+    * symbol array (joined symbols, or ids), join-back to the
+    * positions, and a per-doc ordered reassembly (a sort of
+    * (position, piece) pairs inside one aggregate) that `finish` turns
+    * into column `out`. Returns
+    * `(idCol, <alphabet.countCol>, n_bpe_tokens, out)`.
+    */
+  private[functions] def segmentOnce(alphabet: Alphabet, docs: DataFrame,
+                                     idCol: String, textCol: String,
+                                     rules: Seq[(String, String)],
+                                     piece: Column => Column,
+                                     finish: Column => Column,
+                                     out: String): DataFrame = {
     val tokPos = docs.select(col(idCol),
-      posexplode(TextFns.tokens(col(textCol))).as(Seq("__p", "__t")))
+      posexplode(alphabet.preTokens(col(textCol))).as(Seq("__p", "__t")))
     val vocab = graft.Materialize.reuse(
       tokPos.select("__t").distinct()
-        .withColumn("__arr", tokenize(col("__t"), rules))
-        .select(col("__t"), array_join(col("__arr"), " ").as("__pieces"),
+        .withColumn("__arr", tokenize(alphabet.symbols(col("__t")), rules))
+        .select(col("__t"), piece(col("__arr")).as("__pieces"),
           size(col("__arr")).cast("long").as("__ns")))
     tokPos.join(vocab, Seq("__t"))
       .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_ws_tokens"),
+      .agg(count(lit(1)).as(alphabet.countCol),
         sum(col("__ns")).as("n_bpe_tokens"),
         array_sort(collect_list(struct(col("__p"), col("__pieces"))))
           .as("__seq"))
-      .select(col(idCol), col("n_ws_tokens"), col("n_bpe_tokens"),
-        md5(array_join(transform(col("__seq"),
-          x => x.getField("__pieces")), " ")).as("stream_fp"))
+      .select(col(idCol), col(alphabet.countCol), col("n_bpe_tokens"),
+        finish(transform(col("__seq"), x => x.getField("__pieces"))).as(out))
   }
 }
 
@@ -643,12 +618,12 @@ case class BpeTokenize(child: Expression, rules: Seq[(String, String)])
   * `UTF8String.replace`). The point is CODEGEN SHAPE: the pairs ride
   * the references array, so the generated source is byte-identical
   * for every chain length and every training round of
-  * [[Bpe.trainFromVocab]] / [[Bpe.trainBatchedFromVocabWithSizes]]
-  * hits the whole-stage codegen source cache instead of compiling a
-  * fresh class per round — a 30-round gate run used to compile ~30
-  * distinct census plans per pass (and a 3000-merge depth run ~3000),
-  * which is precisely the code-cache pressure the round-18 BpeDepth
-  * record measured (JVM default 240 MB cache full at ~1000 plans).
+  * [[Bpe.trainWithSizes]] hits the whole-stage codegen source cache
+  * instead of compiling a fresh class per round — a 30-round gate
+  * run used to compile ~30 distinct census plans per pass (and a
+  * 3000-merge depth run ~3000), which is precisely the code-cache
+  * pressure the round-18 BpeDepth record measured (JVM default
+  * 240 MB cache full at ~1000 plans).
   */
 case class ReplaceChain(child: Expression,
                         finds: Seq[String], repls: Seq[String])

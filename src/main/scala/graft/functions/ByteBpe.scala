@@ -408,68 +408,35 @@ object ByteBpe {
                     rules: Seq[(String, String)] = merges): Column =
     Bpe.tokenize(byteUnicodeCol(preToken), rules)
 
+  /** The byte alphabet: GPT-2 pre-tokens of byte-unicode symbols —
+    * the [[Bpe.Alphabet]] every byte-level learn and encode plan
+    * runs on. */
+  private[graft] val Bytes =
+    Bpe.Alphabet(preTokens, byteUnicodeCol, "n_pre_tokens")
+
   /** LEARN a byte-level merges table from the corpus — the training
-    * side of the GPT-2 convention (t24e): [[Bpe.trainFromVocab]]'s
-    * exact census → argmax → replace loop (bit-identical semantics,
-    * same framing, same tie-break) over the byte-unicode framed
-    * DISTINCT PRE-TOKEN vocabulary instead of the whitespace-word
-    * one. Learned rules are byte-unicode pairs — 'Ġ'-prefixed
-    * entries appear naturally (a real GPT-2 merges.txt opens with
-    * "Ġ t"-shaped rules), and [[encode]]/[[tokenizeBytes]] apply
-    * them directly. Same scale shape as [[Bpe.train]]: one
-    * map-combined census exchange + one TakeOrdered(1) driver row
-    * per round over the vocab sliver.
+    * side of the GPT-2 convention (t24e): [[Bpe.train]]'s exact
+    * census → argmax → replace loop (bit-identical semantics, same
+    * framing, same tie-break, same `batchMax` and `checkpointEvery`)
+    * over the byte-unicode framed DISTINCT PRE-TOKEN vocabulary
+    * instead of the whitespace-word one. Learned rules are
+    * byte-unicode pairs — 'Ġ'-prefixed entries appear naturally (a
+    * real GPT-2 merges.txt opens with "Ġ t"-shaped rules), and
+    * [[encode]]/[[tokenizeBytes]] apply them directly. Same scale
+    * shape as [[Bpe.train]]: one map-combined census exchange + one
+    * TakeOrdered driver sliver per census over the vocab sliver.
     */
   def train(docs: DataFrame, textCol: String, rounds: Int,
-            checkpointEvery: Int = 64): Seq[Bpe.LearnedMerge] = {
-    val vocab = graft.Materialize.reuse(
-      docs.select(explode(preTokens(col(textCol))).as("pt"))
-        .groupBy("pt").agg(count(lit(1)).as("cnt"))
-        // frame per CHAR of the byte-unicode form: byte symbols ARE
-        // single chars, so the word-level framing carries over
-        .withColumn("s", regexp_replace(byteUnicodeCol(col("pt")),
-          "(.)", "\u0001$1\u0001"))
-        .select("cnt", "s"))
-    Bpe.trainFromVocab(vocab, rounds, checkpointEvery)
-  }
-
-  /** [[train]]'s BATCHED form — [[Bpe.trainBatched]]'s provably-
-    * equivalent multi-merge rounds over the byte-unicode pre-token
-    * vocabulary (round 18: the depth runs that make real vocab sizes
-    * cluster-time need batching at the byte level too; the loop is
-    * shared, only the vocab construction differs — see
-    * [[Bpe.trainBatchedFromVocabWithSizes]]'s acceptance conditions
-    * for why batched ≡ sequential). */
-  def trainBatched(docs: DataFrame, textCol: String, rounds: Int,
-                   batchMax: Int = 16,
-                   checkpointEvery: Int = 64): Seq[Bpe.LearnedMerge] =
-    trainBatchedWithSizes(docs, textCol, rounds, batchMax,
+            batchMax: Int = 1,
+            checkpointEvery: Int = 64): Seq[Bpe.LearnedMerge] =
+    Bpe.trainWithSizes(Bytes, docs, textCol, rounds, batchMax,
       checkpointEvery)._1
-
-  private[graft] def trainBatchedWithSizes(
-      docs: DataFrame, textCol: String, rounds: Int, batchMax: Int,
-      checkpointEvery: Int,
-      progress: (Int, Int) => Unit = (_, _) => ())
-  : (Seq[Bpe.LearnedMerge], Seq[Int]) = {
-    val vocab = graft.Materialize.reuse(
-      docs.select(explode(preTokens(col(textCol))).as("pt"))
-        .groupBy("pt").agg(count(lit(1)).as("cnt"))
-        .withColumn("s", regexp_replace(byteUnicodeCol(col("pt")),
-          "(.)", "\u0001$1\u0001"))
-        .select("cnt", "s"))
-    Bpe.trainBatchedFromVocabWithSizes(vocab, rounds, batchMax,
-      checkpointEvery, progress)
-  }
 
   /** [[train]] packaged as the t24e query form. */
   def trainDF(docs: DataFrame, textCol: String, rounds: Int,
-              checkpointEvery: Int = 64): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    train(docs, textCol, rounds, checkpointEvery)
-      .map(m => (m.rank.toLong, m.a, m.b, m.count))
-      .toDF("rk", "a", "b", "c")
-  }
+              checkpointEvery: Int = 64): DataFrame =
+    Bpe.rulesDF(docs, train(docs, textCol, rounds,
+      checkpointEvery = checkpointEvery))
 
   /** Per-document byte-level BPE token counts over a corpus —
     * [[Bpe.tokenCount]]'s exact shape with the GPT-2 pre-tokenizer
@@ -477,17 +444,8 @@ object ByteBpe {
     * counts back through the (id, pre-token, tf) table. Returns
     * `(idCol, n_pre_tokens, n_bpe_tokens)`. */
   def tokenCount(docs: DataFrame, idCol: String, textCol: String,
-                 rules: Seq[(String, String)] = merges): DataFrame = {
-    val tf = graft.Materialize.reuse(
-      docs.select(col(idCol), explode(preTokens(col(textCol))).as("__t"))
-        .groupBy(col(idCol), col("__t")).agg(count(lit(1)).as("__c")))
-    val vocab = tf.select("__t").distinct()
-      .withColumn("__ns", size(tokenizeBytes(col("__t"), rules)).cast("long"))
-    tf.join(vocab, Seq("__t"))
-      .groupBy(col(idCol))
-      .agg(sum("__c").as("n_pre_tokens"),
-        sum(col("__c") * col("__ns")).as("n_bpe_tokens"))
-  }
+                 rules: Seq[(String, String)] = merges): DataFrame =
+    Bpe.countTokens(Bytes, docs, idCol, textCol, rules)
 
   /** Per-document byte-level BPE ENCODING over a corpus (t21d) —
     * [[Bpe.encodeFingerprint]]'s exact shape with the GPT-2
@@ -499,36 +457,8 @@ object ByteBpe {
     * `(idCol, n_pre_tokens, n_bpe_tokens, stream_fp)`. */
   def encodeFingerprint(docs: DataFrame, idCol: String, textCol: String,
                         rules: Seq[(String, String)] = merges): DataFrame =
-    fingerprintWith(docs, idCol, textCol, rules,
-      arr => array_join(arr, " "), "stream_fp")
-
-  /** The ONE segment-once-per-DISTINCT-pre-token fingerprint plan
-    * behind [[encodeFingerprint]] and [[encodeIdFingerprint]]:
-    * positional pre-token explode, cached vocab segmentation with
-    * `pieceExpr` rendering each pre-token's symbol array to its
-    * joined form (symbols or ids), join-back, per-doc ordered md5. */
-  private def fingerprintWith(docs: DataFrame, idCol: String,
-                              textCol: String,
-                              rules: Seq[(String, String)],
-                              pieceExpr: Column => Column,
-                              fpName: String): DataFrame = {
-    val tokPos = docs.select(col(idCol),
-      posexplode(preTokens(col(textCol))).as(Seq("__p", "__t")))
-    val vocab = graft.Materialize.reuse(
-      tokPos.select("__t").distinct()
-        .withColumn("__arr", tokenizeBytes(col("__t"), rules))
-        .select(col("__t"), pieceExpr(col("__arr")).as("__pieces"),
-          size(col("__arr")).cast("long").as("__ns")))
-    tokPos.join(vocab, Seq("__t"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_pre_tokens"),
-        sum(col("__ns")).as("n_bpe_tokens"),
-        array_sort(collect_list(struct(col("__p"), col("__pieces"))))
-          .as("__seq"))
-      .select(col(idCol), col("n_pre_tokens"), col("n_bpe_tokens"),
-        md5(array_join(transform(col("__seq"),
-          x => x.getField("__pieces")), " ")).as(fpName))
-  }
+    Bpe.segmentOnce(Bytes, docs, idCol, textCol, rules,
+      array_join(_, " "), Bpe.md5Stream, "stream_fp")
 
   /** Per-document token-ID stream over a corpus (t21e — the bridge
     * from [[encodeFingerprint]]'s symbol pieces to the integer ids a
@@ -556,10 +486,10 @@ object ByteBpe {
                           rules: Seq[(String, String)],
                           ids: Map[String, Int]): DataFrame = {
     val idMap = typedlit(ids)
-    fingerprintWith(docs, idCol, textCol, rules,
+    Bpe.segmentOnce(Bytes, docs, idCol, textCol, rules,
       arr => array_join(transform(arr,
         x => coalesce(element_at(idMap, x), lit(-1)).cast("string")), " "),
-      "id_stream_fp")
+      Bpe.md5Stream, "id_stream_fp")
   }
 
   /** The MATERIAL per-document token-id stream — where
@@ -567,12 +497,11 @@ object ByteBpe {
     * hash-gating, this returns `(idCol, ids: array<int>)`, the actual
     * integer sequence a training-shard export writes
     * ([[graft.sources.MegatronSink]]). Same segment-once-per-
-    * DISTINCT-pre-token shape: positional pre-token explode, cached
-    * vocab segmentation mapped through the id table, join-back,
-    * per-document ordered flatten. A symbol missing from `ids` is
-    * impossible by construction; if it ever happened the `-1`
-    * sentinel trips the sink's range check loudly rather than
-    * writing a wrapped id. */
+    * DISTINCT-pre-token plan, each pre-token's pieces mapped through
+    * the id table and the per-document ordered id arrays flattened.
+    * A symbol missing from `ids` is impossible by construction; if it
+    * ever happened the `-1` sentinel trips the sink's range check
+    * loudly rather than writing a wrapped id. */
   def encodeIdStream(docs: DataFrame, idCol: String, textCol: String,
                      rules: Seq[(String, String)] = merges): DataFrame =
     encodeIdStream(docs, idCol, textCol, rules, idVocab(rules))
@@ -585,18 +514,9 @@ object ByteBpe {
                      rules: Seq[(String, String)],
                      ids: Map[String, Int]): DataFrame = {
     val idMap = typedlit(ids)
-    val tokPos = docs.select(col(idCol),
-      posexplode(preTokens(col(textCol))).as(Seq("__p", "__t")))
-    val vocab = graft.Materialize.reuse(
-      tokPos.select("__t").distinct()
-        .withColumn("__arr", tokenizeBytes(col("__t"), rules))
-        .select(col("__t"), transform(col("__arr"),
-          x => coalesce(element_at(idMap, x), lit(-1))).as("__ids")))
-    tokPos.join(vocab, Seq("__t"))
-      .groupBy(col(idCol))
-      .agg(array_sort(collect_list(struct(col("__p"), col("__ids"))))
-        .as("__seq"))
-      .select(col(idCol),
-        flatten(transform(col("__seq"), x => x.getField("__ids"))).as("ids"))
+    Bpe.segmentOnce(Bytes, docs, idCol, textCol, rules,
+      transform(_, x => coalesce(element_at(idMap, x), lit(-1))),
+      flatten, "ids")
+      .select(col(idCol), col("ids"))
   }
 }

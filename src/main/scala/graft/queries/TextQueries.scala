@@ -1029,7 +1029,8 @@ object TextQueries {
     * reproduce every rule AND its electing count (the t20
     * fixed-iteration discipline applied to tokenizer learning).
     * Shape: census over the DISTINCT vocab only, one map-combined
-    * exchange per round, 1 driver row per round ([[Bpe.train]]).
+    * exchange per round, 1 driver row per round
+    * ([[graft.functions.Bpe.train]]).
     */
   val t24BpeTrain = QueryDef(
     "t24_bpe_train",
@@ -1060,8 +1061,8 @@ object TextQueries {
   /** T24e: BYTE-level BPE merge TRAINING — the training side of
     * t21d's GPT-2 convention ([[graft.functions.ByteBpe.train]]):
     * t24's exact Sennrich census → argmax → replace loop
-    * ([[graft.functions.Bpe.trainFromVocab]], the alphabet-agnostic
-    * core both paths share) over the byte-unicode framed GPT-2
+    * ([[graft.functions.Bpe.trainWithSizes]], the alphabet-agnostic
+    * loop both paths share) over the byte-unicode framed GPT-2
     * PRE-TOKEN vocabulary instead of the whitespace-word one.
     * Learned rules are byte-unicode pairs — 'Ġ'-prefixed entries
     * arise naturally, exactly how a real GPT-2 merges.txt opens with
@@ -1135,10 +1136,11 @@ object TextQueries {
       t24RulesSelect(T24Rounds)))
 
   /** T24d: BATCHED multi-merge BPE training (judge r14 #7) —
-    * [[graft.functions.Bpe.trainBatched]]: per census, the longest
-    * safe prefix of the top-8 pairs applies in one round (safety =
-    * symbol-disjoint + concat-safe + created-pair bound + self-pair
-    * cut — see the Scaladoc proof sketch), cutting the one
+    * [[graft.functions.Bpe.train]] with `batchMax = 8`: per census,
+    * the longest safe prefix of the top-8 pairs applies in one round
+    * (safety = symbol-disjoint + concat-safe + created-pair bound +
+    * self-pair cut + pre-existing-product cut — see the proof sketch
+    * on [[graft.functions.Bpe.trainWithSizes]]), cutting the one
     * driver-round-trip-per-merge cost that makes a 32k-merge run
     * ~32k scheduled jobs. The batch is PROVABLY equal to that many
     * sequential Sennrich rounds, so the oracle is EXACTLY t24's
@@ -1148,7 +1150,7 @@ object TextQueries {
     */
   val t24dBpeBatched = QueryDef(
     "t24d_bpe_batched_train",
-    (s, dir) => graft.functions.Bpe.trainBatchedDF(
+    (s, dir) => graft.functions.Bpe.trainDF(
       table(s, dir, "documents"), "text", rounds = T24Rounds,
       batchMax = 8),
     Some("WITH " + t24BaseCtes(T24Rounds) + "\n      " +

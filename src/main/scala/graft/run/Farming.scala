@@ -42,15 +42,15 @@ final class Harvester(val runner: Runner, val store: ParquetStore) {
                     missingOnly: Boolean = false,
                     mode: Merge.Mode = Merge.NoConflicts): DataFrame = {
     val grid = Grid.expandDFs(resolveAxes(combos))
-    if (missingOnly) store.insertMissing(grid, runner.fn)
-    else if (!grid.isEmpty) store.mergeIn(runner.fn(grid), mode)
+    if (missingOnly) store.insertMissing(grid, runner.eval)
+    else if (!grid.isEmpty) store.mergeIn(runner.eval(grid), mode)
     store.load()
   }
 
   /** Harvest explicit cases (farming.py:768-790). */
   def harvestCases(cases: CaseSpec,
                    mode: Merge.Mode = Merge.NoConflicts): DataFrame = {
-    store.mergeIn(runner.fn(Grid.casesDF(spark, cases)), mode)
+    store.mergeIn(runner.eval(Grid.casesDF(spark, cases)), mode)
     store.load()
   }
 }
@@ -68,7 +68,7 @@ final class Sampler(val runner: Runner, val store: ParquetStore) {
   def sample(combos: ComboSpec, n: Int, seed: Long = 42): DataFrame = {
     val grid = Grid.expand(spark, combos)
     val picked = Grid.sample(grid, n, seed)
-    val out = runner.fn(picked)
+    val out = runner.eval(picked)
     store.append(out)
     store.load()
   }

@@ -69,12 +69,16 @@ final class Runner(
       df.withColumn(k, lit(v))
     }
 
+  /** Evaluate `grid`: the recorded constants attached, then `fn` —
+    * the one evaluation every run, harvest and sample goes through. */
+  def eval(grid: DataFrame): DataFrame = fn(attachConstants(grid))
+
   def runCombos(spark: SparkSession, combos: ComboSpec,
                 cases: Option[CaseSpec] = None,
                 shuffleSeed: Option[Long] = None): DataFrame = {
     val grid0 = Grid.expand(spark, combos, cases)
     val grid = shuffleSeed.fold(grid0)(s => Grid.shuffled(grid0, s))
-    val out = fn(attachConstants(grid))
+    val out = eval(grid)
     lastDF = Some(out)
     out
   }
@@ -83,7 +87,7 @@ final class Runner(
     * NULL-fills unvisited cells (case_runner.py:23-209).
     */
   def runCases(spark: SparkSession, cases: CaseSpec): DataFrame = {
-    val out = fn(attachConstants(Grid.casesDF(spark, cases)))
+    val out = eval(Grid.casesDF(spark, cases))
     lastDF = Some(out)
     out
   }

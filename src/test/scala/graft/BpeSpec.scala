@@ -129,30 +129,40 @@ class BpeSpec extends SparkSpec {
   test("trainBatched: multi-merge ≡ sequential on interacting AND " +
        "non-interacting fixtures; batching actually engages") {
     import spark.implicits._
-    // INTERACTING fixture: every top pair shares symbols / products
-    // with the next ("ababab…" makes (a,b) dominant, then (ab,ab) —
-    // the product of rule 1 IS a symbol of rule 2, so concat-safety
-    // forces m = 1 there), pinning the guards rather than the happy
-    // path
-    val inter = Seq((1L, ("ab" * 12 + " ") * 3 + "ab"),
-      (2L, "ababab ab ab")).toDF("doc_id", "text")
-    val seqI = Bpe.train(inter, "text", rounds = 6)
-    val (batI, sizesI) = Bpe.trainBatchedWithSizes(inter, "text",
-      rounds = 6, batchMax = 8, checkpointEvery = 64)
-    assert(batI == seqI, s"interacting fixture diverged: $batI vs $seqI")
+    // both batch sizes against the plain-Scala Algorithm 1, which
+    // shares no code with the Spark loop: batchMax = 1 pins the
+    // sequential loop itself, batchMax = 8 the batch acceptance rules
+    def learned(texts: Seq[String], rounds: Int, batchMax: Int) = {
+      val (got, sizes) = Bpe.trainWithSizes(Bpe.Words,
+        texts.toDF("text"), "text", rounds, batchMax, checkpointEvery = 64)
+      assert(got.map(_.rank) == got.indices)
+      (got.map(m => (m.a, m.b, m.count)), sizes)
+    }
+    val inter = SennrichReference.interacting
+    val refI = SennrichReference.learn(SennrichReference.wordVocab(inter), 6)
+    assert(refI.size == 6)
+    val (seqI, _) = learned(inter, 6, batchMax = 1)
+    assert(seqI == refI, s"sequential diverged on the interacting fixture: $seqI vs $refI")
+    val (batI, sizesI) = learned(inter, 6, batchMax = 8)
+    assert(batI == refI, s"interacting fixture diverged: $batI vs $refI")
     assert(sizesI.contains(1), s"expected forced m=1 rounds, got $sizesI")
+    val tied = SennrichReference.tiedParent
+    val refT = SennrichReference.learn(SennrichReference.wordVocab(tied), 6)
+    assert(refT.size == 6)
+    assert(learned(tied, 6, batchMax = 1)._1 == refT)
+    val (batT, sizesT) = learned(tied, 6, batchMax = 8)
+    assert(batT == refT, s"tied-parent fixture diverged: $batT vs $refT")
+    assert(sizesT.head == 2, s"expected the batch to stop after 2, got $sizesT")
     // MIXED pseudo-random fixture (the 260-round corpus): equality at
     // depth, and the accepted prefix must exceed 1 somewhere — the
     // batching is real, not a degenerate always-1
-    val rnd = new scala.util.Random(42)
-    val words = (0 until 40).map(_ =>
-      (0 until 15).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString)
-    val docs = Seq((1L, words.mkString(" ")),
-      (2L, words.take(20).mkString(" "))).toDF("doc_id", "text")
-    val seqR = Bpe.train(docs, "text", rounds = 120)
-    val (batR, sizesR) = Bpe.trainBatchedWithSizes(docs, "text",
-      rounds = 120, batchMax = 8, checkpointEvery = 64)
-    assert(batR == seqR, "batched training diverged from sequential")
+    val docs = SennrichReference.pseudoRandom
+    val refR = SennrichReference.learn(SennrichReference.wordVocab(docs), 120)
+    val (seqR, sizes1) = learned(docs, 120, batchMax = 1)
+    assert(seqR == refR, "sequential training diverged from Algorithm 1")
+    assert(sizes1.forall(_ == 1))
+    val (batR, sizesR) = learned(docs, 120, batchMax = 8)
+    assert(batR == refR, "batched training diverged from Algorithm 1")
     assert(sizesR.exists(_ > 1),
       s"batching never engaged (all prefixes 1): $sizesR")
     assert(sizesR.sum == 120 && batR.size == 120)

@@ -157,7 +157,7 @@ class ByteBpeSpec extends SparkSpec {
     import spark.implicits._
     // one word per doc, ASCII, no spaces: GPT-2 pre-tokens == the
     // words and byte-unicode is the identity, so byte-level training
-    // must equal word-level training EXACTLY (shared trainFromVocab)
+    // must equal word-level training EXACTLY (one shared loop)
     val solo = Seq.fill(4)("the").zipWithIndex ++
       Seq.fill(3)("tab").zipWithIndex ++ Seq.fill(2)("xy").zipWithIndex
     val soloDf = solo.zipWithIndex
@@ -386,17 +386,39 @@ class ByteBpeSpec extends SparkSpec {
 
   test("trainBatched ≡ train at the byte level (interacting and disjoint rules)") {
     import spark.implicits._
-    val docs = Seq(
+    // both batch sizes against the plain-Scala Algorithm 1 over the
+    // byte-unicode pre-token vocabulary (checkpointEvery = 6 crosses
+    // several checkpoints), on a natural-text fixture and on the
+    // word-level spec's interacting, tied-parent and pseudo-random
+    // fixtures
+    def check(texts: Seq[String], rounds: Int): Seq[Int] = {
+      val ref = SennrichReference.learn(SennrichReference.byteVocab(texts), rounds)
+      assert(ref.size == rounds, s"fixture dried up at ${ref.size} rounds")
+      val sizes = Seq(1, 8).map { batchMax =>
+        val (got, sizes) = Bpe.trainWithSizes(ByteBpe.Bytes,
+          texts.toDF("text"), "text", rounds, batchMax, checkpointEvery = 6)
+        assert(got.map(m => (m.rank, m.a, m.b, m.count)) ==
+          ref.zipWithIndex.map { case ((a, b, c), r) => (r, a, b, c) },
+          s"batchMax = $batchMax diverged from Algorithm 1")
+        sizes
+      }
+      assert(sizes.head.forall(_ == 1))
+      sizes.last
+    }
+    check(Seq(
       "the scan ran over the table the scan ran",
       "a big win for the quer over rows",
       "filter the rows filter the scan win win",
-      "numbers 123 456 123 123 and 456 again").toDF("text")
-    val rounds = 24
-    val seq = ByteBpe.train(docs, "text", rounds)
-    val bat = ByteBpe.trainBatched(docs, "text", rounds, batchMax = 8,
-      checkpointEvery = 6)
-    assert(bat.map(m => (m.rank, m.a, m.b, m.count)) ==
-      seq.map(m => (m.rank, m.a, m.b, m.count)))
+      "numbers 123 456 123 123 and 456 again"), 24)
+    // the public entry point runs the same loop
+    assert(ByteBpe.train(Seq("the tab the").toDF("text"), "text", 3,
+      batchMax = 8, checkpointEvery = 6).map(m => (m.a, m.b, m.count)) ==
+      SennrichReference.learn(SennrichReference.byteVocab(Seq("the tab the")), 3))
+    assert(check(SennrichReference.interacting, 6).contains(1))
+    assert(check(SennrichReference.tiedParent, 8).head == 2)
+    assert(check(SennrichReference.pseudoRandom, 30).exists(_ > 1),
+      "batching never engaged at the byte level")
+    graft.Materialize.releaseAll()
   }
 
   test("decodeIds names an orphaned id instead of a bare lookup failure") {

@@ -2,7 +2,7 @@ package graft
 
 import graft.batch.Crop
 import graft.expand.Grid
-import graft.run.{Farming, Harvester, Runner}
+import graft.run.{Farming, Harvester, Runner, Sampler}
 import graft.spec._
 import graft.store.{ConcurrentWriteException, ParquetStore}
 import org.apache.spark.sql.functions._
@@ -87,6 +87,29 @@ class FarmingSpec extends SparkSpec {
     assert(c.h.store.load().count() == 1)
   }
 
+  test("Runner constants reach every harvest and sample") {
+    // y reads the recorded constant c, so any path that evaluates
+    // without attaching it fails analysis
+    val runner = Runner.ofColumns(Constants(recorded = Map("c" -> 5L)),
+      "y" -> col("a") * col("c"))
+    def rows(df: org.apache.spark.sql.DataFrame) = collectSorted(df.select("a", "c", "y"))
+    def expect(as: Long*) = as.map(a => Seq(a, 5L, 5L * a))
+    val h = new Harvester(runner, new ParquetStore(spark, tmp() + "/k", Seq("a")))
+    assert(rows(h.harvestCombos(Seq("a" -> Some(Seq(1L, 2L))))) == expect(1L, 2L))
+    assert(rows(h.harvestCombos(Seq("a" -> Some(Seq(1L, 2L, 3L))),
+      missingOnly = true)) == expect(1L, 2L, 3L))
+    assert(rows(h.harvestCases(CaseSpec(Seq("a"), Seq(Seq(4L))))) ==
+      expect(1L, 2L, 3L, 4L))
+    // missing_only on a store that does not exist yet (the create path)
+    val fresh = new Harvester(runner, new ParquetStore(spark, tmp() + "/k2", Seq("a")))
+    assert(rows(fresh.harvestCombos(Seq("a" -> Some(Seq(7L))), missingOnly = true)) ==
+      expect(7L))
+    val sm = new Sampler(runner, new ParquetStore(spark, tmp() + "/ks", Seq("a")))
+    val sampled = sm.sample(ComboSpec.of("a" -> (1L to 10L)), 3, seed = 1)
+    assert(sampled.count() == 3)
+    assert(sampled.filter(col("c") =!= 5L || col("y") =!= col("a") * 5L).count() == 0)
+  }
+
   test("Sampler: n rows appended per sample call, all from the grid") {
     val sm = Farming.sampler(spark, tmp() + "/s", Seq("a", "b"),
       "y" -> (col("a") - col("b")))
@@ -150,6 +173,24 @@ class CropSpec extends SparkSpec {
     val ys = crop.reap().orderBy("a").select("y").as[Long].collect().toSeq
     // batch 0 (a=1,2) regrown with *10; batch 1 untouched
     assert(ys == Seq(10L, 20L, 3L, 4L))
+    assert(crop.checkBad().isEmpty)
+  }
+
+  test("B8: checkBad flags unreadable result partitions, not ungrown batches") {
+    val dir = tmp()
+    val crop = new Crop(spark, dir, Seq("a"))
+    crop.sow((1L to 6L).toDF("a"), numBatches = Some(3))
+    crop.grow(0L, evalFn2)
+    crop.grow(1L, evalFn2)
+    // half grown: batch 2 has no result partition yet — missing, not bad
+    assert(crop.missingBatches() == Seq(2L))
+    assert(crop.checkBad().isEmpty)
+    // a corrupted part file in a grown batch must still be flagged
+    val part = new java.io.File(s"$dir/results/batch_id=1").listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    Files.write(part.toPath, "not parquet".getBytes("UTF-8"))
+    assert(crop.checkBad() == Seq(1L))
+    crop.grow(1L, evalFn2) // regrowth overwrites the bad partition
     assert(crop.checkBad().isEmpty)
   }
 
