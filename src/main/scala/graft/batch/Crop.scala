@@ -32,7 +32,6 @@ final class Crop(val spark: SparkSession, val dir: String,
 
   def isSown: Boolean = // root _SUCCESS = sow's job actually committed
     fs.exists(new org.apache.hadoop.fs.Path(pendingPath, "_SUCCESS"))
-  def hasResults: Boolean = fs.exists(new org.apache.hadoop.fs.Path(resultsPath))
 
   /** B2 `choose_batch_settings` (cropping.py:236-288): exactly one of
     * batchSize/numBatches; returns the batch count for `n` points. */

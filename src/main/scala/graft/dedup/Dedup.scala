@@ -390,10 +390,6 @@ object Dedup {
         org.apache.spark.sql.GraftSqlShims.expression(hashCol), as, bs))
   }
 
-  /** MinHash signature from raw shingles (hashes them first). */
-  def minHashSignature(shingleCol: Column, k: Int): Column =
-    minHashSignatureFromHashes(transform(shingleCol, s => xxhash64(s)), k)
-
   /** Sub-bucket salt for the flooded-bucket guard in [[bandedPairs]] /
     * [[asymmetricBandedPairs]]. Production default is [[BucketSalt.XxHash]]
     * (one 64-bit hash per row, codegen'd); [[BucketSalt.Md5]] is the

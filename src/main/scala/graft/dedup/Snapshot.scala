@@ -2,7 +2,8 @@ package graft.dedup
 
 import graft.functions.TextFns
 import graft.stats.Benchmarking
-import graft.store.{StoreWrite, WriteLease}
+import graft.store.{Artifact, TombstoneSet}
+import graft.store.Artifact.{Fresh, Table}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,10 +16,11 @@ import org.apache.spark.sql.functions._
   * the dedup side-indexes a 100 TB refresh needs).
   *
   * Four catalog tables, all written ONCE at corpus build and reused by
-  * every delta, through the bucket-aligned catalog-table writer
-  * [[graft.store.StoreWrite.writeBucketed]] that [[graft.store.BucketedStore]]
-  * uses too (bucketed+sorted tables join/aggregate store-side with NO
-  * exchange), under one [[graft.store.WriteLease]] for all of them:
+  * every delta, plus a tombstone table; the persisted-artifact core
+  * [[graft.store.Artifact]] holds their one lease, their bucketed writer
+  * (bucketed+sorted tables join/aggregate store-side with NO exchange)
+  * and the append rules, and [[graft.store.TombstoneSet]] the
+  * tombstones:
   *
   *  - `<prefix>_corpus`  (doc_id, <keep cols>, fp): the surviving
   *    corpus rows, bucketed by fp.
@@ -55,51 +57,46 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
                           val bands: Int = 16, val rows: Int = 4,
                           val threshold: Double = 0.8,
                           val bucketCap: Int = 100000) {
-  private val corpusT = s"${prefix}_corpus"
-  private val seenT = s"${prefix}_seen"
-  private val sigsT = s"${prefix}_sigs"
-  private val shinglesT = s"${prefix}_shingles"
-  private val tombsT = s"${prefix}_tombs"
+  private val corpusT = Table(s"${prefix}_corpus", Seq("fp"))
+  private val seenT = Table(s"${prefix}_seen", Seq("fp"))
+  private val sigsT = Table(s"${prefix}_sigs", Seq("band", "bucket"))
+  private val shinglesT = Table(s"${prefix}_shingles", Seq("id"))
+  private val tombsT = Table(s"${prefix}_tombs", Seq("id"))
+  private val art = new Artifact(spark, spark.conf.get("spark.sql.warehouse.dir") +
+    s"/graft-snap-$prefix", Seq(corpusT, seenT, sigsT, shinglesT, tombsT), nBuckets)
+  private val tombs = new TombstoneSet(spark, s"snapshot $prefix",
+    "a writeCorpus rebuild compacts them out; drop them from the delta or rebuild first")(
+    Option.when(spark.catalog.tableExists(tombsT.name))(art.read(tombsT)),
+    art.write(_, tombsT, SaveMode.Append))
 
-  /** What the single-writer lease over all five tables is keyed on
-    * (the store contract): a concurrent build/commit fails loudly,
-    * never silently interleaves. */
-  private[graft] val leaseDest =
-    spark.conf.get("spark.sql.warehouse.dir") + s"/graft-snap-$prefix"
+  /** What the single-writer lease over all five tables is keyed on. */
+  private[graft] val leaseDest = art.leaseDest
 
   /** Remove a verified-stale lease left by a crashed writer. */
-  def breakLease(): Unit = WriteLease.breakLease(spark, leaseDest)
+  def breakLease(): Unit = art.breakLease()
 
-  private def writeBucketed(df: DataFrame, tbl: String,
-                            keys: Seq[String], mode: SaveMode): Unit =
-    StoreWrite.writeBucketed(spark, df, tbl, nBuckets, keys, mode)
-
-  def corpus(): DataFrame = spark.table(corpusT)
+  def corpus(): DataFrame = art.read(corpusT)
 
   /** The pending tombstone ids `(id)` — empty until a [[takedown]],
     * cleared by the next [[writeCorpus]] rebuild. Public so a release
     * AUDIT (cp9) can count erased ids in downstream artifacts — the
     * check a data-protection officer actually asks for. */
-  def tombstones(): DataFrame =
-    if (spark.catalog.tableExists(tombsT)) spark.table(tombsT)
-    else spark.range(0).select(col("id"))
+  def tombstones(): DataFrame = tombs.ids()
 
   /** [[corpus]] minus tombstoned ids — the read every consumer should
     * use after any [[takedown]]; `idCol` names the id column the
     * corpus was written with. */
-  def liveCorpus(idCol: String): DataFrame =
-    minusTombs(spark.table(corpusT), idCol)
+  def liveCorpus(idCol: String): DataFrame = tombs.minus(corpus(), idCol)
 
   /** Right-to-erasure for the SNAPSHOT (d15) — the n10 contract
-    * applied to the dedup store: deletion is a delta-sized tombstone
-    * append under the lease (never a store rewrite — at 10¹¹ rows a
-    * physical delete re-shuffles four tables to drop a handful of
-    * ids), and every subsequent read — [[liveCorpus]] and ALL of
-    * [[ingestDelta]]'s side-table probes — anti-joins the tombstone
-    * sliver (broadcast at any realistic takedown size). A removed
-    * doc therefore vanishes from dedup memory: an identical or
+    * applied to the dedup store, through the artifact core's
+    * [[graft.store.TombstoneSet]]: [[liveCorpus]] and ALL of
+    * [[ingestDelta]]'s side-table probes read minus the tombstones, so
+    * a removed doc vanishes from dedup memory: an identical or
     * near-identical delta doc arriving later SURVIVES ingestion
-    * instead of being dropped against the erased row.
+    * instead of being dropped against the erased row, and a delta
+    * carrying a tombstoned id itself fails with
+    * [[graft.store.TombstonedIdsException]].
     *
     * Fidelity boundary (stated, the n10 refit discipline): the
     * snapshot persists only exact-stage KEEPERS, so a store doc that
@@ -112,24 +109,16 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
     * leave the candidate space.
     */
   def takedown(ids: DataFrame, idCol: String): Unit =
-    WriteLease.withLease(spark, leaseDest, "snapshot-takedown") {
-      // id stored AS WRITTEN — a long cast would NULL out string ids
-      // and the anti-join would silently erase nothing (review r13)
-      val out = ids.select(col(idCol).as("id")).distinct()
-      if (spark.catalog.tableExists(tombsT))
-        writeBucketed(out, tombsT, Seq("id"), SaveMode.Append)
-      else {
-        StoreWrite.dropTable(spark, tombsT) // a prior session's location
-        writeBucketed(out, tombsT, Seq("id"), SaveMode.ErrorIfExists)
-      }
-    }
+    art.withLease("snapshot-takedown")(tombs.add(ids, idCol))
 
-  /** Anti-join the tombstone sliver (no-op when none exists). */
-  private def minusTombs(df: DataFrame, idName: String): DataFrame =
-    if (!spark.catalog.tableExists(tombsT)) df
-    else df.join(
-      broadcast(spark.table(tombsT).select(col("id").as(idName))),
-      Seq(idName), "left_anti")
+  /** The exact stage: the first row by `idCol` per text fingerprint,
+    * which it carries as `fp`. */
+  private def keepFirst(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val fp = TextFns.fingerprint(col(textCol))
+    docs.withColumn("fp", fp)
+      .withColumn("__rn", row_number().over(Window.partitionBy(fp).orderBy(col(idCol))))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
 
   /** Full (re)build: run the complete dedup pipeline over `docs` and
     * persist corpus + side tables. One shingle pass: the (id, h) stage
@@ -138,27 +127,21 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
     */
   def writeCorpus(docs: DataFrame, idCol: String, textCol: String,
                   keepCols: Seq[String] = Nil): Unit =
-    WriteLease.withLease(spark, leaseDest, "snapshot-build") {
+    art.withLease("snapshot-build") {
       // tombstones clear too: rebuild IS the compaction point
-      Seq(corpusT, seenT, sigsT, shinglesT, tombsT).foreach(StoreWrite.dropTable(spark, _))
-      val fp = TextFns.fingerprint(col(textCol))
-      val w = Window.partitionBy(fp).orderBy(col(idCol))
-      val exact = graft.Materialize.reuse(
-        docs.withColumn("fp", fp)
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn"))
+      art.dropTables()
+      val exact = graft.Materialize.reuse(keepFirst(docs, idCol, textCol))
       val sh = Dedup.hashedShingles(exact, idCol, textCol, n, Nil)
       val banded = graft.Materialize.reuse(Dedup.minHashBanded(sh, bands, rows))
       val drops = Dedup.nearDupDrops(
         Dedup.verifyJaccard(Dedup.bandedPairs(banded, bucketCap), sh, threshold))
       val surv = exact.join(
         drops.select(col("drop_id").as(idCol)), Seq(idCol), "left_anti")
-      writeBucketed(surv.select((idCol +: keepCols :+ "fp").map(col): _*),
-        corpusT, Seq("fp"), SaveMode.ErrorIfExists)
-      writeBucketed(exact.select(col(idCol).as("id"), col("fp")),
-        seenT, Seq("fp"), SaveMode.ErrorIfExists)
-      writeBucketed(banded, sigsT, Seq("band", "bucket"), SaveMode.ErrorIfExists)
-      writeBucketed(sh, shinglesT, Seq("id"), SaveMode.ErrorIfExists)
+      art.write(surv.select((idCol +: keepCols :+ "fp").map(col): _*),
+        corpusT, SaveMode.ErrorIfExists)
+      art.write(exact.select(col(idCol).as("id"), col("fp")), seenT, SaveMode.ErrorIfExists)
+      art.write(banded, sigsT, SaveMode.ErrorIfExists)
+      art.write(sh, shinglesT, SaveMode.ErrorIfExists)
     }
 
   /** Dedup `delta` against the snapshot (and against itself) and
@@ -172,12 +155,13 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
     * `idempotentCommit` makes a REPLAYED commit of the same delta
     * converge instead of duplicating (the at-least-once `foreachBatch`
     * contract of [[graft.streaming.Streaming.incrementalDedupSink]]):
-    * every append is anti-joined by id against its target table
-    * first. Replay after a crash at ANY point between the four
-    * appends lands exactly the missing rows — the dedup verdicts
-    * recompute identically (a half-committed delta's own store rows
-    * can't pair with themselves: same id is filtered; delta-delta
-    * pairs dedupe through `distinct`), each append is job-atomic
+    * each append lands only its fresh ids
+    * ([[graft.store.Artifact.appendFresh]]). Replay after a crash at
+    * ANY point between the four appends lands exactly the missing
+    * rows — the dedup verdicts recompute identically (a
+    * half-committed delta's own store rows can't pair with themselves:
+    * same id is filtered; delta-delta pairs dedupe through
+    * `distinct`), each append is job-atomic
     * (file-commit protocol), and the id anti-join skips whatever
     * already landed. Cost: one column-pruned id scan per table per
     * commit — a batch pipeline committing once should leave it off; a
@@ -189,49 +173,22 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
                   commit: Boolean = false,
                   idempotentCommit: Boolean = false): DataFrame =
     Benchmarking.span(spark, "snapshot-ingest") {
-    // TOMBSTONED IDS ARE FROZEN UNTIL REBUILD (the n10 batch
-    // contract): re-ingesting a taken-down id would land new rows the
-    // idempotent anti-joins skip while the tombstone keeps every read
-    // hiding it — silent half-visibility. Fail loudly; the remedy is
-    // a writeCorpus rebuild (the compaction point).
-    if (spark.catalog.tableExists(tombsT)) {
-      val nT = delta.select(col(idCol)).distinct()
-        .join(spark.table(tombsT).select(col("id").as(idCol)),
-          Seq(idCol), "left_semi").count()
-      if (nT > 0) throw new IllegalArgumentException(
-        s"$nT delta id(s) have pending snapshot tombstones " +
-          s"(prefix $prefix): tombstoned ids are frozen until a " +
-          "writeCorpus rebuild compacts them out; drop them from the " +
-          "delta or rebuild first")
-    }
-    val fp = TextFns.fingerprint(col(textCol))
-    val w = Window.partitionBy(fp).orderBy(col(idCol))
+    tombs.frozen(delta, idCol)
     // exact stage: keep-first per fingerprint WITHIN the delta, then
     // anti-join the seen-fp census (bucketed on fp: store side reads
     // with no exchange; the delta side shuffles to match — the
     // asymmetric cost a refresh actually wants)
-    // commit path: lineage TRUNCATED, not just persisted — appending to
-    // the seen/sigs/shingles tables below makes Spark's CacheManager
-    // RECACHE (= recompute) every cached plan that references them, and
-    // a recomputed anti-join against the just-updated census would
-    // erase the survivors it is about to return
-    val matz: DataFrame => DataFrame =
-      if (commit) graft.Materialize.truncate else graft.Materialize.reuse
-    val dNew = matz(
-      delta.withColumn("fp", fp)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-        .join(minusTombs(spark.table(seenT), "id").select("fp"),
-          Seq("fp"), "left_anti"))
+    val dNew = art.stage(keepFirst(delta, idCol, textCol)
+      .join(tombs.minus(art.read(seenT), "id").select("fp"), Seq("fp"), "left_anti"), commit)
     val dsh = Dedup.hashedShingles(dNew, idCol, textCol, n, Nil)
     val dBanded = graft.Materialize.reuse(Dedup.minHashBanded(dsh, bands, rows))
     // delta-vs-(store ∪ delta) banded candidates: the cap census reads
     // the sigs table (bucketed on (band, bucket)) exchange-free
     val pairs = Dedup.asymmetricBandedPairs(
-      minusTombs(spark.table(sigsT), "id"), dBanded, bucketCap)
+      tombs.minus(art.read(sigsT), "id"), dBanded, bucketCap)
     // verification shingles: store side from the persisted table
     // (the corpus is NOT re-shingled), delta side from this pass
-    val allSh = minusTombs(spark.table(shinglesT), "id").unionByName(dsh)
+    val allSh = tombs.minus(art.read(shinglesT), "id").unionByName(dsh)
     val verified = Dedup.verifyJaccard(pairs, allSh, threshold)
     // CC over delta-touching pairs only; a cluster's min is a store id
     // whenever any store doc is reachable (store ids < delta ids), so
@@ -241,35 +198,22 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
       .select(col("id").as(idCol))
     val surv = dNew.join(drops, Seq(idCol), "left_anti")
     if (!commit) surv.select((idCol +: keepCols).map(col): _*)
-    else WriteLease.withLease(spark, leaseDest, "snapshot-commit") {
-      // truncated for the same recache reason as dNew: surv's lineage
-      // reads sigs/shingles, which the appends below update
+    else art.withLease("snapshot-commit") {
       val kept = graft.Materialize.truncate(
         surv.select((idCol +: keepCols :+ "fp").map(col): _*))
-      // replay-idempotent append: rows whose id the target already
-      // holds are skipped (truncated BEFORE the write — the append
-      // must not re-scan its own target mid-job)
-      def appendFresh(df: DataFrame, tbl: String, bucketKeys: Seq[String],
-                      dfIdCol: String): Unit = {
-        val out =
-          if (!idempotentCommit) df
-          else graft.Materialize.truncate(df.join(
-            spark.table(tbl).select(col(dfIdCol)), Seq(dfIdCol), "left_anti"))
-        writeBucketed(out, tbl, bucketKeys, SaveMode.Append)
-      }
-      appendFresh(kept, corpusT, Seq("fp"), idCol)
-      appendFresh(dNew.select(col(idCol).as("id"), col("fp")),
-        seenT, Seq("fp"), "id")
-      appendFresh(dBanded, sigsT, Seq("band", "bucket"), "id")
-      appendFresh(dsh, shinglesT, Seq("id"), "id")
+      art.appendFresh(idempotentCommit)(
+        Fresh(kept, corpusT, idCol),
+        Fresh(dNew.select(col(idCol).as("id"), col("fp")), seenT),
+        Fresh(dBanded, sigsT),
+        Fresh(dsh, shinglesT))
       kept.drop("fp")
     }
   }
 }
 
 /** Persisted artifacts of the CONTAINMENT-SKETCH family (d13/d14) —
-  * the [[DedupSnapshot]] discipline (one lease, the shared
-  * [[graft.store.StoreWrite.writeBucketed]] writer) applied to the
+  * the [[DedupSnapshot]] discipline (the [[graft.store.Artifact]] core:
+  * one lease, the bucketed writer, the fresh-rows append) applied to the
   * bottom-k sketches: two catalog tables written once at corpus build
   * and probed by every refresh, so the store is never re-sketched (the
   * d14 contract, now with a durable home instead of caller-held frames):
@@ -300,32 +244,28 @@ final class SketchStore(val spark: SparkSession, val prefix: String,
                         val k: Int = 32, val threshold: Double = 0.8,
                         val bucketCap: Int = 100000,
                         val salt: Dedup.BucketSalt = Dedup.BucketSalt.XxHash) {
-  private val skT = s"${prefix}_sk"
-  private val idxT = s"${prefix}_skidx"
+  private val skT = Table(s"${prefix}_sk", Seq("id"))
+  private val idxT = Table(s"${prefix}_skidx", Seq("bucket"))
+  private val art = new Artifact(spark,
+    spark.conf.get("spark.sql.warehouse.dir") + s"/graft-sketch-$prefix", Seq(skT, idxT), nBuckets)
 
   /** What the single-writer lease over both tables is keyed on. */
-  private[graft] val leaseDest =
-    spark.conf.get("spark.sql.warehouse.dir") + s"/graft-sketch-$prefix"
+  private[graft] val leaseDest = art.leaseDest
 
   /** Remove a verified-stale lease left by a crashed writer. */
-  def breakLease(): Unit = WriteLease.breakLease(spark, leaseDest)
+  def breakLease(): Unit = art.breakLease()
 
-  private def writeBucketed(df: DataFrame, tbl: String,
-                            keys: Seq[String], mode: SaveMode): Unit =
-    StoreWrite.writeBucketed(spark, df, tbl, nBuckets, keys, mode)
-
-  def sketches(): DataFrame = spark.table(skT)
-  def index(): DataFrame = spark.table(idxT)
+  def sketches(): DataFrame = art.read(skT)
+  def index(): DataFrame = art.read(idxT)
 
   /** Full (re)build: sketch `docs` once, persist table + index. */
   def build(docs: DataFrame, idCol: String, textCol: String): Unit =
-    WriteLease.withLease(spark, leaseDest, "sketch-build") {
-      Seq(skT, idxT).foreach(StoreWrite.dropTable(spark, _))
+    art.withLease("sketch-build") {
+      art.dropTables()
       val sk = graft.Materialize.reuse(
         Dedup.bottomKSketches(docs, idCol, textCol, n, k))
-      writeBucketed(sk, skT, Seq("id"), SaveMode.ErrorIfExists)
-      writeBucketed(Dedup.bandedSketchIndex(sk), idxT, Seq("bucket"),
-        SaveMode.ErrorIfExists)
+      art.write(sk, skT, SaveMode.ErrorIfExists)
+      art.write(Dedup.bandedSketchIndex(sk), idxT, SaveMode.ErrorIfExists)
     }
 
   /** Probe the store with a delta and return the delta-touching
@@ -337,12 +277,7 @@ final class SketchStore(val spark: SparkSession, val prefix: String,
                   commit: Boolean = false,
                   idempotentCommit: Boolean = false): DataFrame =
     Benchmarking.span(spark, "sketch-ingest") {
-    // commit path truncates (the DedupSnapshot recache discipline: the
-    // appends below update the very tables the pair plan reads)
-    val matz: DataFrame => DataFrame =
-      if (commit) graft.Materialize.truncate else graft.Materialize.reuse
-    val dsk = matz(Dedup.bottomKSketches(delta, idCol, textCol, n, k))
-    val dIds = dsk.select(col("id"))
+    val dsk = art.stage(Dedup.bottomKSketches(delta, idCol, textCol, n, k), commit)
     // replay determinism: a delta row already committed by a crashed
     // attempt must not appear on BOTH sides of the union. No broadcast
     // HINT: the anti-join key set is the WHOLE delta id column — a
@@ -351,23 +286,17 @@ final class SketchStore(val spark: SparkSession, val prefix: String,
     // which a forced broadcast would OOM instead (the tombstone
     // slivers elsewhere are bounded by takedown volume; this one is
     // bounded only by the caller's batch size)
-    def minusDelta(df: DataFrame): DataFrame =
-      df.join(dIds, Seq("id"), "left_anti")
+    def minusDelta(df: DataFrame) = df.join(dsk.select(col("id")), Seq("id"), "left_anti")
     val pairs = Dedup.containmentSketchDeltaFromSketches(
       minusDelta(sketches()), minusDelta(index()), dsk,
       k, threshold, bucketCap, salt)
     if (!commit) pairs
-    else WriteLease.withLease(spark, leaseDest, "sketch-commit") {
+    else art.withLease("sketch-commit") {
+      // probed now, under the lease: a caller's later action would
+      // probe a store that other writers may have moved since
       val out = graft.Materialize.truncate(pairs)
-      def appendFresh(df: DataFrame, tbl: String, keys: Seq[String]): Unit = {
-        val fresh =
-          if (!idempotentCommit) df
-          else graft.Materialize.truncate(df.join(
-            spark.table(tbl).select(col("id")), Seq("id"), "left_anti"))
-        writeBucketed(fresh, tbl, keys, SaveMode.Append)
-      }
-      appendFresh(dsk, skT, Seq("id"))
-      appendFresh(Dedup.bandedSketchIndex(dsk), idxT, Seq("bucket"))
+      art.appendFresh(idempotentCommit)(
+        Fresh(dsk, skT), Fresh(Dedup.bandedSketchIndex(dsk), idxT))
       out
     }
   }

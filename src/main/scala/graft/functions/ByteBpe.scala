@@ -235,20 +235,25 @@ object ByteBpe {
     * would emit well-formed-but-wrong id streams. Returns
     * `(rules, ids)` ready for [[encodeIdFingerprint]]. */
   def loadArtifacts(mergesText: String,
-                    encoderText: String): (Seq[(String, String)], Map[String, Int]) = {
-    val rules = parseMergesFile(mergesText)
-    val enc = parseEncoderJson(encoderText)
+                    encoderText: String): (Seq[(String, String)], Map[String, Int]) =
+    checkIds(parseMergesFile(mergesText), parseEncoderJson(encoderText), "encoder.json", "symbol")
+
+  /** `(rules, enc)` if `enc` holds exactly [[idVocab]]`(rules)`;
+    * otherwise fail naming the first drifted or unknown entry. `file`
+    * names the id artifact and `noun` its entries in the messages. */
+  private def checkIds(rules: Seq[(String, String)], enc: Map[String, Int], file: String,
+                       noun: String): (Seq[(String, String)], Map[String, Int]) = {
     val expected = idVocab(rules)
     expected.foreach { case (sym, id) =>
       val got = enc.get(sym)
       require(got.contains(id),
-        s"encoder.json: symbol '$sym' has id ${got.fold("<absent>")(_.toString)}" +
+        s"$file: symbol '$sym' has id ${got.fold("<absent>")(_.toString)}" +
           s", expected $id (${if (id < 256) s"base byte $id"
           else s"256 + merge rank ${id - 256}"})")
     }
     enc.keys.find(!expected.contains(_)).foreach { sym =>
       throw new IllegalArgumentException(
-        s"encoder.json: symbol '$sym' (id ${enc(sym)}) does not appear in " +
+        s"$file: $noun '$sym' (id ${enc(sym)}) does not appear in " +
           "merges.txt — the artifacts disagree")
     }
     (rules, enc)
@@ -307,24 +312,8 @@ object ByteBpe {
     * base64 ranks; either id artifact must agree with the merge
     * table under the same 256+rank convention or fail loudly. */
   def loadTiktokenArtifacts(mergesText: String, tiktokenText: String)
-  : (Seq[(String, String)], Map[String, Int]) = {
-    val rules = parseMergesFile(mergesText)
-    val enc = parseTiktoken(tiktokenText)
-    val expected = idVocab(rules)
-    expected.foreach { case (sym, id) =>
-      val got = enc.get(sym)
-      require(got.contains(id),
-        s".tiktoken: symbol '$sym' has id ${got.fold("<absent>")(_.toString)}" +
-          s", expected $id (${if (id < 256) s"base byte $id"
-          else s"256 + merge rank ${id - 256}"})")
-    }
-    enc.keys.find(!expected.contains(_)).foreach { sym =>
-      throw new IllegalArgumentException(
-        s".tiktoken: token '$sym' (id ${enc(sym)}) does not appear in " +
-          "merges.txt — the artifacts disagree")
-    }
-    (rules, enc)
-  }
+  : (Seq[(String, String)], Map[String, Int]) =
+    checkIds(parseMergesFile(mergesText), parseTiktoken(tiktokenText), ".tiktoken", "token")
 
   // ---------------------------------------------------------------
   // driver/test-side scalar path (the spec surface)

@@ -53,7 +53,4 @@ object ComplexFns {
   /** Sum a complex column in one aggregation (component-wise). */
   def sumComplex(z: Column): Column =
     complex(sum(re(z)), sum(im(z)))
-
-  def meanComplex(z: Column): Column =
-    complex(avg(re(z)), avg(im(z)))
 }

@@ -58,14 +58,6 @@ object TextFns {
     (length(text) - length(regexp_replace(text, "[\\p{Punct}]", ""))).cast("double") /
       greatest(length(text), lit(1)).cast("double")
 
-  /** Ratio of tokens that are in `words` (e.g. stopwords), counting
-    * repeats — occurrences / total tokens. */
-  def wordSetRatio(text: Column, words: Seq[String]): Column = {
-    val t = tokens(text)
-    size(filter(t, x => x.isin(words: _*))).cast("double") /
-      greatest(size(t), lit(1)).cast("double")
-  }
-
   /** Count of tokens contained in `words` (with repeats). */
   def wordSetHits(text: Column, words: Seq[String]): Column =
     size(filter(tokens(text), x => x.isin(words: _*)))

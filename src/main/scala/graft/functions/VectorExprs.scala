@@ -27,7 +27,8 @@ object VectorExprs {
   /** Cosine similarity in a single fused pass (dot + both norms). */
   def cosine(a: Column, b: Column): Column = GraftSqlShims.column(VecCosine(expr(a), expr(b)))
 
-  /** L2-normalized copy of a double-array column. */
+  /** L2-normalized copy of a double-array column (a normalized corpus
+    * makes cosine a plain [[dot]]: normalize once, query many). */
   def l2Normalize(v: Column): Column = GraftSqlShims.column(VecL2Norm(expr(v)))
 
   /** Random-hyperplane signature: sign bit of the projection onto each

@@ -159,7 +159,7 @@ object Clustering {
     val r = a.select(col(idCol).as("rid"), col("v").as("rv"), col("centroid"))
     val dups = l.join(r, Seq("centroid"))
       .filter(col("rid") < col("lid") &&
-        Similarity.cosine(col("lv"), col("rv")) >= tau)
+        graft.functions.VectorExprs.cosine(col("lv"), col("rv")) >= tau)
       .select(col("lid").as(idCol)).distinct()
       .withColumn("dup", lit(true))
     a.select(col(idCol), col("centroid").as("cluster"))
@@ -213,7 +213,7 @@ object Clustering {
       col("centroid"), col("bucket"))
     val dups = l.join(r, Seq("centroid", "bucket"))
       .filter(col("rid") < col("lid") &&
-        Similarity.cosine(col("lv"), col("rv")) >= tau)
+        graft.functions.VectorExprs.cosine(col("lv"), col("rv")) >= tau)
       .select(col("lid").as(idCol)).distinct()
       .withColumn("dup", lit(true))
     a.select(col(idCol), col("centroid").as("cluster"))

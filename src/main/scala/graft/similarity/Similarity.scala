@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.functions.VectorExprs.{cosine, l2Normalize, rhpSignature, rhpSignatureWith}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -10,16 +11,6 @@ import org.apache.spark.sql.functions._
   * file) with driver-side k-means centroids.
   */
 object Similarity {
-
-  /** Cosine similarity of two double-array columns — native fused
-    * expression ([[graft.functions.VectorExprs.cosine]]): one codegen'd
-    * pass, no intermediate array (the `zip_with`+`aggregate` route is
-    * CodegenFallback and allocates per pair). */
-  def cosine(a: Column, b: Column): Column = graft.functions.VectorExprs.cosine(a, b)
-
-  /** L2-normalize a double-array column (pre-normalized corpus makes
-    * cosine a plain dot product — normalize once, query many). */
-  def l2Normalize(v: Column): Column = graft.functions.VectorExprs.l2Normalize(v)
 
   /** Brute-force top-k cosine neighbors of each query row against the
     * corpus. Exact — O(|q|·|corpus|); the right tool when |q| is small
@@ -92,15 +83,6 @@ object Similarity {
       .select("id_a", "id_b", "sim")
   }
 
-  /** Random-hyperplane LSH signature: `nbits` sign bits of projections
-    * onto seeded pseudo-random hyperplanes. The planes are CONSTANTS —
-    * generated once on the driver and embedded as array literals, so
-    * each row pays only the dot products (a per-row hash-derived plane
-    * would recompute the matrix for every record).
-    */
-  def rhpSignature(v: Column, dim: Int, nbits: Int, seed: Long = 42L): Column =
-    graft.functions.VectorExprs.rhpSignature(v, dim, nbits, seed)
-
   /** Hyperplanes derived from md5 instead of a seeded RNG: component
     * (p, j) is the high 60 bits of `md5("tag:p:j")` mapped to [-1, 1).
     * Every step (hash, long→double, /2⁶⁰, ×2, −1) is reproducible in
@@ -117,13 +99,6 @@ object Similarity {
         s"$tag:$p:$j".getBytes(java.nio.charset.StandardCharsets.UTF_8))
       h.toDouble / 1.152921504606846976e18 * 2.0 - 1.0
     }
-
-  /** [[rhpSignature]] with caller-supplied planes (row-major
-    * [bit][dim]) — the md5-plane oracle path and any externally
-    * trained projection both enter here. */
-  def rhpSignatureWith(v: Column, planes: Array[Double],
-                       nbits: Int, dim: Int): Column =
-    graft.functions.VectorExprs.rhpSignatureWith(v, planes, nbits, dim)
 
   /** LSH-bucketed approximate neighbor pairs: rows sharing a signature
     * band are candidates, verified with exact cosine ≥ `threshold`.
@@ -671,7 +646,10 @@ object Similarity {
     * Layout under `path`: `ivf/` (coarse centroids, KBs), `pq/`
     * (codebooks, KBs), `corpus/` (assigned + residual-encoded vectors
     * — the only O(n) piece), `meta/` (1 row: corpus size at fit time,
-    * rows appended since).
+    * rows appended since), `tombstones/` (ids pending deletion). The
+    * lease, the fresh-rows append and the tombstone rules are the
+    * persisted-artifact core's ([[graft.store.Artifact]],
+    * [[graft.store.TombstoneSet]]).
     *
     * Shape for scale: [[append]] is ONE map-only assign+encode pass
     * over the delta plus a parquet partition append — the existing
@@ -724,46 +702,43 @@ object Similarity {
     def corpus(spark: SparkSession, path: String): DataFrame =
       spark.read.parquet(s"$path/corpus")
 
-    private def tombstonePath(path: String) =
-      new org.apache.hadoop.fs.Path(s"$path/tombstones")
+    /** The index's lifecycle core, leased on its root. */
+    private def artifact(spark: SparkSession, path: String) = new graft.store.Artifact(spark, path)
+
+    private def tombs(spark: SparkSession, path: String) = {
+      val dir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
+      new graft.store.TombstoneSet(spark, s"index $path", "refit() compacts them out of the " +
+        "physical store; refit first (or pass skipTombstoned = true to drop these rows explicitly)")(
+        Option.when(dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir))(
+          spark.read.parquet(dir.toString)),
+        _.write.mode("append").parquet(dir.toString))
+    }
 
     /** Ids pending deletion (empty frame when none were ever deleted). */
-    def tombstones(spark: SparkSession, path: String): DataFrame = {
-      val p = tombstonePath(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) spark.read.parquet(p.toString)
-      else spark.emptyDataFrame.select(lit(0L).as("id")).limit(0)
-    }
+    def tombstones(spark: SparkSession, path: String): DataFrame = tombs(spark, path).ids()
 
-    /** Takedown / right-to-erasure for a persisted index (n10): write
-      * the ids to a tombstone partition under the index lease — a
-      * delta-sized append; the encoded corpus is NOT rewritten (at
-      * 10¹¹ rows a physical delete would re-shuffle the store to drop
-      * a handful of ids). [[liveCorpus]] anti-joins tombstones into
-      * every query's scan side, so deleted rows can never be returned
-      * the moment this call completes; [[refit]] folds tombstones into
-      * the physical store (the compaction point).
+    /** Takedown / right-to-erasure for a persisted index (n10): a
+      * delta-sized tombstone append under the index lease
+      * ([[graft.store.TombstoneSet]], ids stored as written); the
+      * encoded corpus is NOT rewritten (at 10¹¹ rows a physical delete
+      * would re-shuffle the store to drop a handful of ids).
+      * [[liveCorpus]] excludes them from every query's scan side the
+      * moment this call completes; [[refit]] folds them into the
+      * physical store (the compaction point).
       */
-    def delete(ids: DataFrame, idCol: String, path: String): Unit = {
-      graft.store.WriteLease.withLease(ids.sparkSession, path, "index-delete") {
-        ids.select(col(idCol).cast("long").as("id")).distinct()
-          .write.mode("append").parquet(tombstonePath(path).toString)
-      }
-    }
+    def delete(ids: DataFrame, idCol: String, path: String): Unit =
+      artifact(ids.sparkSession, path).withLease("index-delete")(
+        tombs(ids.sparkSession, path).add(ids, idCol))
 
     /** Remove a verified-stale lease on the index at `path` left by a
       * crashed writer. */
     def breakLease(spark: SparkSession, path: String): Unit =
-      graft.store.WriteLease.breakLease(spark, path)
+      artifact(spark, path).breakLease()
 
     /** The corpus minus tombstoned rows — the scan side every query
-      * should use. The tombstone set is a sliver (AQE broadcasts it),
-      * so the anti-join adds no exchange of the store. */
-    def liveCorpus(spark: SparkSession, path: String,
-                   idCol: String): DataFrame =
-      corpus(spark, path).join(
-        tombstones(spark, path).select(col("id").as(idCol)),
-        Seq(idCol), "left_anti")
+      * should use. */
+    def liveCorpus(spark: SparkSession, path: String, idCol: String): DataFrame =
+      tombs(spark, path).minus(corpus(spark, path), idCol)
 
     /** Append `delta` WITHOUT refit: assign to the EXISTING centroids,
       * encode residuals with the EXISTING codebooks, append to the
@@ -781,65 +756,38 @@ object Similarity {
       * with a quantizer swap.
       *
       * IDEMPOTENT BY ID (advisor r11): the delta is deduplicated on
-      * `idCol` and anti-joined against the stored corpus's id column
-      * before anything is written, so duplicate ids within a delta,
-      * and a RETRIED append after a crash between the meta write and
-      * the corpus write, can never land a row twice (duplicated rows
-      * would surface as repeated ids in top-k results). The anti-join
-      * reads one id column of the store — pruned-scan cost, no
-      * shuffle of the store (AQE broadcasts the small delta). Drift
+      * `idCol` and only its fresh ids are appended
+      * ([[graft.store.Artifact.fresh]]), so duplicate ids within a
+      * delta, and a RETRIED append after a crash between the meta write
+      * and the corpus write, can never land a row twice (duplicated
+      * rows would surface as repeated ids in top-k results). The
+      * anti-join reads one id column of the store — pruned-scan cost,
+      * no shuffle of the store (AQE broadcasts the small delta). Drift
       * counts only rows actually appended.
       *
       * TOMBSTONED IDS ARE FROZEN UNTIL REFIT (advisor r12): a delta
-      * carrying an id with a pending tombstone fails LOUDLY instead of
-      * being silently discarded by the store anti-join (the physical
-      * row still exists, so re-encoding it would double the id; merely
-      * clearing the tombstone would resurrect the OLD vector while
-      * silently dropping the new one). The remedy is [[refit]] — the
-      * compaction point where deleted rows leave the physical store —
-      * after which the id appends normally. Set `skipTombstoned` to
-      * drop such rows instead (the streaming-sink policy, where one
-      * poisoned row must not kill the query; the skip count is
-      * surfaced in the result, never silent).
+      * carrying an id with a pending tombstone throws
+      * [[graft.store.TombstonedIdsException]] instead of being silently
+      * discarded by the store anti-join (the physical row still exists,
+      * so re-encoding it would double the id; merely clearing the
+      * tombstone would resurrect the OLD vector while silently dropping
+      * the new one). Set `skipTombstoned` to drop such rows instead
+      * (the streaming-sink policy, where one poisoned row must not kill
+      * the query; the skip count is surfaced in the result, never
+      * silent).
       */
-    final case class TombstonedIdsException(n: Long, path: String)
-        extends IllegalArgumentException(
-          s"$n delta id(s) have pending tombstones in index $path: " +
-            "tombstoned ids are frozen until refit() compacts them out " +
-            "of the physical store; refit first (or pass " +
-            "skipTombstoned = true to drop these rows explicitly)")
-
     def append(delta: DataFrame, idCol: String, vecCol: String,
                path: String, refitAt: Double = 0.5,
                skipTombstoned: Boolean = false): AppendResult = {
       val spark = delta.sparkSession
-      graft.store.WriteLease.withLease(spark, path, "index-append") {
+      val art = artifact(spark, path)
+      val ts = tombs(spark, path)
+      art.withLease("index-append") {
         val h = load(spark, path)
+        val nTomb = ts.frozen(delta, idCol, skip = skipTombstoned)
         val dedup = delta.dropDuplicates(idCol)
-        // tombstone probe: read the (sliver) table ONCE, and skip the
-        // semi-join count job entirely in the common no-tombstone case
-        // — the per-micro-batch hot path of the streaming ingest sink
-        // (review r13)
-        val tombP = tombstonePath(path)
-        val hasTomb = tombP.getFileSystem(
-          spark.sparkContext.hadoopConfiguration).exists(tombP)
-        val tomb =
-          if (hasTomb) tombstones(spark, path).select(col("id").as(idCol))
-          else null
-        val nTomb = if (hasTomb)
-          dedup.join(tomb, Seq(idCol), "left_semi").count() else 0L
-        if (nTomb > 0 && !skipTombstoned)
-          throw TombstonedIdsException(nTomb, path)
-        val live = if (nTomb == 0) dedup
-          else dedup.join(tomb, Seq(idCol), "left_anti")
-        // fresh = delta minus ids already stored; lineage TRUNCATED
-        // (not just persisted) because it reads the same corpus dir
-        // the append below writes to — a lineage recompute during the
-        // write would re-scan the dir mid-append and could see the
-        // partially appended files
-        val fresh = graft.Materialize.truncate(
-          live.join(corpus(spark, path).select(col(idCol)),
-              Seq(idCol), "left_anti"))
+        val live = if (nTomb == 0) dedup else ts.minus(dedup, idCol)
+        val fresh = art.fresh(live, corpus(spark, path), idCol)
         // drift counter FIRST, corpus append second: a crash between
         // the two then OVER-counts drift (an early refit — harmless),
         // never under-counts it (a silently delayed refit would leave
@@ -850,8 +798,7 @@ object Similarity {
         h.pq.encodeResiduals(h.ivf.assign(fresh, vecCol), vecCol, h.ivf)
           .write.mode("append").parquet(s"$path/corpus")
         val drift = nApp2.toDouble / math.max(nBase, 1L)
-        AppendResult(drift, needsRefit = drift >= refitAt,
-          nSkippedTombstoned = nTomb)
+        AppendResult(drift, needsRefit = drift >= refitAt, nSkippedTombstoned = nTomb)
       }
     }
 

@@ -30,6 +30,14 @@ class BenchmarkingSpec extends SparkSpec {
     assert(l.tasksCompleted >= 8)
   }
 
+  test("S7: peak task memory is observed for a job that aggregates in memory") {
+    val (n, l) = Benchmarking.withProgress(spark) {
+      spark.range(0, 200000, 1, 4).groupBy(col("id") % 1000).count().collect().length
+    }
+    assert(n == 1000)
+    assert(l.peakTaskMemory > 0)
+  }
+
   test("S6: per-span sums: a nested span owns its own job's tasks; totals are exact on return") {
     val sc = spark.sparkContext
     // a slow listener ahead on the same bus queue holds every task event

@@ -335,6 +335,32 @@ class ByteBpeSpec extends SparkSpec {
     }
   }
 
+  test("both id loaders name drifted, absent and unknown entries in the same words") {
+    val mergesTxt = ByteBpe.mergesFileContent()
+    def b64(t: String) = java.util.Base64.getEncoder.encodeToString(t.getBytes("UTF-8"))
+    def msg(load: => Any): String = intercept[IllegalArgumentException](load).getMessage
+    val json = ByteBpe.encoderJsonContent()
+    val tik = ByteBpe.tiktokenFileContent()
+    def viaJson(edit: String => String) = msg(ByteBpe.loadArtifacts(mergesTxt, edit(json)))
+    def viaTik(edit: String => String) = msg(ByteBpe.loadTiktokenArtifacts(mergesTxt, edit(tik)))
+    assert(viaJson(_.replace("\"a\": 97,", "\"a\": 98,")) ==
+      "requirement failed: encoder.json: symbol 'a' has id 98, expected 97 (base byte 97)")
+    assert(viaJson(_.replace("\"\\u0120t\": 256", "\"\\u0120t\": 999")) ==
+      "requirement failed: encoder.json: symbol 'Ġt' has id 999, expected 256 (256 + merge rank 0)")
+    assert(viaJson(_.replace("\"\\u0120t\": 256, ", "")) ==
+      "requirement failed: encoder.json: symbol 'Ġt' has id <absent>, expected 256 (256 + merge rank 0)")
+    assert(viaJson(_.replaceFirst("\\{", "{\"zzGhost\": 4096, ")) ==
+      "encoder.json: symbol 'zzGhost' (id 4096) does not appear in merges.txt — the artifacts disagree")
+    assert(viaTik(_.replace(b64("a") + " 97\n", b64("a") + " 9999\n")) ==
+      "requirement failed: .tiktoken: symbol 'a' has id 9999, expected 97 (base byte 97)")
+    assert(viaTik(_.replace(b64(" t") + " 256\n", b64(" t") + " 999\n")) ==
+      "requirement failed: .tiktoken: symbol 'Ġt' has id 999, expected 256 (256 + merge rank 0)")
+    assert(viaTik(_.replace(b64(" t") + " 256\n", "")) ==
+      "requirement failed: .tiktoken: symbol 'Ġt' has id <absent>, expected 256 (256 + merge rank 0)")
+    assert(viaTik(_ + b64("zzGhost") + " 99999\n") ==
+      ".tiktoken: token 'zzGhost' (id 99999) does not appear in merges.txt — the artifacts disagree")
+  }
+
   test("artifact-parsed tables drive the column path identically to literals") {
     import spark.implicits._
     val docs = Seq((1L, "the table was scanned"),

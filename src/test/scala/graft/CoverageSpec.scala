@@ -59,9 +59,28 @@ class CoverageSpec extends SparkSpec {
     assert(CovState.zero.merge(of(pts)).covSamp == of(pts).covSamp)
   }
 
+  test("CovState.covPop matches covar_pop (S2 without Bessel's correction)") {
+    val pts = Seq((1.0, 2.0), (2.0, 1.0), (3.0, 5.0), (4.0, 3.0), (6.0, 4.0))
+    val st = pts.foldLeft(CovState.zero) { case (s, (x, y)) => s.add(x, y) }
+    val ref = pts.toDF("x", "y").agg(covar_pop("x", "y")).head().getDouble(0)
+    assert(math.abs(st.covPop - ref) < 1e-12)
+    assert(math.abs(st.covPop - st.covSamp * 4 / 5) < 1e-12)
+    assert(CovState.zero.covPop.isNaN)
+  }
+
+  test("CaseSpec.fromTuples and fromMaps build the same cases (xyzpy's tuple and dict cases)") {
+    val byTuple = graft.spec.CaseSpec.fromTuples(Seq("a", "b"), Seq((1, "x"), (2, "y")))
+    val byMap = graft.spec.CaseSpec.fromMaps(Seq("a", "b"),
+      Seq(Map("b" -> "x", "a" -> 1), Map("a" -> 2, "b" -> "y")))
+    assert(byTuple == graft.spec.CaseSpec(Seq("a", "b"), Seq(Seq(1, "x"), Seq(2, "y"))))
+    assert(byMap == byTuple)
+    intercept[IllegalArgumentException](
+      graft.spec.CaseSpec.fromTuples(Seq("a", "b"), Seq(Tuple1(1))))
+  }
+
   test("l2Normalize produces unit vectors") {
     val df = Seq(Seq(3.0, 4.0)).toDF("v")
-    val n = df.select(Similarity.l2Normalize(col("v"))).head().getSeq[Double](0)
+    val n = df.select(graft.functions.VectorExprs.l2Normalize(col("v"))).head().getSeq[Double](0)
     assert(n == Seq(0.6, 0.8))
   }
 

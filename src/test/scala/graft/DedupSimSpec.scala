@@ -609,8 +609,8 @@ class SimilaritySpec extends SparkSpec {
     val df = Seq((Seq(1.0, 0.0), Seq(1.0, 0.0), Seq(0.0, 2.0)))
       .toDF("a", "b", "c")
     val r = df.select(
-      Similarity.cosine(col("a"), col("b")),
-      Similarity.cosine(col("a"), col("c"))).head()
+      graft.functions.VectorExprs.cosine(col("a"), col("b")),
+      graft.functions.VectorExprs.cosine(col("a"), col("c"))).head()
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12 && math.abs(r.getDouble(1)) < 1e-12)
   }
 

@@ -127,7 +127,7 @@ class PersistedIndexSpec extends SparkSpec {
     // append of a tombstoned id FAILS LOUDLY (advisor r12: a silent
     // discard looked like data loss for a legitimate re-add; the id is
     // frozen until refit compacts it out of the physical store)
-    val ex = intercept[PersistedIndex.TombstonedIdsException] {
+    val ex = intercept[graft.store.TombstonedIdsException] {
       PersistedIndex.append(all.filter(col("vec_id") === 8L),
         "vec_id", "embedding", root)
     }
@@ -150,6 +150,24 @@ class PersistedIndexSpec extends SparkSpec {
     PersistedIndex.append(all.filter(col("vec_id") === 8L),
       "vec_id", "embedding", root)
     assert(top1(PersistedIndex.liveCorpus(spark, root, "vec_id")) == 8L)
+  }
+
+  test("string-keyed index: delete stores ids as written; live corpus and append honour them") {
+    val all = corpus(40).select(
+      concat(lit("v"), col("vec_id").cast("string")).as("vec_id"), col("embedding"))
+    val root = tmp()
+    PersistedIndex.build(all, "vec_id", "embedding", root,
+      kLists = 2, m = 4, kCodes = 4)
+    PersistedIndex.delete(Seq("v3", "v8").toDF("vec_id"), "vec_id", root)
+    val live = PersistedIndex.liveCorpus(spark, root, "vec_id")
+      .select("vec_id").as[String].collect().toSet
+    assert(live == (0 until 40).map(i => s"v$i").toSet -- Set("v3", "v8"))
+    val ex = intercept[graft.store.TombstonedIdsException] {
+      PersistedIndex.append(all.filter(col("vec_id") === "v8"),
+        "vec_id", "embedding", root)
+    }
+    assert(ex.n == 1L)
+    assert(PersistedIndex.corpus(spark, root).count() == 40)
   }
 
   test("incrementally-appended index answers match a from-scratch rebuild") {

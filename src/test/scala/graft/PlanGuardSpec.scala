@@ -247,7 +247,7 @@ class PlanGuardSpec extends SparkSpec {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val p1 = emb.select(
-      graft.similarity.Similarity.rhpSignature(
+      graft.functions.VectorExprs.rhpSignature(
         col("embedding").cast("array<double>"), 64, 32).as("sig"))
       .queryExecution.explainString(FormattedMode)
     // all-literal inputs constant-fold away (itself a sign the kernels
