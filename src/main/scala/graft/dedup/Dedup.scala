@@ -134,9 +134,7 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
     val inter = size(array_intersect(col("h_a"), col("h_b"))).cast("double")
-    pairs
-      .join(sh.select(col("id").as("id_a"), col("h").as("h_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("h").as("h_b")), Seq("id_b"))
+    Banding.attach(pairs, sh, "h")
       // J ≥ t forces |a|,|b| within a factor t — integer test before any
       // intersection is materialized
       .filter(least(size(col("h_a")), size(col("h_b"))) >=
@@ -196,9 +194,7 @@ object Dedup {
         greatest(col("id_p"), col("id_i")).as("id_b"))
       .distinct()
     val inter = size(array_intersect(col("h_a"), col("h_b"))).cast("double")
-    pairs
-      .join(sh.select(col("id").as("id_a"), col("h").as("h_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("h").as("h_b")), Seq("id_b"))
+    Banding.attach(pairs, sh, "h")
       // raw-ratio threshold, rounding display-only (the jaccardPairs
       // discipline — advisor r12)
       .withColumn("__raw", PlanBarrier.barrier(
@@ -207,32 +203,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("__raw"), 4).as("containment"))
   }
 
-  /** Containment SKETCH near-dup pairs (d13) — the UNBLOCKED scale
-    * path for [[containmentPairs]] (which is the exact baseline with
-    * per-block quadratic hot-shingle exposure): each doc keeps only a
-    * BOTTOM-K sketch — the `k` smallest md5-derived 60-bit hashes of
-    * its distinct shingles (Broder 1997's min-wise sketches) — plus
-    * its exact set size. Candidates are docs sharing ANY sketch
-    * element (a (hash → id) inverted index over k·n rows, under the
-    * same [[bandedPairs]] bucketCap salting as every LSH family —
-    * candidate volume is linear in the sketch stream, bounded per
-    * bucket, with NO dependence on corpus blocking). The containment
-    * estimate uses the classic bottom-k union trick: with
-    * `u = |k smallest of sk_A ∪ sk_B|` and `i` of those in both
-    * sketches, Ĵ = i/u estimates Jaccard, and since the exact sizes
-    * are carried, `Ĉ = Ĵ·(|A|+|B|) / ((1+Ĵ)·min)` — algebraically
-    * `i·(|A|+|B|) / ((u+i)·min)`, ONE division of exact integers, so
-    * a SQL replay is bit-identical. Hashes are md5-derived (not
-    * xxhash) precisely so the oracle can rebuild every sketch.
-    *
-    * Recall is probabilistic (the trade for unblocked scale): a pair
-    * with true containment ≥ τ shares a sketch element with
-    * probability ≈ 1 − (1−J)ᵏ where J ≥ τ/(1+ratio) — high for real
-    * inclusions at k = 32; measured against exact d12 on a planted
-    * embedded-doc corpus in DedupSpec. Estimates concentrate around
-    * the true C (±~1/√k); the threshold is applied to the RAW
-    * estimate, rounding display-only.
-    */
   /** Bottom-k containment sketches `(id, sz, sk)` — the persisted
     * artifact of the d13/d14 family: per doc, the `k` smallest
     * md5-derived 60-bit hashes of its distinct `n`-gram shingles plus
@@ -269,13 +239,9 @@ object Dedup {
                               threshold: Double): DataFrame = {
     val u = slice(array_sort(array_distinct(
       concat(col("sk_a"), col("sk_b")))), 1, k)
-    val est = (col("__i") * (col("na") + col("nb"))).cast("double") /
-      ((col("__u") + col("__i")) * least(col("na"), col("nb")))
-    pairs
-      .join(sk.select(col("id").as("id_a"), col("sz").as("na"),
-        col("sk").as("sk_a")), Seq("id_a"))
-      .join(sk.select(col("id").as("id_b"), col("sz").as("nb"),
-        col("sk").as("sk_b")), Seq("id_b"))
+    val est = (col("__i") * (col("sz_a") + col("sz_b"))).cast("double") /
+      ((col("__u") + col("__i")) * least(col("sz_a"), col("sz_b")))
+    Banding.attach(pairs, sk, "sz", "sk")
       .withColumn("__u0", u)
       .withColumn("__i", size(array_intersect(col("__u0"),
         array_intersect(col("sk_a"), col("sk_b")))).cast("long"))
@@ -286,13 +252,40 @@ object Dedup {
         round(least(col("__est"), lit(1.0)), 4).as("c_est"))
   }
 
+  /** Containment SKETCH near-dup pairs (d13) — the UNBLOCKED scale
+    * path for [[containmentPairs]] (which is the exact baseline with
+    * per-block quadratic hot-shingle exposure): each doc keeps only a
+    * BOTTOM-K sketch — the `k` smallest md5-derived 60-bit hashes of
+    * its distinct shingles (Broder 1997's min-wise sketches) — plus
+    * its exact set size. Candidates are docs sharing ANY sketch
+    * element (a (hash → id) inverted index over k·n rows, under the
+    * same [[Banding]] bucketCap salting as every LSH family —
+    * candidate volume is linear in the sketch stream, bounded per
+    * bucket, with NO dependence on corpus blocking). The containment
+    * estimate uses the classic bottom-k union trick: with
+    * `u = |k smallest of sk_A ∪ sk_B|` and `i` of those in both
+    * sketches, Ĵ = i/u estimates Jaccard, and since the exact sizes
+    * are carried, `Ĉ = Ĵ·(|A|+|B|) / ((1+Ĵ)·min)` — algebraically
+    * `i·(|A|+|B|) / ((u+i)·min)`, ONE division of exact integers, so
+    * a SQL replay is bit-identical. Hashes are md5-derived (not
+    * xxhash) precisely so the oracle can rebuild every sketch.
+    *
+    * Recall is probabilistic (the trade for unblocked scale): a pair
+    * with true containment ≥ τ shares a sketch element with
+    * probability ≈ 1 − (1−J)ᵏ where J ≥ τ/(1+ratio) — high for real
+    * inclusions at k = 32; measured against exact d12 on a planted
+    * embedded-doc corpus in DedupSpec. Estimates concentrate around
+    * the true C (±~1/√k); the threshold is applied to the RAW
+    * estimate, rounding display-only.
+    */
   def containmentSketchPairs(df: DataFrame, idCol: String, textCol: String,
                              n: Int, k: Int, threshold: Double,
                              bucketCap: Int = 100000,
                              salt: BucketSalt = BucketSalt.XxHash): DataFrame = {
     val sk = graft.Materialize.reuse( // feeds the index AND both verify sides
       bottomKSketches(df, idCol, textCol, n, k))
-    sketchEstimates(bandedPairs(bandedSketchIndex(sk), bucketCap, salt),
+    sketchEstimates(
+      Banding.selfPairs(bandedSketchIndex(sk), Banding.guard(bucketCap, salt)),
       sk, k, threshold)
   }
 
@@ -302,8 +295,7 @@ object Dedup {
     * d11 sigs-table discipline): a refresh then reads it as a sliver
     * scan instead of re-exploding every store sketch. */
   def bandedSketchIndex(sketches: DataFrame): DataFrame =
-    sketches.select(col("id"), lit(0).as("band"),
-      explode(col("sk")).as("bucket"))
+    Banding.invertedIndex(sketches, "sk")
 
   /** Incremental containment (d14) — inclusion detection for the
     * monthly refresh WITHOUT re-sketching the store: the persisted
@@ -348,8 +340,8 @@ object Dedup {
       storeSketches: DataFrame, storeIndex: DataFrame, dsk: DataFrame,
       k: Int, threshold: Double, bucketCap: Int,
       salt: BucketSalt): DataFrame = {
-    val pairs = asymmetricBandedPairs(storeIndex, bandedSketchIndex(dsk),
-      bucketCap, salt)
+    val pairs = Banding.probePairs(storeIndex, bandedSketchIndex(dsk),
+      Banding.guard(bucketCap, salt))
     sketchEstimates(pairs, storeSketches.unionByName(dsk), k, threshold)
   }
 
@@ -390,8 +382,8 @@ object Dedup {
         org.apache.spark.sql.GraftSqlShims.expression(hashCol), as, bs))
   }
 
-  /** Sub-bucket salt for the flooded-bucket guard in [[bandedPairs]] /
-    * [[asymmetricBandedPairs]]. Production default is [[BucketSalt.XxHash]]
+  /** Sub-bucket salt for the flooded-bucket guard of
+    * [[Banding.Salt]]. Production default is [[BucketSalt.XxHash]]
     * (one 64-bit hash per row, codegen'd); [[BucketSalt.Md5]] is the
     * oracle-replayable convention the gated registrations use (the
     * sd2 pattern: `md5(prefix:id:band)` truncated to 60 bits, which a
@@ -417,104 +409,6 @@ object Dedup {
     }
   }
 
-  /** Banded candidate self-join over `(id, band, bucket)` rows with
-    * the SimHash `bucketCap` discipline applied to ANY LSH family:
-    * buckets larger than `bucketCap` are NOT self-joined directly —
-    * their rows salt into ceil(n/cap) deterministic sub-buckets
-    * (xxhash of (id, band): a DIFFERENT split per band, so two rows
-    * separated in one flooded band can still meet in another), and
-    * pairs form within (band, bucket, sub) only. No join task ever
-    * sees more than ~cap²/2 candidate pairs regardless of corpus
-    * shape. The bucket-size census reuses the same (band, bucket)
-    * exchange the join needs.
-    *
-    * Recall trade, stated plainly: a qualifying pair whose ONLY
-    * collision was inside a flooded bucket where the salt separated
-    * them is lost — for MinHash at j ≥ threshold the other
-    * bands re-find it with p ≈ 1-(1-j^rows)^(bands-1) (≥ 0.999 at the
-    * registered 16×4 / j ≥ 0.8 operating point), per-band salts
-    * decorrelate the splits, and downstream connected components
-    * re-joins flood cliques through their dense intra-bucket edges.
-    * `bucketCap <= 0` disables the guard (the exact pre-cap plan).
-    */
-  private[graft] def bandedPairs(banded: DataFrame,
-                                 bucketCap: Int,
-                                 salt: BucketSalt = BucketSalt.XxHash): DataFrame = {
-    val l = if (bucketCap <= 0) banded else {
-      val counts = banded.groupBy("band", "bucket")
-        .agg(count(lit(1)).as("__bn"))
-      val nb = ceil(col("__bn").cast("double") / bucketCap).cast("long")
-      // tagged rows feed BOTH self-join sides — materialized so the
-      // census aggregation and its join back run once, not per side
-      // (the stage is (id, band, bucket, sub) longs, a sliver)
-      graft.Materialize.reuse(banded.join(counts, Seq("band", "bucket"))
-        .withColumn("__sub", when(nb <= 1, lit(0L)).otherwise(
-          salt.sub(col("id"), col("band"), nb)))
-        .drop("__bn"))
-    }
-    val keys = if (bucketCap <= 0) Seq("band", "bucket")
-               else Seq("band", "bucket", "__sub")
-    l.select((keys :+ "id").map(col): _*).withColumnRenamed("id", "id_a")
-      .join(l.select((keys :+ "id").map(col): _*).withColumnRenamed("id", "id_b"),
-        keys)
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
-
-  /** Asymmetric banded candidates DELTA-vs-UNION: the left side is
-    * always a delta row, so no store-internal pair is ever generated
-    * (a plain self-join over the union would spend its time
-    * re-pairing the store against itself). The right side is
-    * store ∪ delta, built here, so delta-delta pairs are found too.
-    * Same `bucketCap` salting discipline as [[bandedPairs]] — the
-    * census runs over the union, rows of flooded buckets salt into
-    * deterministic xxhash(id, band) sub-buckets on BOTH sides. Shared
-    * by [[graft.dedup.DedupSnapshot]]'s MinHash delta stage (d11) and
-    * [[containmentSketchDelta]] (d14). The two sides must be disjoint
-    * by id (delta ids are new, or the caller anti-joins them out of
-    * the store).
-    */
-  private[graft] def asymmetricBandedPairs(storeBanded: DataFrame,
-                                           deltaBanded: DataFrame,
-                                           bucketCap: Int,
-                                           salt: BucketSalt = BucketSalt.XxHash): DataFrame = {
-    val unionBanded = storeBanded.unionByName(deltaBanded)
-    val (l, r, keys) =
-      if (bucketCap <= 0) (deltaBanded, unionBanded, Seq("band", "bucket"))
-      else {
-        // bucket census for the cap: count per (band, bucket) over the
-        // union, SPLIT (optimization r20, guide §2.4) into a store-side
-        // census (exchange-FREE: the persisted sigs/index tables are
-        // bucketed on exactly these keys) plus a delta-sized census,
-        // merged by a full-outer sum over census slivers — so a
-        // refresh never re-shuffles the whole store index just to
-        // count bucket sizes. Counts are identical exact integers
-        // (|union| = |store| + |delta| per bucket; the sides are
-        // disjoint).
-        val sc = storeBanded.groupBy("band", "bucket").agg(count(lit(1)).as("__bns"))
-        val dc = deltaBanded.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("__bnd"))
-        val counts = sc.join(dc, Seq("band", "bucket"), "full")
-          .select(col("band"), col("bucket"),
-            (coalesce(col("__bns"), lit(0L)) +
-              coalesce(col("__bnd"), lit(0L))).as("__bn"))
-        val nb = ceil(col("__bn").cast("double") / bucketCap).cast("long")
-        def tag(df: DataFrame) = df.join(counts, Seq("band", "bucket"))
-          .withColumn("__sub", when(nb <= 1, lit(0L)).otherwise(
-            salt.sub(col("id"), col("band"), nb)))
-          .drop("__bn")
-        (tag(deltaBanded), graft.Materialize.reuse(tag(unionBanded)),
-          Seq("band", "bucket", "__sub"))
-      }
-    l.select((keys :+ "id").map(col): _*).withColumnRenamed("id", "id_l")
-      .join(r.select((keys :+ "id").map(col): _*)
-        .withColumnRenamed("id", "id_r"), keys)
-      .filter(col("id_l") =!= col("id_r"))
-      .select(least(col("id_l"), col("id_r")).as("id_a"),
-        greatest(col("id_l"), col("id_r")).as("id_b"))
-      .distinct()
-  }
-
   /** MinHash-LSH candidate pairs: signatures split into `bands` bands
     * of `rows` hashes; docs sharing any band bucket become candidates.
     * Collision probability ≈ 1-(1-j^rows)^bands (s-curve). Output has
@@ -524,7 +418,7 @@ object Dedup {
     * Scale shape: explode(bands) → shuffle on (band, bucket) →
     * within-bucket self-join. Exact-duplicate floods (many docs in one
     * bucket) are the skew risk: run [[exact]] first so identical docs
-    * never reach LSH, and the [[bandedPairs]] `bucketCap` guard bounds
+    * never reach LSH, and the [[Banding]] `bucketCap` guard bounds
     * any remaining near-dup flood (default 100k — inert at sane bucket
     * sizes, engaged only under pathology).
     */
@@ -540,8 +434,8 @@ object Dedup {
     // arrays ×bands through the exchange)
     val banded = graft.Materialize.reuse(
       minHashBanded(sh, bands, rows)) // tiny; feeds both join sides
-    val pairs = bandedPairs(banded, bucketCap)
-    verifyJaccard(pairs, sh, threshold)
+    verifyJaccard(Banding.selfPairs(banded, Banding.guard(bucketCap)),
+      sh, threshold)
   }
 
   /** (id, band, bucket) rows from a hashed-shingle projection: the
@@ -558,7 +452,7 @@ object Dedup {
       .select(col("id"),
         posexplode(array((0 until bands).map(
           b => xxhash64(slice(col("sig"), b * rows + 1, rows))): _*))
-          .as(Seq("band", "bucket")))
+          .as(Banding.Keys))
 
   /** Exact-Jaccard verification of candidate `(id_a, id_b)` pairs
     * against a hashed-shingle projection `sh` — only the (few)
@@ -568,9 +462,7 @@ object Dedup {
                                    threshold: Double): DataFrame = {
     val inter = size(array_intersect(col("h_a"), col("h_b"))).cast("double")
     val uni = (size(col("h_a")) + size(col("h_b"))).cast("double") - inter
-    pairs
-      .join(sh.select(col("id").as("id_a"), col("h").as("h_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("h").as("h_b")), Seq("id_b"))
+    Banding.attach(pairs, sh, "h")
       // raw-ratio threshold, rounding display-only (the jaccardPairs
       // discipline — advisor r12; the exact-Jaccard oracles of this
       // family all filter the unrounded ratio)
@@ -981,11 +873,13 @@ object Dedup {
     *    directly; their rows re-band on 4 sub-chunks of the REMAINING
     *    bits. Conditional on chunk i matching, the ≤ 3 differing bits
     *    all fall in the other bits, so pigeonhole applies again — a
-    *    qualifying pair shares (chunk, ck, sub, sv) in some refined
+    *    qualifying pair shares (band, bucket, sub, sv) in some refined
     *    band. Key space per oversized bucket grows by 4·2^12, turning
     *    n/65k-row buckets into ~n/256M-row ones; recall stays exact.
     *
-    * The bucket-size census reuses the same (chunk, ck) exchange the
+    * Chunk i is the band, its key the bucket, and level 2 is the
+    * [[Banding.Refine]] guard of the shared banded join. The
+    * bucket-size census reuses the same (band, bucket) exchange the
     * small-bucket self-join needs — one extra map-side-combined agg,
     * no extra shuffle of the data. Rows whose sigs are IDENTICAL in
     * crowds (e.g. empty docs) still pair quadratically in the output;
@@ -1018,31 +912,14 @@ object Dedup {
       struct(ck.as("ck"), others.reduce(_.bitwiseOR(_)).as("rem"))
     }
     val chunked = sigs
-      .select(col("id"), col("sig"), posexplode(array(entries: _*)).as(Seq("chunk", "e")))
-      .select(col("id"), col("sig"), col("chunk"),
-        col("e.ck").as("ck"), col("e.rem").as("rem"))
-    val counts = chunked.groupBy("chunk", "ck").agg(count(lit(1)).as("__bn"))
-    val tagged = chunked.join(counts, Seq("chunk", "ck"))
-
-    def pairsOn(d: DataFrame, keys: Seq[String]): DataFrame = {
-      val l = d.select(keys.map(col) :+ col("id").as("id_a") :+ col("sig").as("sig_a"): _*)
-      val r = d.select(keys.map(col) :+ col("id").as("id_b") :+ col("sig").as("sig_b"): _*)
-      l.join(r, keys).filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-    }
-
-    val small = pairsOn(tagged.filter(col("__bn") <= bucketCap), Seq("chunk", "ck"))
+      .select(col("id"), col("sig"), posexplode(array(entries: _*)).as(Seq("band", "e")))
+      .select(col("id"), col("sig"), col("band"),
+        col("e.ck").as("bucket"), col("e.rem").as("rem"))
     val subW = (3 * chunkW + 3) / 4
     val subMask = (1L << subW) - 1
-    val big = pairsOn(
-      tagged.filter(col("__bn") > bucketCap)
-        .select(col("id"), col("sig"), col("chunk"), col("ck"),
-          posexplode(array((0 until 4).map(k =>
-            shiftright(col("rem"), k * subW).bitwiseAND(subMask)): _*))
-            .as(Seq("sub", "sv"))),
-      Seq("chunk", "ck", "sub", "sv"))
-
-    small.union(big).distinct()
+    val refine = Banding.Refine(bucketCap, array((0 until 4).map(k =>
+      shiftright(col("rem"), k * subW).bitwiseAND(subMask)): _*))
+    Banding.selfPairs(chunked, refine, carry = Seq("sig"))
       .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
       .filter(col("hamming") <= maxDist)
       .select("id_a", "id_b", "hamming")

@@ -59,7 +59,7 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
                           val bucketCap: Int = 100000) {
   private val corpusT = Table(s"${prefix}_corpus", Seq("fp"))
   private val seenT = Table(s"${prefix}_seen", Seq("fp"))
-  private val sigsT = Table(s"${prefix}_sigs", Seq("band", "bucket"))
+  private val sigsT = Table(s"${prefix}_sigs", Banding.Keys)
   private val shinglesT = Table(s"${prefix}_shingles", Seq("id"))
   private val tombsT = Table(s"${prefix}_tombs", Seq("id"))
   private val art = new Artifact(spark, spark.conf.get("spark.sql.warehouse.dir") +
@@ -134,7 +134,8 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
       val sh = Dedup.hashedShingles(exact, idCol, textCol, n, Nil)
       val banded = graft.Materialize.reuse(Dedup.minHashBanded(sh, bands, rows))
       val drops = Dedup.nearDupDrops(
-        Dedup.verifyJaccard(Dedup.bandedPairs(banded, bucketCap), sh, threshold))
+        Dedup.verifyJaccard(Banding.selfPairs(banded, Banding.guard(bucketCap)),
+          sh, threshold))
       val surv = exact.join(
         drops.select(col("drop_id").as(idCol)), Seq(idCol), "left_anti")
       art.write(surv.select((idCol +: keepCols :+ "fp").map(col): _*),
@@ -184,8 +185,8 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
     val dBanded = graft.Materialize.reuse(Dedup.minHashBanded(dsh, bands, rows))
     // delta-vs-(store ∪ delta) banded candidates: the cap census reads
     // the sigs table (bucketed on (band, bucket)) exchange-free
-    val pairs = Dedup.asymmetricBandedPairs(
-      tombs.minus(art.read(sigsT), "id"), dBanded, bucketCap)
+    val pairs = Banding.probePairs(
+      tombs.minus(art.read(sigsT), "id"), dBanded, Banding.guard(bucketCap))
     // verification shingles: store side from the persisted table
     // (the corpus is NOT re-shingled), delta side from this pass
     val allSh = tombs.minus(art.read(shinglesT), "id").unionByName(dsh)

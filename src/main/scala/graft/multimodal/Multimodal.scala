@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.dedup.Banding
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -352,7 +353,8 @@ object Multimodal {
     *    4 GiB → < 2³¹ samples × 2³⁰ max square < 2⁶¹); bit f set iff
     *    `E[f+1] > E[f]`. 60 bits so the signature stays inside a
     *    signed BIGINT on both engines and feeds
-    *    [[graft.dedup.Dedup.simHashPairsFromSigs]] directly.
+    *    [[graft.dedup.Dedup.simHashPairsFromSigs]] (the
+    *    [[graft.dedup.Banding.Refine]] banded join) directly.
     *  - `rhash`: rising-step hash — `R[f]` counts strictly increasing
     *    consecutive-sample steps `s[i] > s[i-1]` within frame f (both
     *    endpoints inside the frame); bit f set iff `R[f+1] > R[f]`.
@@ -528,7 +530,7 @@ object Multimodal {
     * frames still hash identically). Per video the distinct frame-hash
     * SET (bounded by frame count) aggregates once; candidates come
     * from the (hash → id) inverted index under the standard
-    * [[graft.dedup.Dedup.bandedPairs]] bucketCap salting (linear in
+    * [[graft.dedup.Banding]] bucketCap salting (linear in
     * the hash stream — a hash shared by a crowd is exactly the
     * flooded-bucket case the cap bounds); the verify is one
     * `array_intersect` of the two bounded sets. Exact integers
@@ -539,13 +541,11 @@ object Multimodal {
     val va = graft.Materialize.reuse( // feeds the index AND both verify sides
       hashes.groupBy(col(idCol).as("id"))
         .agg(sort_array(collect_set(col(hashCol))).as("hs")))
-    val banded = va.select(col("id"), lit(0).as("band"),
-      explode(col("hs")).as("bucket"))
-    graft.dedup.Dedup.bandedPairs(banded, bucketCap)
-      .join(va.select(col("id").as("id_a"), col("hs").as("ha")), Seq("id_a"))
-      .join(va.select(col("id").as("id_b"), col("hs").as("hb")), Seq("id_b"))
+    val pairs = Banding.selfPairs(Banding.invertedIndex(va, "hs"),
+      Banding.guard(bucketCap))
+    Banding.attach(pairs, va, "hs")
       .withColumn("shared",
-        size(array_intersect(col("ha"), col("hb"))).cast("long"))
+        size(array_intersect(col("hs_a"), col("hs_b"))).cast("long"))
       .filter(col("shared") >= minShared)
       .select("id_a", "id_b", "shared")
   }

@@ -1631,7 +1631,7 @@ object TextQueries {
     * d13b's; the oracle is d13b's with the `id_b > cut` delta-touching
     * restriction (delta ids are the largest; pairs are ordered
     * id_a < id_b — the d14 convention). Proves the ENGAGED salting in
-    * [[graft.dedup.Dedup.asymmetricBandedPairs]] — the shared d11/d14
+    * [[graft.dedup.Banding.probePairs]] — the shared d11/d14
     * candidate join — against the oracle, which d11/d14's bucketCap=0
     * registrations never did.
     */

@@ -127,6 +127,12 @@ object Clustering {
     * [[semanticDedupCapped]] and its spec share. The sizes table is
     * ≤ k rows (broadcast); the bucket key is a pure function of
     * (salt, id), so both engines and any re-run bucket identically.
+    *
+    * Kept apart from [[graft.dedup.Banding]]'s Salt guard on purpose:
+    * this census is on `centroid` (k rows, broadcast) rather than a
+    * band bucket, and the salt is the id-only `hashLong60` that sd2's
+    * oracle replays rather than a per-(id, band) [[graft.dedup.Dedup.BucketSalt]].
+    * Folding it in would make the core branch on its caller.
     */
   private[graft] def saltedBuckets(assigned: DataFrame, idCol: String,
                                    cap: Int, salt: String): DataFrame = {
@@ -174,8 +180,8 @@ object Clustering {
     * salted into ceil(n_c/cap) deterministic md5 sub-buckets
     * ([[saltedBuckets]]) and pairs compare within (cluster, bucket)
     * only, so no join task sees more than ~cap²/2 candidate pairs —
-    * the SimHash `bucketCap` discipline (`Dedup.simHashPairsFromSigs`)
-    * applied to the semantic path. The recall trade is explicit:
+    * the `bucketCap` discipline of the LSH families' banded join
+    * ([[graft.dedup.Banding]]) applied to the semantic path. The recall trade is explicit:
     * cross-bucket pairs inside an OVERSIZED cluster are skipped — the
     * same kind of approximation SemDeDup already makes by never
     * comparing across clusters, and it engages only past the working

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.dedup.Banding
 import graft.functions.VectorExprs.{cosine, l2Normalize, rhpSignature, rhpSignatureWith}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -119,19 +120,13 @@ object Similarity {
       case Some(pl) => rhpSignatureWith(col("v"), pl, nbits, dim)
       case None     => rhpSignature(col("v"), dim, nbits)
     }
-    val withSig = vecs.withColumn("sig", sigCol)
     // shuffle only (id, band, bucket) — vectors re-attach after the
     // candidate pairs are deduplicated
-    val banded = graft.Materialize.reuse(withSig.select(col("id"),
-      posexplode(array((0 until bands).map(
-        b => shiftright(col("sig"), b * rows).bitwiseAND(lit((1L << rows) - 1))): _*))
-        .as(Seq("band", "bucket")))) // tiny; feeds both sides of the self-join
-    // flooded-bucket salting shared with MinHash (the SimHash
-    // bucketCap discipline — see Dedup.bandedPairs)
-    val pairs = graft.dedup.Dedup.bandedPairs(banded, bucketCap)
-    pairs
-      .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
-      .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
+    val banded = graft.Materialize.reuse( // tiny; feeds both join sides
+      Banding.rhpBanded(vecs, "id", sigCol, bands, rows))
+    // flooded-bucket salting shared with every LSH family
+    Banding.attach(Banding.selfPairs(banded, Banding.guard(bucketCap)),
+      vecs, "v")
       .withColumn("sim", round(cosine(col("v_a"), col("v_b")), 4))
       .filter(col("sim") >= threshold)
       .select("id_a", "id_b", "sim")
@@ -168,15 +163,9 @@ object Similarity {
     val cv = graft.Materialize.reuse(corpus.select( // banding + re-attach both read it
       col(idCol).as("neighbor_id"),
       col(vecCol).cast("array<double>").as("cv")))
-    def bandExplode(df: DataFrame, id: String, v: String) =
-      df.withColumn("sig", sigOf(col(v)))
-        .select(col(id),
-          posexplode(array((0 until bands).map(b =>
-            shiftright(col("sig"), b * rows)
-              .bitwiseAND(lit((1L << rows) - 1))): _*))
-            .as(Seq("band", "bucket")))
-    val cands = bandExplode(cv, "neighbor_id", "cv")
-      .join(broadcast(bandExplode(qv, "query_id", "qv")), Seq("band", "bucket"))
+    val cands = Banding.rhpBanded(cv, "neighbor_id", sigOf(col("cv")), bands, rows)
+      .join(broadcast(Banding.rhpBanded(qv, "query_id", sigOf(col("qv")), bands, rows)),
+        Banding.Keys)
       .select("query_id", "neighbor_id").distinct()
     val scored = cands
       .join(cv, Seq("neighbor_id"))

@@ -271,20 +271,9 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
-          var attempt = 0
-          var done = false
-          while (!done) {
-            try {
-              snap.ingestDelta(batch.toDF(), idCol, textCol, keepCols,
-                commit = true, idempotentCommit = true)
-              done = true
-            } catch {
-              case e: graft.store.ConcurrentWriteException =>
-                if (attempt >= leaseRetries) throw e
-                Thread.sleep(math.min(
-                  retryBaseMs << math.min(attempt, 16), 30000L))
-                attempt += 1
-            }
+          withLeaseRetry(leaseRetries, retryBaseMs) {
+            snap.ingestDelta(batch.toDF(), idCol, textCol, keepCols,
+              commit = true, idempotentCommit = true)
           }
         }
       }
@@ -406,24 +395,13 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         if (!batch.isEmpty) {
-          var attempt = 0
-          var done = false
-          while (!done) {
-            try {
-              // ingestDelta(commit) truncates the pair plan BEFORE the
-              // appends, so writing it afterwards reads frozen blocks,
-              // not the just-updated tables
-              store.ingestDelta(batch.toDF(), idCol, textCol,
-                  commit = true, idempotentCommit = true)
-                .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-              done = true
-            } catch {
-              case e: graft.store.ConcurrentWriteException =>
-                if (attempt >= leaseRetries) throw e
-                Thread.sleep(math.min(
-                  retryBaseMs << math.min(attempt, 16), 30000L))
-                attempt += 1
-            }
+          withLeaseRetry(leaseRetries, retryBaseMs) {
+            // ingestDelta(commit) truncates the pair plan BEFORE the
+            // appends, so writing it afterwards reads frozen blocks,
+            // not the just-updated tables
+            store.ingestDelta(batch.toDF(), idCol, textCol,
+                commit = true, idempotentCommit = true)
+              .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
           }
         }
       }
@@ -462,28 +440,17 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         if (!batch.isEmpty) {
-          var attempt = 0
-          var done = false
-          while (!done) {
-            try {
-              val r = graft.similarity.Similarity.PersistedIndex.append(
-                batch.toDF(), idCol, vecCol, indexPath, refitAt,
-                skipTombstoned = true)
-              val log = org.slf4j.LoggerFactory.getLogger("graft.streaming")
-              if (r.nSkippedTombstoned > 0)
-                log.warn(s"annIngestSink batch $batchId: skipped " +
-                  s"${r.nSkippedTombstoned} tombstoned id(s) frozen until refit")
-              if (r.needsRefit)
-                log.warn(s"annIngestSink batch $batchId: drift ${r.drift} " +
-                  s">= $refitAt — schedule PersistedIndex.refit")
-              done = true
-            } catch {
-              case e: graft.store.ConcurrentWriteException =>
-                if (attempt >= leaseRetries) throw e
-                Thread.sleep(math.min(
-                  retryBaseMs << math.min(attempt, 16), 30000L))
-                attempt += 1
-            }
+          withLeaseRetry(leaseRetries, retryBaseMs) {
+            val r = graft.similarity.Similarity.PersistedIndex.append(
+              batch.toDF(), idCol, vecCol, indexPath, refitAt,
+              skipTombstoned = true)
+            val log = org.slf4j.LoggerFactory.getLogger("graft.streaming")
+            if (r.nSkippedTombstoned > 0)
+              log.warn(s"annIngestSink batch $batchId: skipped " +
+                s"${r.nSkippedTombstoned} tombstoned id(s) frozen until refit")
+            if (r.needsRefit)
+              log.warn(s"annIngestSink batch $batchId: drift ${r.drift} " +
+                s">= $refitAt — schedule PersistedIndex.refit")
           }
         }
       }
@@ -506,6 +473,29 @@ object Streaming {
           state.update(next)
           RunningRow(key, next.n, next.mean, next.std, next.stderr)
       }
+  }
+
+  /** The sinks' lease backoff: run `body`, and when a concurrent
+    * writer holds the store lease retry it up to `leaseRetries` times,
+    * waiting 2^k × `retryBaseMs` (0.5 s, 1 s, 2 s, … at the default)
+    * between attempts. The wait is capped at 30 s: a large
+    * `leaseRetries` must mean "keep trying for a while", not
+    * multi-hour sleeps (and an uncapped shift goes negative past 2⁶³).
+    * The last [[graft.store.ConcurrentWriteException]] surfaces to the
+    * stream. */
+  private def withLeaseRetry(leaseRetries: Int, retryBaseMs: Long)
+                            (body: => Unit): Unit = {
+    var attempt = 0
+    var done = false
+    while (!done) {
+      try { body; done = true }
+      catch {
+        case e: graft.store.ConcurrentWriteException =>
+          if (attempt >= leaseRetries) throw e
+          Thread.sleep(math.min(retryBaseMs << math.min(attempt, 16), 30000L))
+          attempt += 1
+      }
+    }
   }
 
   /** Streaming HARVEST: merge each micro-batch of arriving sweep
@@ -541,21 +531,7 @@ object Streaming {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
           val df = batch.toDF()
-          var attempt = 0
-          var done = false
-          while (!done) {
-            try { store.mergeIn(df, mode); done = true }
-            catch {
-              case e: graft.store.ConcurrentWriteException =>
-                if (attempt >= leaseRetries) throw e
-                // 0.5s, 1s, 2s, ... capped at 30s: large leaseRetries
-                // must mean "keep trying for a while", not multi-hour
-                // sleeps (and an uncapped shift goes negative past 2⁶³)
-                Thread.sleep(math.min(
-                  retryBaseMs << math.min(attempt, 16), 30000L))
-                attempt += 1
-            }
-          }
+          withLeaseRetry(leaseRetries, retryBaseMs)(store.mergeIn(df, mode))
         }
       }
       .start()
@@ -665,26 +641,15 @@ object Streaming {
               .scoreWith(cleaned, idCol, textCol, weights, dim)
               .filter(col("score_micro") >= threshold).select(idCol),
             Seq(idCol))
-          var attempt = 0
-          var done = false
-          while (!done) {
-            try {
-              val surv = snap.ingestDelta(
-                gated.select(idCol, (keepCols :+ textCol).distinct: _*),
-                idCol, textCol, keepCols = keepCols,
-                commit = true, idempotentCommit = true)
-              faultPoint() // spec-injected crash between the commits
-              skst.ingestDelta(surv.select(col(idCol), col(textCol)),
-                  idCol, textCol, commit = true, idempotentCommit = true)
-                .write.mode("overwrite").parquet(s"$pairsOut/batch=$batchId")
-              done = true
-            } catch {
-              case e: graft.store.ConcurrentWriteException =>
-                if (attempt >= leaseRetries) throw e
-                Thread.sleep(math.min(
-                  retryBaseMs << math.min(attempt, 16), 30000L))
-                attempt += 1
-            }
+          withLeaseRetry(leaseRetries, retryBaseMs) {
+            val surv = snap.ingestDelta(
+              gated.select(idCol, (keepCols :+ textCol).distinct: _*),
+              idCol, textCol, keepCols = keepCols,
+              commit = true, idempotentCommit = true)
+            faultPoint() // spec-injected crash between the commits
+            skst.ingestDelta(surv.select(col(idCol), col(textCol)),
+                idCol, textCol, commit = true, idempotentCommit = true)
+              .write.mode("overwrite").parquet(s"$pairsOut/batch=$batchId")
           }
         }
       }

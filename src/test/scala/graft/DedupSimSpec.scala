@@ -1,6 +1,6 @@
 package graft
 
-import graft.dedup.Dedup
+import graft.dedup.{Banding, Dedup}
 import graft.functions.TextFns
 import graft.similarity.Similarity
 import org.apache.spark.sql.functions._
@@ -280,8 +280,8 @@ class DedupSpec extends SparkSpec {
     //    bucket, and the constant band of this family means same-size
     //    buckets split identically — the union stays ~2 orders below
     //    quadratic.
-    val uncapped = Dedup.bandedPairs(banded, 0)
-    val capped = Dedup.bandedPairs(banded, 4, salt)
+    val uncapped = Banding.selfPairs(banded, Banding.Off)
+    val capped = Banding.selfPairs(banded, Banding.Salt(4, salt))
     assert(floodPairs(uncapped) == 19900, "uncapped flood should be full quadratic")
     val cappedFlood = floodPairs(capped)
     assert(cappedFlood > 0 && cappedFlood < 2000,
@@ -398,8 +398,8 @@ class DedupSpec extends SparkSpec {
   test("bandedPairs: a single flooded bucket's join volume is cap-bounded") {
     // one band, one bucket, 300 rows — the per-task bound in isolation
     val banded = (0L until 300L).map(i => (i, 0, 7L)).toDF("id", "band", "bucket")
-    val capped = Dedup.bandedPairs(banded, 40).count()
-    val uncapped = Dedup.bandedPairs(banded, 0).count()
+    val capped = Banding.selfPairs(banded, Banding.guard(40)).count()
+    val uncapped = Banding.selfPairs(banded, Banding.Off).count()
     assert(uncapped == 44850L) // C(300,2): the quadratic blowup
     // ceil(300/40)=8 sub-buckets of ~37 rows: Σ C(n_s,2) ≈ 5600, and
     // even with md5 imbalance it must stay an order below quadratic

@@ -165,6 +165,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: capped bandedPairs never invents pairs and covers every sub-bucket pair") {
+    import graft.dedup.{Banding, Dedup}
     val bandedGen: Gen[Seq[(Long, Int, Long)]] = for {
       n <- Gen.choose(5, 40)
       rows <- Gen.listOfN(n, for {
@@ -173,12 +174,16 @@ class PropertySpec extends SparkSpec {
         bk <- Gen.choose(0L, 1L)
       } yield (id, b, bk))
     } yield rows.distinct
-    forAll(bandedGen, Gen.choose(2, 6)) { (rows, cap) =>
+    // a coin per id: the ids that arrive as the delta
+    val deltaGen: Gen[Set[Long]] = Gen.listOfN(31, Gen.oneOf(true, false))
+      .map(_.zipWithIndex.collect { case (true, id) => id.toLong }.toSet)
+    def collectPairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    forAll(bandedGen, Gen.choose(2, 6), deltaGen) { (rows, cap, deltaIds) =>
       val banded = rows.toDF("id", "band", "bucket")
-      def pairs(c: Int) = graft.dedup.Dedup.bandedPairs(banded, c)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val capped = pairs(cap)
-      val uncapped = pairs(0)
+      def pairs(g: Banding.Guard) = collectPairs(Banding.selfPairs(banded, g))
+      val capped = pairs(Banding.guard(cap))
+      val uncapped = pairs(Banding.Off)
       // soundness: salting can only DROP candidate pairs, never add
       assert(capped.subsetOf(uncapped),
         s"invented pairs: ${capped -- uncapped} (cap=$cap rows=$rows)")
@@ -191,6 +196,19 @@ class PropertySpec extends SparkSpec {
       } yield (a._1, b._1)).toSet
       assert(smallPairs.subsetOf(capped),
         s"dropped small-bucket pairs: ${smallPairs -- capped}")
+      // split census = union census: probing store ∪ delta with the
+      // delta finds exactly the delta-touching self-join pairs
+      val (d, st) = rows.partition(r => deltaIds(r._1))
+      for (salt <- Seq(Dedup.BucketSalt.XxHash, Dedup.BucketSalt.Md5("prop"))) {
+        val guard = Banding.Salt(cap, salt)
+        val probed = collectPairs(Banding.probePairs(
+          st.toDF("id", "band", "bucket"), d.toDF("id", "band", "bucket"), guard))
+        val touching = pairs(guard).filter { case (a, b) =>
+          deltaIds(a) || deltaIds(b) }
+        assert(probed == touching, s"probe vs self-join under $salt " +
+          s"(cap=$cap delta=$deltaIds rows=$rows): " +
+          s"only probed ${probed -- touching}, only self ${touching -- probed}")
+      }
     }
   }
 
