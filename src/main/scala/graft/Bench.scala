@@ -97,6 +97,20 @@ object Bench {
                                      max: Double, min: Double): Boolean =
     disp > 0.35 || max > 2.5 * med || min <= 0.5 * med
 
+  /** The queries a run times, in the order it times them: name order,
+    * restricted to the comma-separated `only` list when one is given
+    * (an unknown name fails before any query runs). bench_full records
+    * it as `order`: a query's min depends on the query that ran before
+    * it in the same JVM, so two mins compare only with their
+    * neighbours alike. */
+  private[graft] def runOrder(registered: collection.Set[String],
+                              only: Option[String]): Seq[String] = {
+    val want = only.map(_.split(",").toSet)
+    want.foreach(o => require(o.subsetOf(registered),
+      s"unknown queries: ${(o -- registered).mkString(",")}"))
+    registered.toSeq.sorted.filter(name => want.forall(_(name)))
+  }
+
   private def r3(x: Double): Double = math.rint(x * 1000) / 1000
 
   /** One query's per-span table for bench_full, by span name: self
@@ -190,11 +204,8 @@ object Bench {
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALING_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.local(cpus)
-    val only = args.headOption.map(_.split(",").toSet)
-    only.foreach(o => require(o.subsetOf(SparkEntry.queries.keySet),
-      s"unknown queries: ${(o -- SparkEntry.queries.keySet).mkString(",")}"))
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_(name)) }
+    val order = runOrder(SparkEntry.queries.keySet, args.headOption)
+    val queries = order.map(name => name -> SparkEntry.queries(name))
     // warm-up: JIT/codegen + parquet footer caches, so the first timed
     // query isn't charged session startup
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -319,7 +330,7 @@ object Bench {
     val cold = r3(results.collect { case r if r.ok => r.cold }.sum)
     val nQueries = results.size
     val dr = math.rint(dataRatio * 100) / 100
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","n":$SteadyN,"n_queries":$nQueries,"queries":$qs,"dispersion":$disp,"max":$maxJson,"min":$minJson,"remeasured_min":$remeasuredJson,"failed":$failed,"cold_value":$cold,"scaling":$scalingJson,"scaling_flags":$flagsJson,"scaling_failed":$scalingFailedJson,"data_ratio":$dr,"cpus":"$cpus","sf":"$sfDir","spans":$spansJson}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","n":$SteadyN,"n_queries":$nQueries,"order":${jsonNames(order)},"queries":$qs,"dispersion":$disp,"max":$maxJson,"min":$minJson,"remeasured_min":$remeasuredJson,"failed":$failed,"cold_value":$cold,"scaling":$scalingJson,"scaling_flags":$flagsJson,"scaling_failed":$scalingFailedJson,"data_ratio":$dr,"cpus":"$cpus","sf":"$sfDir","spans":$spansJson}"""
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath), full + "\n")
     // ... and a DURABLE per-configuration copy: each run used to

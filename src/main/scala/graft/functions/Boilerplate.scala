@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, lower}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -172,6 +173,19 @@ object Boilerplate {
   def clean(text: Column): Column =
     org.apache.spark.sql.GraftSqlShims.column(
       BoilerplateClean(org.apache.spark.sql.GraftSqlShims.expression(text)))
+
+  /** C4's page-level containment gates (Raffel et al. 2020 §2.2): the
+    * page contains neither `lorem ipsum` (case-insensitive) nor a
+    * curly brace `{`. */
+  def pageGate(text: Column): Column =
+    !lower(text).contains("lorem ipsum") && !text.contains("{")
+
+  /** The crawl rule clean: `textCol` rewritten to its t26 [[clean]]
+    * article, then the [[pageGate]] on the rewritten text. Map-only;
+    * the text never shuffles. */
+  def ruleClean(docs: DataFrame, textCol: String): DataFrame =
+    docs.withColumn(textCol, clean(col(textCol)).getField("clean"))
+      .filter(pageGate(col(textCol)))
 
   /** Column form of [[JustextClean]]. */
   def justext(text: Column, cfg: JustextConfig): Column =

@@ -1191,8 +1191,7 @@ object TextFns {
         !lower(t).contains("javascript")
     }
     val kept = filter(lines, keepLine)
-    val pageKept = (size(kept) >= 5) &&
-      !lower(text).contains("lorem ipsum") && !text.contains("{")
+    val pageKept = (size(kept) >= 5) && Boilerplate.pageGate(text)
     struct(
       array_join(transform(kept, l => trim(l)), "\n").as("clean"),
       size(kept).cast("long").as("n_kept"),

@@ -3708,7 +3708,9 @@ object TextQueries {
     * integer-mean score gate (p3's threshold, computed on the store —
     * a build artifact, so the gate does not drift as deltas arrive).
     *
-    * REFRESH (the delta path — store text is never re-read):
+    * REFRESH (the delta path — store text is never re-read; steps
+    * (1)–(4) are [[graft.dedup.Refresh]], which the streamed refresh
+    * runs too):
     * (1) rule clean: t26's boilerplate line gates REWRITE each delta
     *     doc + c4's page-level containment gates (lorem-ipsum /
     *     curly-brace). The full c4 LINE rules assume multi-line crawl
@@ -3772,27 +3774,16 @@ object TextQueries {
         dim = 64, iters = 4)
       val mu = storeScored.agg(expr("sum(score_micro) div count(1)"))
         .head.getLong(0)
-      // ---- REFRESH: rule clean (t26 rebuild + c4 page gates)
-      val cleaned = graft.Materialize.reuse(delta
-        .withColumn("text",
-          graft.functions.Boilerplate.clean(col("text")).getField("clean"))
-        .filter(!lower(col("text")).contains("lorem ipsum") &&
-          !col("text").contains("{")))
-      // frozen-classifier gate at the frozen store-mean threshold
-      val gated = cleaned.join(
-        graft.functions.QualityClassifier.scoreWith(
-          cleaned, "doc_id", "text", w, dim = 64)
-          .filter(col("score_micro") >= mu).select("doc_id"),
-        Seq("doc_id"))
-      // exact + MinHash incremental dedup, committed under the lease
-      val surv = snap.ingestDelta(gated.select("doc_id", "lang", "text"),
-        "doc_id", "text", keepCols = Seq("lang", "text"), commit = true)
-      // containment probe against the persisted sketch artifacts,
-      // committed; flagged docs are excluded at release
-      val contained = graft.Materialize.truncate(
-        skst.ingestDelta(surv.select("doc_id", "text"), "doc_id", "text",
-            commit = true)
-          .select(col("id_b").as("doc_id")).distinct())
+      // ---- REFRESH: the shared step — rule clean + the frozen
+      // classifier gate at the store-mean threshold, then the committed
+      // snapshot and sketch ingests
+      val gated = graft.dedup.Refresh.gate(delta, "doc_id", "text", w, mu)
+      val pairs = graft.dedup.Refresh.commit(gated, snap, skst,
+        "doc_id", "text", keepCols = Seq("lang", "text")).pairs
+      // containment-flagged docs are excluded at release. The pairs
+      // are already truncated and a sliver: on one partition the
+      // distinct plans with no shuffle, so no second eager step
+      val contained = pairs.select(col("id_b").as("doc_id")).coalesce(1).distinct()
       val contFlag = broadcast(contained.withColumn("__c", lit(1L)))
       val released = graft.Materialize.reuse(
         snap.corpus().select("doc_id", "lang", "text")

@@ -69,14 +69,10 @@ object WetQueries {
         .filter(col("warc_type") === "conversion")
         .select(regexp_extract(col("target_uri"), "doc/(\\d+)$", 1)
           .cast("long").as("doc_id"), col("text"))
-      parsed
-        .withColumn("clean",
-          graft.functions.Boilerplate.clean(col("text")).getField("clean"))
-        .filter(!lower(col("clean")).contains("lorem ipsum") &&
-          !col("clean").contains("{"))
+      graft.functions.Boilerplate.ruleClean(parsed, "text")
         .select(col("doc_id"),
-          length(col("clean")).cast("long").as("n_clean_chars"),
-          md5(col("clean")).as("clean_fp"))
+          length(col("text")).cast("long").as("n_clean_chars"),
+          md5(col("text")).as("clean_fp"))
     },
     Some("WITH " + TextQueries.t26CleanCtes("documents") + """,
       cl AS (SELECT doc_id,
@@ -351,8 +347,7 @@ object WetQueries {
         .withColumn("clean", graft.functions.Boilerplate
           .justext(col("text"), TextQueries.justextGateCfg)
           .getField("clean"))
-        .filter(!lower(col("clean")).contains("lorem ipsum") &&
-          !col("clean").contains("{"))
+        .filter(graft.functions.Boilerplate.pageGate(col("clean")))
         .select(regexp_extract(col("target_uri"), "doc/(\\d+)", 1)
           .cast("long").as("doc_id"),
           graft.functions.UrlFns.hostOf(col("target_uri")).as("host"),

@@ -101,6 +101,12 @@ object Similarity {
       h.toDouble / 1.152921504606846976e18 * 2.0 - 1.0
     }
 
+  /** The RHP signature kernel the LSH paths band on: under the
+    * caller's `planes` when given, else the seeded default planes. */
+  private def rhpSig(v: Column, planes: Option[Array[Double]],
+                     nbits: Int, dim: Int): Column =
+    planes.fold(rhpSignature(v, dim, nbits))(rhpSignatureWith(v, _, nbits, dim))
+
   /** LSH-bucketed approximate neighbor pairs: rows sharing a signature
     * band are candidates, verified with exact cosine ≥ `threshold`.
     * The scale path for all-pairs similarity (near-dup by embedding).
@@ -116,14 +122,10 @@ object Similarity {
     val rows = nbits / bands
     val vecs = df.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
-    val sigCol = planes match {
-      case Some(pl) => rhpSignatureWith(col("v"), pl, nbits, dim)
-      case None     => rhpSignature(col("v"), dim, nbits)
-    }
     // shuffle only (id, band, bucket) — vectors re-attach after the
     // candidate pairs are deduplicated
     val banded = graft.Materialize.reuse( // tiny; feeds both join sides
-      Banding.rhpBanded(vecs, "id", sigCol, bands, rows))
+      Banding.rhpBanded(vecs, "id", rhpSig(col("v"), planes, nbits, dim), bands, rows))
     // flooded-bucket salting shared with every LSH family
     Banding.attach(Banding.selfPairs(banded, Banding.guard(bucketCap)),
       vecs, "v")
@@ -154,17 +156,15 @@ object Similarity {
              vecCol: String, k: Int, dim: Int, nbits: Int = 60,
              bands: Int = 6, planes: Option[Array[Double]] = None): DataFrame = {
     val rows = nbits / bands
-    def sigOf(v: Column) = planes match {
-      case Some(pl) => rhpSignatureWith(v, pl, nbits, dim)
-      case None     => rhpSignature(v, dim, nbits)
-    }
     val qv = broadcast(queries.select(col(idCol).as("query_id"),
       col(vecCol).cast("array<double>").as("qv")))
     val cv = graft.Materialize.reuse(corpus.select( // banding + re-attach both read it
       col(idCol).as("neighbor_id"),
       col(vecCol).cast("array<double>").as("cv")))
-    val cands = Banding.rhpBanded(cv, "neighbor_id", sigOf(col("cv")), bands, rows)
-      .join(broadcast(Banding.rhpBanded(qv, "query_id", sigOf(col("qv")), bands, rows)),
+    val cands = Banding.rhpBanded(cv, "neighbor_id",
+        rhpSig(col("cv"), planes, nbits, dim), bands, rows)
+      .join(broadcast(Banding.rhpBanded(qv, "query_id",
+          rhpSig(col("qv"), planes, nbits, dim), bands, rows)),
         Banding.Keys)
       .select("query_id", "neighbor_id").distinct()
     val scored = cands

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.stats.WelfordState
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming forms of the engine's stateful ops.
   *
@@ -14,6 +14,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * watermarked windowed aggregations — so a sweep whose points arrive
   * incrementally (a harvest fed by external workers) can be monitored
   * with identical semantics.
+  *
+  * Every `*Sink` runs on one micro-batch shell (`eachBatch`), and each
+  * batch body runs in its own [[graft.Materialize.inScope]]: the caches
+  * and local checkpoints a batch registers are drained when that batch
+  * ends, so a long-lived stream holds none of them between batches,
+  * and a runner's root-scope `releaseAll()` cannot drop them while a
+  * batch still reads them. Frozen artifacts built before the stream
+  * starts (classifier weights, LM counts, language profiles) live
+  * outside every batch scope and survive across batches.
   */
 object Streaming {
 
@@ -265,19 +274,13 @@ object Streaming {
                            idCol: String, textCol: String,
                            keepCols: Seq[String], checkpointDir: String,
                            leaseRetries: Int = 3, retryBaseMs: Long = 500)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          withLeaseRetry(leaseRetries, retryBaseMs) {
-            snap.ingestDelta(batch.toDF(), idCol, textCol, keepCols,
-              commit = true, idempotentCommit = true)
-          }
-        }
+  : StreamingQuery =
+    eachBatch(docs, checkpointDir) { (batch, _) =>
+      withLeaseRetry(leaseRetries, retryBaseMs) {
+        snap.ingestDelta(batch, idCol, textCol, keepCols,
+          commit = true, idempotentCommit = true)
       }
-      .start()
+    }
 
   /** Streamed classifier scoring — the production crawl-scoring shape
     * (t20 trains OFFLINE; the stream only scores under the frozen
@@ -293,17 +296,12 @@ object Streaming {
   def classifierScoreSink(docs: DataFrame, idCol: String, textCol: String,
                           weights: Array[Long], dim: Int, salt: String,
                           outPath: String, checkpointDir: String)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.functions.QualityClassifier
-            .scoreWith(batch.toDF(), idCol, textCol, weights, dim, salt)
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      }
-      .start()
+  : StreamingQuery =
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      graft.functions.QualityClassifier
+        .scoreWith(batch, idCol, textCol, weights, dim, salt)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+    }
 
   /** Streamed LM scoring (round 13) — the KenLM deployment shape for
     * the stupid-backoff family at any order: the
@@ -321,23 +319,12 @@ object Streaming {
   def lmScoreSink(docs: DataFrame, idCol: String, textCol: String,
                   counts: graft.functions.TextFns.SbCounts,
                   outPath: String, checkpointDir: String)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // sbScoreWith caches the batch's gram stream; scope each
-        // micro-batch so the cache is DRAINED when the batch ends — a
-        // long-lived stream must not accumulate one persist per batch
-        // (review r13). The frozen `counts` caches live OUTSIDE this
-        // scope (registered at build time) and survive across batches.
-        if (!batch.isEmpty) graft.Materialize.inScope {
-          graft.functions.TextFns
-            .sbScoreWith(batch.toDF(), idCol, textCol, counts)
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        }
-      }
-      .start()
+  : StreamingQuery =
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      graft.functions.TextFns
+        .sbScoreWith(batch, idCol, textCol, counts)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+    }
 
   /** Streamed language-ID scoring under a FROZEN Cavnar-Trenkle
     * profile artifact (the `(lang, gram, rank)` parquet table
@@ -355,17 +342,12 @@ object Streaming {
   def langIdScoreSink(docs: DataFrame, idCol: String, textCol: String,
                       profiles: DataFrame, outPath: String,
                       checkpointDir: String)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.functions.LangIdNgram
-            .predictWith(batch.toDF(), idCol, textCol, profiles)
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      }
-      .start()
+  : StreamingQuery =
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      graft.functions.LangIdNgram
+        .predictWith(batch, idCol, textCol, profiles)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+    }
 
   /** Streamed CONTAINMENT-SKETCH ingest — the d14 refresh as a
     * continuous stream (judge r14 #4: the sketch family was the only
@@ -389,23 +371,17 @@ object Streaming {
                        idCol: String, textCol: String, outPath: String,
                        checkpointDir: String,
                        leaseRetries: Int = 3, retryBaseMs: Long = 500)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          withLeaseRetry(leaseRetries, retryBaseMs) {
-            // ingestDelta(commit) truncates the pair plan BEFORE the
-            // appends, so writing it afterwards reads frozen blocks,
-            // not the just-updated tables
-            store.ingestDelta(batch.toDF(), idCol, textCol,
-                commit = true, idempotentCommit = true)
-              .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-          }
-        }
+  : StreamingQuery =
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      withLeaseRetry(leaseRetries, retryBaseMs) {
+        // ingestDelta(commit) truncates the pair plan BEFORE the
+        // appends, so writing it afterwards reads frozen blocks,
+        // not the just-updated tables
+        store.ingestDelta(batch, idCol, textCol,
+            commit = true, idempotentCommit = true)
+          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       }
-      .start()
+    }
 
   /** Streamed ANN INGEST (n13) — the last offline/online gap in the
     * similarity family: each micro-batch of arriving vectors runs
@@ -434,27 +410,20 @@ object Streaming {
                     indexPath: String, checkpointDir: String,
                     refitAt: Double = 0.5,
                     leaseRetries: Int = 3, retryBaseMs: Long = 500)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          withLeaseRetry(leaseRetries, retryBaseMs) {
-            val r = graft.similarity.Similarity.PersistedIndex.append(
-              batch.toDF(), idCol, vecCol, indexPath, refitAt,
-              skipTombstoned = true)
-            val log = org.slf4j.LoggerFactory.getLogger("graft.streaming")
-            if (r.nSkippedTombstoned > 0)
-              log.warn(s"annIngestSink batch $batchId: skipped " +
-                s"${r.nSkippedTombstoned} tombstoned id(s) frozen until refit")
-            if (r.needsRefit)
-              log.warn(s"annIngestSink batch $batchId: drift ${r.drift} " +
-                s">= $refitAt — schedule PersistedIndex.refit")
-          }
-        }
+  : StreamingQuery =
+    eachBatch(vecs, checkpointDir) { (batch, batchId) =>
+      withLeaseRetry(leaseRetries, retryBaseMs) {
+        val r = graft.similarity.Similarity.PersistedIndex.append(
+          batch, idCol, vecCol, indexPath, refitAt, skipTombstoned = true)
+        val log = org.slf4j.LoggerFactory.getLogger("graft.streaming")
+        if (r.nSkippedTombstoned > 0)
+          log.warn(s"annIngestSink batch $batchId: skipped " +
+            s"${r.nSkippedTombstoned} tombstoned id(s) frozen until refit")
+        if (r.needsRefit)
+          log.warn(s"annIngestSink batch $batchId: drift ${r.drift} " +
+            s">= $refitAt — schedule PersistedIndex.refit")
       }
-      .start()
+    }
 
   /** Incremental per-key Welford statistics with explicit state —
     * `mapGroupsWithState` carrying the same `WelfordState` the batch
@@ -474,6 +443,19 @@ object Streaming {
           RunningRow(key, next.n, next.mean, next.std, next.stderr)
       }
   }
+
+  /** The one micro-batch shell every sink runs on: Append output mode,
+    * the sink's checkpoint, empty batches skipped, and `body` run on
+    * each batch inside its own [[graft.Materialize.inScope]]. */
+  private def eachBatch(src: DataFrame, checkpointDir: String)
+                       (body: (DataFrame, Long) => Unit): StreamingQuery =
+    src.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        if (!batch.isEmpty) graft.Materialize.inScope(body(batch.toDF(), batchId))
+      }
+      .start()
 
   /** The sinks' lease backoff: run `body`, and when a concurrent
     * writer holds the store lease retry it up to `leaseRetries` times,
@@ -524,17 +506,10 @@ object Streaming {
                   checkpointDir: String,
                   mode: graft.store.Merge.Mode = graft.store.Merge.NoConflicts,
                   leaseRetries: Int = 3, retryBaseMs: Long = 500)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    results.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val df = batch.toDF()
-          withLeaseRetry(leaseRetries, retryBaseMs)(store.mergeIn(df, mode))
-        }
-      }
-      .start()
+  : StreamingQuery =
+    eachBatch(results, checkpointDir) { (batch, _) =>
+      withLeaseRetry(leaseRetries, retryBaseMs)(store.mergeIn(batch, mode))
+    }
 
   /** The `binaryFile` source's fixed schema — streaming file sources
     * require it EXPLICITLY (`readStream.format("binaryFile")
@@ -593,14 +568,14 @@ object Streaming {
   }
 
   /** Streamed MONTHLY REFRESH (judge r15 #5) — p4's whole delta path
-    * as ONE `foreachBatch` chain: the t26 rule rebuild + page gates
-    * (stateless column kernels), the FROZEN-classifier gate at the
-    * frozen build-time threshold ([[graft.functions.QualityClassifier.scoreWith]]
-    * under the build weights — the deployment path), d11's leased
-    * snapshot ingest, then the committed survivors probed into and
-    * committed under the containment [[graft.dedup.SketchStore]];
-    * each batch's delta-touching containment pairs land in an
-    * exactly-once `batch=<id>` overwrite partition. Release views
+    * per micro-batch, through the same [[graft.dedup.Refresh]] step
+    * batch p4 runs: [[graft.dedup.Refresh.gate]] (rule clean, then the
+    * frozen-classifier gate at the frozen build-time threshold), then
+    * [[graft.dedup.Refresh.commit]] (d11's leased snapshot ingest, then
+    * the committed survivors probed into and committed under the
+    * containment [[graft.dedup.SketchStore]]); each batch's
+    * delta-touching containment pairs land in an exactly-once
+    * `batch=<id>` overwrite partition. Release views
     * stay BATCH reads of the final store state — p4's release chain
     * is a view over the snapshot, not stream state — so "streamed
     * refresh ≡ batch refresh" means the stores converge to the same
@@ -611,9 +586,9 @@ object Streaming {
     * ANYWHERE between the two commits replays into per-table id
     * anti-joins that land exactly the missed rows), and the pairs
     * partition overwrites. The spec injects a crash between the two
-    * ingests via `faultPoint` (a test-only hook, default no-op) and
-    * restarts. Lease contention rides [[harvestSink]]'s bounded
-    * backoff.
+    * ingests via `faultPoint` (a test-only hook, default no-op; it is
+    * the step's `between`) and restarts. Lease contention rides
+    * [[harvestSink]]'s bounded backoff, around the commit only.
     */
   def refreshSink(docs: DataFrame, snap: graft.dedup.DedupSnapshot,
                   skst: graft.dedup.SketchStore,
@@ -623,37 +598,16 @@ object Streaming {
                   dim: Int = 64,
                   leaseRetries: Int = 3, retryBaseMs: Long = 500,
                   faultPoint: () => Unit = () => ())
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) graft.Materialize.inScope {
-          // rule clean: t26 rebuild + the page-level containment gates
-          val cleaned = graft.Materialize.reuse(batch.toDF()
-            .withColumn(textCol, graft.functions.Boilerplate
-              .clean(col(textCol)).getField("clean"))
-            .filter(!lower(col(textCol)).contains("lorem ipsum") &&
-              !col(textCol).contains("{")))
-          // frozen-classifier gate at the frozen threshold
-          val gated = cleaned.join(
-            graft.functions.QualityClassifier
-              .scoreWith(cleaned, idCol, textCol, weights, dim)
-              .filter(col("score_micro") >= threshold).select(idCol),
-            Seq(idCol))
-          withLeaseRetry(leaseRetries, retryBaseMs) {
-            val surv = snap.ingestDelta(
-              gated.select(idCol, (keepCols :+ textCol).distinct: _*),
-              idCol, textCol, keepCols = keepCols,
-              commit = true, idempotentCommit = true)
-            faultPoint() // spec-injected crash between the commits
-            skst.ingestDelta(surv.select(col(idCol), col(textCol)),
-                idCol, textCol, commit = true, idempotentCommit = true)
-              .write.mode("overwrite").parquet(s"$pairsOut/batch=$batchId")
-          }
-        }
+  : StreamingQuery =
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val gated = graft.dedup.Refresh.gate(batch, idCol, textCol,
+        weights, threshold, dim)
+      withLeaseRetry(leaseRetries, retryBaseMs) {
+        graft.dedup.Refresh.commit(gated, snap, skst, idCol, textCol,
+            keepCols, idempotentCommit = true, between = faultPoint)
+          .pairs.write.mode("overwrite").parquet(s"$pairsOut/batch=$batchId")
       }
-      .start()
+    }
 }
 
 final case class RunningRow(key: String, n: Long, mean: Double,

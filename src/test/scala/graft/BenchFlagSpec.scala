@@ -79,4 +79,16 @@ class BenchFlagSpec extends AnyFunSuite {
     // every pass failed: no entry, not a -1.0 sentinel read as a time
     assert(Bench.minOfSuccessful(Seq((0.2, false), (0.3, false))).isEmpty)
   }
+
+  test("run order: name order over the list given; an unknown name fails first") {
+    // bench_full's `order` is this list: the queries as they were timed
+    val reg = Set("p4_monthly_refresh", "cp9_takedown_audit", "d11_incremental_dedup")
+    assert(Bench.runOrder(reg, None) ==
+      Seq("cp9_takedown_audit", "d11_incremental_dedup", "p4_monthly_refresh"))
+    assert(Bench.runOrder(reg, Some("p4_monthly_refresh,cp9_takedown_audit")) ==
+      Seq("cp9_takedown_audit", "p4_monthly_refresh"))
+    val e = intercept[IllegalArgumentException](
+      Bench.runOrder(reg, Some("p4_monthly_refresh,no_such_query")))
+    assert(e.getMessage.contains("no_such_query"))
+  }
 }

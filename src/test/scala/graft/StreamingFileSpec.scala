@@ -16,6 +16,11 @@ class StreamingFileSpec extends SparkSpec {
   private def tmp(): String =
     Files.createTempDirectory("graft-stream").toString
 
+  /** The stages this thread's scope tracks and the RDDs the context
+    * keeps persisted: a sink must leave both as it found them. */
+  private def pinned(): (Int, Set[Int]) =
+    (graft.Materialize.trackedCount, spark.sparkContext.getPersistentRDDs.keySet.toSet)
+
   test("file source -> transform -> parquet sink is exactly-once across restarts") {
     val in = tmp(); val out = tmp(); val ckpt = tmp()
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -223,11 +228,13 @@ class StreamingFileSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, text STRING, lang STRING")
     def runOnce(): Unit = {
+      val before = pinned()
       val q = Streaming.incrementalDedupSink(
         spark.readStream.schema(schema).parquet(in),
         snap, "doc_id", "text", Seq("lang"), ckpt)
       q.processAllAvailable()
       q.stop()
+      assert(pinned() == before, "each batch's scope must drain when the batch ends")
     }
     docs.filter(col("doc_id") >= 200 && col("doc_id") < 350)
       .coalesce(1).write.mode("append").parquet(in)
@@ -261,11 +268,13 @@ class StreamingFileSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, text STRING")
     def runOnce(): Unit = {
+      val before = pinned()
       val q = Streaming.sketchIngestSink(
         spark.readStream.schema(schema).parquet(in),
         ss, "doc_id", "text", out, ckpt)
       q.processAllAvailable()
       q.stop()
+      assert(pinned() == before, "each batch's scope must drain when the batch ends")
     }
     docs.filter(col("doc_id") >= 200 && col("doc_id") < 350)
       .coalesce(1).write.mode("append").parquet(in)
